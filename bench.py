@@ -340,7 +340,7 @@ def run_extraction(spark, pages_path: str) -> dict:
     t_eval = time.monotonic() - t2
 
     n_pages = out.rasterized.count()
-    out.enriched.unpersist()
+    out.unpersist()
     out.matched.unpersist()
     return {
         "t_doc_text": t_doc_text,

@@ -233,8 +233,8 @@ def rasterize_detect_enrich(planned: DataFrame,
     StubDetectorBackend the detections are read straight off the parsed
     page dict — value-identical to ``detect_batch(json.dumps(page))``
     because the stub's parse of the serialized page is the page (pinned
-    by tests/test_pipeline.py's fused-vs-unfused parity and the
-    pipeline oracle queries); any other backend still receives
+    by tests/test_pipeline.py's parity against the two-stage operators
+    and the pipeline oracle queries); any other backend still receives
     serialized page payloads through its documented ``detect_batch``
     contract, batched per Arrow batch with the same whole-batch-then-
     per-page fallback as detect_enrich_layout.
@@ -242,8 +242,13 @@ def rasterize_detect_enrich(planned: DataFrame,
     Emits RAW names/values plus ``reading_order_rank``/``text`` and the
     quarantine columns ``stage``/``error`` ('rasterize' for chunk-decode
     and render failures, 'detect' for inference/enrichment failures —
-    the same split the two-stage chain produced). Run
-    normalize_detections after dropping ``stage``."""
+    the same split the two-stage chain produced). Every successfully
+    rendered page also yields one page-tally row (``stage='page'``,
+    ``det_idx=-1``, ``error`` null), emitted before the detect leg so a
+    page that fails in detect still counts as rendered: the per-document
+    page counts come from these rows, not from a second render pass.
+    Detection rows carry ``stage`` null; normalize_detections passes
+    ``stage`` and ``error`` through."""
     from ..algorithms import clip_text, xy_cut_order
     from .rasterize import _render_page
 
@@ -263,11 +268,12 @@ def rasterize_detect_enrich(planned: DataFrame,
                 "error": [],
             }
 
-            def emit_error(url, page_no, w, h, stage, exc):
-                # C6 error containment: a bad chunk/page becomes a
-                # quarantine row, never a failed job
+            def emit_page_row(url, page_no, w, h, stage, error):
+                # detection-less row: a quarantine row (error set) or a
+                # page tally (stage='page', error null)
+                page_no = int(page_no)  # before any append: no ragged cols
                 cols["url"].append(url)
-                cols["page_no"].append(int(page_no))
+                cols["page_no"].append(page_no)
                 cols["width"].append(w)
                 cols["height"].append(h)
                 cols["det_idx"].append(-1)
@@ -279,10 +285,17 @@ def rasterize_detect_enrich(planned: DataFrame,
                 cols["reading_order_rank"].append(-1)
                 cols["text"].append(None)
                 cols["stage"].append(stage)
-                cols["error"].append(f"{type(exc).__name__}: {exc}")
+                cols["error"].append(error)
+
+            def emit_error(url, page_no, w, h, stage, exc):
+                # C6 error containment: a bad chunk/page becomes a
+                # quarantine row, never a failed job
+                emit_page_row(url, page_no, w, h, stage,
+                              f"{type(exc).__name__}: {exc}")
 
             # rasterize leg: decode chunks, render pages (error rows keep
-            # the two-stage chain's 'rasterize' stage label)
+            # the two-stage chain's 'rasterize' stage label; each rendered
+            # page emits its tally row here, before detection can fail)
             pages: list[tuple] = []   # (url, page dict) for rendered pages
             for url, payload, start, end in zip(
                 pdf["url"], pdf["html"], pdf["page_start"], pdf["page_end"]
@@ -297,6 +310,8 @@ def rasterize_detect_enrich(planned: DataFrame,
                 for pg in in_range:
                     try:
                         _render_page(pg)
+                        emit_page_row(url, pg["page_no"], pg["width"],
+                                      pg["height"], "page", None)
                         pages.append((url, pg))
                     except Exception as exc:  # noqa: BLE001
                         emit_error(url, pg.get("page_no", int(start)), 0, 0,
@@ -364,9 +379,11 @@ def normalize_detections(raw: DataFrame) -> DataFrame:
     layout_detector.py:143-146 (``name.replace('_','-').title().replace(' ','-')``
     == translate to spaces -> initcap -> translate back), confidence rounded
     to 4 dp and bbox to 2 dp (layout_detector.py:46-58). Pure column exprs —
-    whole-stage codegen, no Python. Passes through enrichment columns
-    (reading_order_rank, text) when the fused detect path produced them."""
-    extra = [c for c in ("reading_order_rank", "text", "error") if c in raw.columns]
+    whole-stage codegen, no Python. Passes through the enrichment and
+    quarantine columns (reading_order_rank, text, stage, error) when the
+    fused detect path produced them."""
+    extra = [c for c in ("reading_order_rank", "text", "stage", "error")
+             if c in raw.columns]
     return raw.select(
         "url",
         "page_no",

@@ -205,30 +205,57 @@ def _kernel_cache_dir() -> str:
     loading a shared object from a predictable world-writable path would
     let any local user on a shared host plant code into the pipeline's
     workers, so the dir must be ours and ours alone (raises into the
-    caller's fallback otherwise)."""
+    caller's fallback otherwise). ``lstat``, not ``stat``: a symlink
+    planted at the predictable path would otherwise redirect where the
+    sources and shared objects are written and loaded from."""
     import os
     import stat
     import tempfile
 
     d = os.path.join(tempfile.gettempdir(), f"plp_kernel_{os.getuid()}")
     os.makedirs(d, mode=0o700, exist_ok=True)
-    st = os.stat(d)
-    if st.st_uid != os.getuid() or (st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)):
-        raise PermissionError(f"kernel cache dir {d!r} is not exclusively "
-                              "owned by this user")
+    st = os.lstat(d)
+    if (not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid()
+            or st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)):
+        raise PermissionError(f"kernel cache dir {d!r} is not a directory "
+                              "exclusively owned by this user")
     return d
+
+
+def _resolved_target(extra: list[str]) -> str:
+    """The target gcc resolves for ``extra`` (the ``-march`` value and
+    every enabled ISA option, from ``-Q --help=target``). Raises when the
+    toolchain is missing or rejects the flags."""
+    import subprocess
+
+    return subprocess.run(
+        ["gcc", *extra, "-Q", "--help=target"],
+        capture_output=True, text=True, check=True,
+    ).stdout
+
+
+def _kernel_so_path(cache: str, variant: str, extra: list[str]) -> str:
+    """Cache file of one build variant. The tag covers the source, the
+    flags, the machine and the resolved target, so a temp root shared
+    across hosts never hands a worker an object built for another CPU
+    (which would die with SIGILL, past the numpy fallback)."""
+    import hashlib
+    import os
+    import platform
+
+    tag = hashlib.sha256("|".join([
+        _KERNEL_SRC, *_KERNEL_BASE_FLAGS, *extra, platform.machine(),
+        _resolved_target(extra),
+    ]).encode()).hexdigest()[:12]
+    return os.path.join(cache, f"plp_render_{tag}_{variant}.so")
 
 
 def _compile_kernel():
     import ctypes
-    import hashlib
     import os
     import subprocess
 
     cache = _kernel_cache_dir()
-    tag = hashlib.sha256(
-        (_KERNEL_SRC + "|".join(_KERNEL_BASE_FLAGS)).encode()
-    ).hexdigest()[:12]
     path = None
     # -march=native helps (vector sqrt width) and cannot change results
     # (-ffp-contract=off; sqrt/add/mul are IEEE-exact at any width);
@@ -236,7 +263,10 @@ def _compile_kernel():
     # variant gets its own cache file so a portable fallback on one host
     # can never shadow (or be shadowed by) a native build.
     for variant, extra in (("native", ["-march=native"]), ("portable", [])):
-        cand = os.path.join(cache, f"plp_render_{tag}_{variant}.so")
+        try:
+            cand = _kernel_so_path(cache, variant, extra)
+        except (OSError, subprocess.CalledProcessError):
+            continue
         if os.path.exists(cand):
             path = cand
             break

@@ -207,10 +207,10 @@ def build_training_corpus(
         extracted = run_resumable(catalog, pages, checkpoint_table,
                                   _extract, key="url")
         # the committed table replaces every downstream read of the
-        # extraction lineage — release the enriched cache immediately
+        # extraction lineage — release the pipeline cache immediately
         # instead of pinning executor memory through the curation phase
         for out in outs:
-            out.enriched.unpersist()
+            out.unpersist()
     else:
         out = run_pipeline(pages, **(pipeline_kwargs or {}))
         extracted = out.doc_text

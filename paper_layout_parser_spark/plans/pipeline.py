@@ -1,19 +1,26 @@
 """End-to-end extraction pipeline (SURVEY §3.1 Spark shape):
 
-pages -> plan_splits (skew salting) -> rasterize -> detect (batched UDF)
-      -> normalize (native) -> enrich (clipped text + XY-cut, cogrouped)
+pages -> plan_splits (skew salting)
+      -> rasterize + detect + enrich (ONE batched mapInPandas stage)
+      -> normalize (native)
+      -> { enriched rows || quarantine rows || page tallies }
       -> { stats aggs  ||  caption matching -> extraction }
       -> groupBy(url) doc-text assembly
 
-The intermediate ``enriched`` DataFrame is the hub: stats, matching and
-assembly all branch from it, so callers that need several outputs should
-checkpoint/persist it once (see sources.catalog for the Iceberg/parquet
-stage-checkpoint helper).
+The fused stage is the only render of the default outputs. Its normalized
+output is the hub: detections (``stage`` null) form ``enriched``, failed
+pages (``error`` set) form ``quarantine``, and the one tally row per
+rendered page (``stage='page'``) gives ``doc_stats`` its page counts.
+Stats, matching, assembly and quarantine all branch from it, so callers
+that need several outputs should persist it once (``persist_enriched``)
+and release it with ``PipelineOutputs.unpersist`` (see sources.catalog
+for the Iceberg/parquet stage-checkpoint helper). ``rasterized`` is a
+separate lazy render, read only by crop re-rendering and VLM payloads.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -21,25 +28,31 @@ from pyspark.sql import functions as F
 from ..operators.assembly import assemble_doc_text
 from ..operators.detect import (
     StubDetectorBackend,
-    detect_layout,
     normalize_detections,
     rasterize_detect_enrich,
 )
 from ..operators.matching import match_captions
-from ..operators.page_text import enrich_detections
-from ..operators.rasterize import plan_splits, probe_pages, rasterize_pages
+from ..operators.rasterize import plan_splits, rasterize_pages
 from ..operators.stats import doc_stats
 
 
 @dataclass
 class PipelineOutputs:
-    rasterized: DataFrame     # one row per page
+    rasterized: DataFrame     # one row per page (lazy second render)
     detections: DataFrame     # normalized detections
     enriched: DataFrame       # + reading_order_rank, clipped text
     matched: DataFrame        # extracted items with captions
     doc_text: DataFrame       # url, doc_text (byte-identity surface)
     doc_stats: DataFrame      # per-url totals
-    quarantine: DataFrame | None = None  # failed pages (url, page_no, error)
+    quarantine: DataFrame     # failed pages (url, page_no, stage, error)
+    # the persisted fused-stage output every other frame filters
+    fused: DataFrame | None = field(default=None, repr=False)
+
+    def unpersist(self) -> None:
+        """Release the cached fused-stage output (a no-op when the
+        pipeline ran with ``persist_enriched=False``)."""
+        if self.fused is not None:
+            self.fused.unpersist()
 
 
 def run_pipeline(
@@ -48,56 +61,42 @@ def run_pipeline(
     chunk_pages: int = 16,
     num_partitions: int | None = None,
     persist_enriched: bool = True,
-    fused: bool = True,
 ) -> PipelineOutputs:
-    # persist_enriched: matched / doc_text / stats all branch from
-    # `enriched`; without it each branch re-executes the UDF chain from the
+    planned = plan_splits(pages, chunk_pages=chunk_pages, num_partitions=num_partitions)
+    # rasterize + inference + clipped text + XY-cut in ONE mapInPandas
+    # stage (see rasterize_detect_enrich). Its rows are detections, page
+    # tallies and quarantine rows (C6 error containment: failed pages
+    # become rows, never failed jobs).
+    fused = normalize_detections(rasterize_detect_enrich(planned, backend_factory))
+    # persist_enriched: persists the single fused output — detections,
+    # tallies and quarantine rows — so enriched, matched, doc_text,
+    # doc_stats and quarantine all read the cache and the UDF stage runs
+    # once. Without it each branch re-executes the UDF chain from the
     # scan. On a cluster, replace the persist with a
     # catalog.checkpoint_stage (same cut point, durable + resumable).
-    planned = plan_splits(pages, chunk_pages=chunk_pages, num_partitions=num_partitions)
-    ras_all = rasterize_pages(planned)
-    # C6 error containment: failed pages become quarantine rows at every
-    # stage, never failed jobs (main.py:336-354 per-doc try/except analogue)
-    ras_quarantine = ras_all.where(F.col("error").isNotNull()).select(
-        "url", "page_no", F.lit("rasterize").alias("stage"), "error"
-    )
-    rasterized = ras_all.where(F.col("error").isNull()).drop("error")
-    if fused:
-        # default hot path (r9): rasterize + inference + clipped text +
-        # XY-cut in ONE mapInPandas stage — one Python boundary for the
-        # whole chain instead of two, no page-payload re-serialization
-        # between stages (see rasterize_detect_enrich). `rasterized`
-        # stays the standalone two-stage lineage for the consumers that
-        # need page rows (crop re-render, per-doc page counts) — same
-        # recompute-on-demand behavior as before, the page table was
-        # never persisted here.
-        fused_raw = rasterize_detect_enrich(planned, backend_factory)
-        quarantine = fused_raw.where(F.col("error").isNotNull()).select(
-            "url", "page_no", "stage", "error"
-        )
-        raw = normalize_detections(fused_raw.drop("stage"))
-        enriched = raw.where(F.col("error").isNull()).drop("error")
-        det = enriched.drop("reading_order_rank", "text")
-    else:
-        det = normalize_detections(detect_layout(rasterized, backend_factory))
-        enriched = enrich_detections(det, rasterized)
-        quarantine = ras_quarantine
     if persist_enriched:
-        enriched = enriched.persist()
-    matched = match_captions(enriched)
-    doc_text = assemble_doc_text(enriched)
-    # page counts from the rasterized rows (covers zero-detection pages)
-    # instead of a second decode pass over the raw payloads
-    total_pages = rasterized.groupBy("url").agg(
+        fused = fused.persist()
+    enriched = fused.where(F.col("stage").isNull()).drop("stage", "error")
+    quarantine = fused.where(F.col("error").isNotNull()).select(
+        "url", "page_no", "stage", "error"
+    )
+    # one tally row per rendered page: covers zero-detection pages and
+    # pages that later failed in detect, without a second render pass
+    total_pages = fused.where(F.col("stage") == "page").groupBy("url").agg(
         F.count("*").cast("int").alias("total_pages")
     )
-    stats = doc_stats(enriched, total_pages=total_pages)
+    det = enriched.drop("reading_order_rank", "text")
+    # crop re-rendering and VLM payloads need page rows; nothing else
+    # reads this lineage, so the default outputs never run it
+    rasterized = (rasterize_pages(planned).where(F.col("error").isNull())
+                  .drop("error"))
     return PipelineOutputs(
         rasterized=rasterized,
         detections=det,
         enriched=enriched,
-        matched=matched,
-        doc_text=doc_text,
-        doc_stats=stats,
+        matched=match_captions(enriched),
+        doc_text=assemble_doc_text(enriched),
+        doc_stats=doc_stats(enriched, total_pages=total_pages),
         quarantine=quarantine,
+        fused=fused if persist_enriched else None,
     )

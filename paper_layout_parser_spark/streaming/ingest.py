@@ -111,7 +111,7 @@ def run_incremental_extraction(
         out = run_pipeline(todo, **kwargs)
         return ([(t, getattr(out, attr), page_col)
                  for t, attr, page_col in stage_tables],
-                out.enriched.unpersist)
+                out.unpersist)
 
     process_batch = exactly_once_batch_committer(
         catalog, committed_table, run_stages

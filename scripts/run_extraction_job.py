@@ -82,10 +82,9 @@ def run_job(spark: SparkSession, pages: DataFrame, cat: Catalog,
         # missing from a later table) must not append twice
         fresh = cat.pending_inputs(df, table, key="url")
         cat.checkpoint_stage(fresh, table, page_col=page_col)
-    if out.quarantine is not None:
-        cat.append(cat.pending_inputs(out.quarantine, "quarantine", key="url"),
-                   "quarantine")
-    out.enriched.unpersist()
+    cat.append(cat.pending_inputs(out.quarantine, "quarantine", key="url"),
+               "quarantine")
+    out.unpersist()
     return n_todo
 
 

@@ -107,7 +107,7 @@ def benchdir(spark, tmp_path_factory):
     m_named = matched.withColumn(
         "url", F.concat(F.lit("doc_"), F.regexp_extract("url", r"([0-9]+)$", 1)))
     expect = evaluation_summary(compare_matches(gt_named, m_named)).first().asDict()
-    out.enriched.unpersist()
+    out.unpersist()
     return bench, preds, str(root / "out"), expect
 
 

@@ -348,7 +348,7 @@ class TestStreamingIngest:
         # simulate a run that died after the doc_text checkpoint
         partial = run_pipeline(pages10)
         cat.checkpoint_stage(partial.doc_text, "doc_text", page_col=None)
-        partial.enriched.unpersist()
+        partial.unpersist()
         assert not cat.exists("doc_stats")
 
         n = run_job(spark, pages10, cat)

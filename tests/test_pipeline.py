@@ -2,12 +2,26 @@
 byte-identity of assembled text, stats parity with the Python spec,
 detection parity, skew-plan behavior."""
 
+import json
+import struct
+
 import pytest
 from pyspark.sql import functions as F
 
 from paper_layout_parser_spark import synthdata as sd
 from paper_layout_parser_spark.corpus import build_pages
-from paper_layout_parser_spark.operators.rasterize import plan_splits, probe_pages
+from paper_layout_parser_spark.operators.detect import (
+    DEFAULT_CONF,
+    StubDetectorBackend,
+    detect_layout,
+    normalize_detections,
+)
+from paper_layout_parser_spark.operators.page_text import enrich_detections
+from paper_layout_parser_spark.operators.rasterize import (
+    plan_splits,
+    probe_pages,
+    rasterize_pages,
+)
 from paper_layout_parser_spark.operators.stats import (
     class_stats,
     doc_stats,
@@ -79,6 +93,10 @@ def test_doc_stats_and_summary(corpus):
     summ = summary_report(doc_stats(out.enriched, total_pages=probe_pages(pages))).collect()[0]
     assert summ["total_documents"] == N_DOCS
     assert summ["total_pages"] == sum(sd.n_pages(d) for d in range(N_DOCS))
+    # the pipeline's own doc_stats counts pages from the fused stage's
+    # tally rows and agrees with the header probe
+    assert {r["url"]: r.asDict() for r in out.doc_stats.collect()} == {
+        u: r.asDict() for u, r in stats.items()}
 
 
 def test_class_stats_exact_average(corpus):
@@ -184,16 +202,123 @@ def test_rasterize_page_counts(corpus):
         assert r["count"] == sd.n_pages(doc_id)
 
 
-def test_fused_and_unfused_paths_identical(spark):
+def test_fused_stage_matches_two_stage_operators(spark):
+    """The pipeline's one fused UDF stage against the two-stage operators
+    composed directly as the oracle: rasterize_pages -> detect_layout ->
+    normalize_detections -> enrich_detections."""
     pages = build_pages(spark, SF_SMALL).where(
         F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < 15
     ).persist()
     cols = ["url", "page_no", "det_idx", "class_name", "confidence",
             "x1", "y1", "x2", "y2", "reading_order_rank", "text"]
-    a = run_pipeline(pages, fused=True).enriched.select(cols)
-    b = run_pipeline(pages, fused=False).enriched.select(cols)
+    out = run_pipeline(pages)
+    a = out.enriched.select(cols)
+    rasterized = (rasterize_pages(plan_splits(pages))
+                  .where(F.col("error").isNull()).drop("error"))
+    det = normalize_detections(detect_layout(rasterized))
+    b = enrich_detections(det, rasterized).select(cols)
+    assert a.count() == b.count() > 0
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+    out.unpersist()
+    pages.unpersist()
+
+
+def _doc_pages_df(spark, docs: dict[str, list[dict]]):
+    """pages rows for hand-built documents: url -> list of page dicts in
+    the synthetic PLP1 container (sd.doc_html's layout)."""
+    rows = []
+    for url, pgs in docs.items():
+        body = json.dumps({"v": 1, "pages": pgs}).encode()
+        rows.append((url, sd.HTML_MAGIC + struct.pack(">I", len(pgs)) + body))
+    return spark.createDataFrame(rows, "url string, html binary").select(
+        "url",
+        F.lit("2020-01-01").cast("timestamp").alias("warc_ts"),
+        "html",
+        F.lit("").alias("text"),
+        F.lit("en").alias("lang"),
+    )
+
+
+def _page(page_no: int, *blocks: dict) -> dict:
+    return {"page_no": page_no, "width": 400, "height": 400,
+            "blocks": list(blocks)}
+
+
+def _block(b: int, class_id: int, name: str, conf: float, y1: float,
+           text: str) -> dict:
+    return {"b": b, "class_id": class_id, "name": name, "conf": conf,
+            "bbox": [10.0, y1, 200.0, y1 + 30.0], "text": text}
+
+
+def test_page_tally_semantics(spark):
+    """doc_stats.total_pages counts every RENDERED page — a page with zero
+    detections and a page quarantined in detect included, a page that
+    failed to render excluded — and the tally rows that carry the count
+    never leak into any other output."""
+    from paper_layout_parser_spark.operators.stats import result_json
+
+    title = _block(0, 0, "title", 0.9, 10.0, "Heading")
+    faint = _block(0, 1, "plain_text", DEFAULT_CONF / 2, 60.0, "faint")
+    no_class = {"conf": 0.9, "bbox": [10.0, 10.0, 100.0, 50.0]}
+    no_size = {"page_no": 2, "blocks": [title]}  # render raises KeyError
+    pages = _doc_pages_df(spark, {
+        "u_zero_det": [_page(1, title), _page(2, faint)],
+        "u_detect_fail": [_page(1, title), _page(2, no_class)],
+        "u_render_fail": [_page(1, title), no_size],
+    })
+    out = run_pipeline(pages)
+    stats = {r["url"]: r for r in out.doc_stats.collect()}
+    assert {u: r["total_pages"] for u, r in stats.items()} == {
+        "u_zero_det": 2, "u_detect_fail": 2, "u_render_fail": 1}
+    assert stats["u_zero_det"]["average_detections_per_page"] == 0.5
+    assert stats["u_detect_fail"]["total_detections"] == 1
+
+    q = {(r["url"], r["page_no"]): r["stage"] for r in out.quarantine.collect()}
+    assert q == {("u_detect_fail", 2): "detect", ("u_render_fail", 2): "rasterize"}
+
+    enriched = out.enriched.collect()
+    assert len(enriched) == 3
+    assert all(r["det_idx"] >= 0 and r["class_name"] == "Title" for r in enriched)
+    assert "stage" not in out.enriched.columns
+    assert out.matched.count() == 0
+    assert {r["url"]: r["doc_text"] for r in out.doc_text.collect()} == {
+        u: "Heading" for u in ("u_zero_det", "u_detect_fail", "u_render_fail")}
+    results = [json.loads(r["result_json"])
+               for r in result_json(out.enriched).collect()]
+    assert len(results) == 3
+    for res in results:
+        assert res["statistics"]["total_detections"] == 1
+        assert [pg["page_number"] for pg in res["pages"]] == [1]
+    out.unpersist()
+
+
+def test_each_page_renders_once(spark):
+    """One run_pipeline feeds doc_text, matched, doc_stats and quarantine
+    from one cached fused pass: every page reaches the detector exactly
+    once, and out.unpersist() releases the cache."""
+    acc = spark.sparkContext.accumulator(0)
+
+    class CountingBackend(StubDetectorBackend):
+        # a subclass skips the stub's dict fast path, so every page goes
+        # through detect_batch
+        def detect_batch(self, payloads):
+            acc.add(len(payloads))
+            return StubDetectorBackend.detect_batch(self, payloads)
+
+    n_docs = 12
+    pages = build_pages(spark, SF_SMALL).where(
+        F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < n_docs)
+    jsc = spark.sparkContext._jsc.sc()
+    cached_before = jsc.getPersistentRDDs().size()
+    out = run_pipeline(pages, backend_factory=CountingBackend)
+    for df in (out.doc_text, out.matched, out.doc_stats, out.quarantine):
+        df.write.format("noop").mode("overwrite").save()
+    assert acc.value == sum(sd.n_pages(d) for d in range(n_docs))
+    assert sum(r["total_pages"] for r in out.doc_stats.collect()) == acc.value
+    assert jsc.getPersistentRDDs().size() == cached_before + 1
+    out.unpersist()
+    assert jsc.getPersistentRDDs().size() == cached_before
 
 
 def test_determinism_under_repartitioning(spark):
@@ -208,7 +333,7 @@ def test_determinism_under_repartitioning(spark):
         text = {r["url"]: r["doc_text"] for r in out.doc_text.collect()}
         items = {(r["url"], r["item_id"]): (r["cap_y1"], r["caption_text"])
                  for r in out.matched.collect()}
-        out.enriched.unpersist()
+        out.unpersist()
         return text, items
 
     t1, i1 = run(16, 8)

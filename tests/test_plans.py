@@ -53,10 +53,26 @@ def test_branches_reuse_persisted_enriched(spark):
     )
     out = run_pipeline(pages)  # persist_enriched=True default
     out.enriched.count()       # materialize the cache
-    plan = plan_of(spark, out.doc_text, "simple")
-    assert "InMemoryTableScan" in plan
-    # the UDF chain must NOT appear again above the cached scan
-    assert "MapInPandas" not in plan.split("InMemoryRelation")[0]
+    # every default output reads the one cached fused pass: neither the
+    # UDF chain nor a second render appears outside the cached plan
+    for df in (out.doc_text, out.matched, out.doc_stats, out.quarantine):
+        plan = plan_of(spark, df, "simple")
+        assert "InMemoryTableScan" in plan
+        assert "MapInPandas" not in _outside_cached_plans(plan)
+    out.unpersist()
+
+
+def _outside_cached_plans(plan: str) -> str:
+    """The plan text minus every InMemoryRelation's cached subplan (the
+    lines indented deeper than the InMemoryRelation line that follow it)."""
+    kept, cache_depth = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :"))
+        if cache_depth is not None and depth > cache_depth:
+            continue
+        cache_depth = depth if "InMemoryRelation" in line else None
+        kept.append(line)
+    return "\n".join(kept)
 
 
 def test_per_page_crop_math_is_pure_projection(spark):

@@ -11,6 +11,10 @@ checksum the numpy path returns.
 
 from __future__ import annotations
 
+import os
+import platform
+import tempfile
+
 import numpy as np
 import pytest
 
@@ -82,9 +86,7 @@ def test_kernel_bit_identical_on_block_fill_inputs():
             assert np.array_equal(a.view(np.uint32), b.view(np.uint32))
 
 
-def test_render_page_checksum_matches_numpy_path(monkeypatch):
-    """_render_page end to end: the C path and the forced-numpy path
-    return the same checksum for real synthetic pages."""
+def _synthetic_pages() -> list[dict]:
     pages = []
     for doc_id in (3, 42, 101):
         for pg in sd.doc_pages(doc_id)[:2]:
@@ -97,7 +99,46 @@ def test_render_page_checksum_matches_numpy_path(monkeypatch):
                     for b in pg["blocks"]
                 ],
             })
+    return pages
+
+
+def test_render_page_checksum_matches_numpy_path(monkeypatch):
+    """_render_page end to end: the C path and the forced-numpy path
+    return the same checksum for real synthetic pages."""
+    pages = _synthetic_pages()
     with_kernel = [ras._render_page(pg) for pg in pages]
     monkeypatch.setitem(ras._kernel_state, "lib", None)  # force numpy path
     forced_numpy = [ras._render_page(pg) for pg in pages]
     assert with_kernel == forced_numpy
+
+
+def test_symlinked_cache_dir_takes_numpy_fallback(monkeypatch, tmp_path):
+    """A symlink planted at the predictable cache path — even one pointing
+    at a 0700 dir this user owns — is rejected: the kernel is not built
+    or loaded through it, the numpy fallback renders, and the page
+    checksums do not change."""
+    pages = _synthetic_pages()
+    want = [ras._render_page(pg) for pg in pages]
+    target = tmp_path / "elsewhere"
+    target.mkdir(mode=0o700)
+    (tmp_path / f"plp_kernel_{os.getuid()}").symlink_to(target)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setitem(ras._kernel_state, "lib", False)  # not yet tried
+    with pytest.raises(PermissionError):
+        ras._kernel_cache_dir()
+    assert ras._render_kernel_lib() is None
+    assert [ras._render_page(pg) for pg in pages] == want
+    assert list(target.iterdir()) == []
+
+
+def test_kernel_cache_tag_names_machine_and_target(monkeypatch, tmp_path):
+    """The cache file name changes with the machine and with the target
+    the compiler resolves, so a shared temp root never hands a worker an
+    object built for another CPU."""
+    monkeypatch.setattr(ras, "_resolved_target", lambda extra: "-march= a")
+    base = ras._kernel_so_path(str(tmp_path), "native", ["-march=native"])
+    monkeypatch.setattr(ras, "_resolved_target", lambda extra: "-march= b")
+    assert ras._kernel_so_path(str(tmp_path), "native", ["-march=native"]) != base
+    monkeypatch.setattr(ras, "_resolved_target", lambda extra: "-march= a")
+    monkeypatch.setattr(platform, "machine", lambda: "other-machine")
+    assert ras._kernel_so_path(str(tmp_path), "native", ["-march=native"]) != base

@@ -169,7 +169,7 @@ class TestReportGoldens:
         assert json.loads(js)["detailed_counts"]["true_positives"] == summary[
             "detailed_counts"]["true_positives"]
         assert "| Document | Precision | Recall | F1 | Status |" in md
-        out.enriched.unpersist()
+        out.unpersist()
 
 
 class TestSummaryDocuments:
@@ -191,7 +191,7 @@ class TestSummaryDocuments:
         for d in docs:
             assert d["total_detections"] == by_url[d["url"]]["total_detections"]
         assert row["total_detections"] == sum(d["total_detections"] for d in docs)
-        out.enriched.unpersist()
+        out.unpersist()
 
     def test_embedded_list_cap_bounds_the_fold(self, spark):
         """SCALE CONTRACT: with many documents, the embedded array truncates
