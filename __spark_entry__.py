@@ -45,7 +45,7 @@ def _pipeline(spark: SparkSession, sf_dir: str) -> tuple:
     key = f"{id(spark)}:{sf_dir}"
     if key not in _CACHE:
         pages = build_pages(spark, sf_dir).persist()
-        out = run_pipeline(pages, persist_enriched=True)
+        out = run_pipeline(pages)
         out.matched = out.matched.persist()
         _CACHE[key] = (pages, out)
     return _CACHE[key]

@@ -174,11 +174,6 @@ LANG_MARKERS = {
 }
 
 
-def lang_scores(words_col: Column) -> dict[str, Column]:
-    return {lang: _count_any(words_col, markers)
-            for lang, markers in LANG_MARKERS.items()}
-
-
 def predicted_lang(words_col: Column) -> Column:
     """Argmax language with deterministic tie-break (lexicographic lang
     code), 'und' when no marker hits at all.

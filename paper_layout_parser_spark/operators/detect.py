@@ -1,10 +1,12 @@
 """Page -> detections flatMap (reference: layout_detector.py:96-194).
 
-Batched model inference as mapInPandas with the iterator-init pattern: the
-backend (model) is constructed ONCE per task, then fed whole Arrow batches —
-the reference's ``detect_batch`` (layout_detector.py:96-109) is a sequential
-per-image loop; this version is genuinely batched and, on a real cluster,
-pinned to GPU executors via a resource profile.
+``rasterize_detect_enrich`` is the package's one detect path: render,
+batched model inference, clipped text and XY-cut reading order in a single
+mapInPandas stage with the iterator-init pattern. The backend (model) is
+constructed ONCE per task, then fed whole Arrow batches — the reference's
+``detect_batch`` (layout_detector.py:96-109) is a sequential per-image
+loop; this version is genuinely batched and, on a real cluster, pinned to
+GPU executors via a resource profile.
 
 Backends are pluggable behind one schema:
   * StubDetectorBackend — deterministic: decodes the synthetic page payload
@@ -89,160 +91,29 @@ class YoloDetectorBackend:
         raise NotImplementedError("decode pixmap bytes -> model.predict batch")
 
 
-def detect_layout(pages: DataFrame, backend_factory=StubDetectorBackend,
-                  profile=None) -> DataFrame:
-    """pages (url, page_no, width, height, page_payload) -> raw detections,
-    one row per detection, det_idx = model output order within the page (P2).
-    """
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = backend_factory()  # once per task, never per row/batch
-        for pdf in it:
-            rows: dict[str, list] = {
-                "url": [], "page_no": [], "width": [], "height": [],
-                "det_idx": [], "class_id": [], "raw_name": [],
-                "confidence": [], "x1": [], "y1": [], "x2": [], "y2": [],
-            }
-            results = backend.detect_batch(list(pdf["page_payload"]))
-            for url, page_no, w, h, dets in zip(
-                pdf["url"], pdf["page_no"], pdf["width"], pdf["height"], results
-            ):
-                for i, d in enumerate(dets):
-                    rows["url"].append(url)
-                    rows["page_no"].append(page_no)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["det_idx"].append(i)
-                    rows["class_id"].append(d["class_id"])
-                    rows["raw_name"].append(d["raw_name"])
-                    rows["confidence"].append(d["confidence"])
-                    x1, y1, x2, y2 = d["bbox"]
-                    rows["x1"].append(x1)
-                    rows["y1"].append(y1)
-                    rows["x2"].append(x2)
-                    rows["y2"].append(y2)
-            yield pd.DataFrame(rows)
-
-    return pages.mapInPandas(run, schema=RAW_DETECTION_SCHEMA, profile=profile)
-
-
-def detect_enrich_layout(pages: DataFrame,
-                         backend_factory=StubDetectorBackend,
-                         profile=None) -> DataFrame:
-    """Fused detect + clipped-text + XY-cut pass (P2 + P7 + O6).
-
-    The rasterized chunk row already holds both the pixmap stand-in and the
-    page's text layer, so running inference, per-region text extraction and
-    reading-order ranking in ONE mapInPandas stage avoids a shuffle, a
-    cogroup and a second decode of the page payload. This is the pipeline's
-    default hot path; the unfused operators remain for detections sourced
-    externally. Emits RAW names/values — run normalize_detections after.
-    """
-    from ..algorithms import clip_text, xy_cut_order
-
-    schema = (RAW_DETECTION_SCHEMA
-              + ", reading_order_rank int, text string, error string")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = backend_factory()
-        for pdf in it:
-            cols: dict[str, list] = {
-                "url": [], "page_no": [], "width": [], "height": [],
-                "det_idx": [], "class_id": [], "raw_name": [],
-                "confidence": [], "x1": [], "y1": [], "x2": [], "y2": [],
-                "reading_order_rank": [], "text": [], "error": [],
-            }
-
-            def emit_error(url, page_no, w, h, exc):
-                # C6 error containment (main.py:336-354): a bad page becomes
-                # a quarantine row, never a failed job
-                cols["url"].append(url)
-                cols["page_no"].append(page_no)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["det_idx"].append(-1)
-                cols["class_id"].append(-1)
-                cols["raw_name"].append(None)
-                cols["confidence"].append(None)
-                for c in ("x1", "y1", "x2", "y2"):
-                    cols[c].append(None)
-                cols["reading_order_rank"].append(-1)
-                cols["text"].append(None)
-                cols["error"].append(f"{type(exc).__name__}: {exc}")
-
-            payloads = list(pdf["page_payload"])
-            try:
-                # batched inference is the hot path; fall back to per-page
-                # only when the whole batch fails (isolates the bad page)
-                results = backend.detect_batch(payloads)
-            except Exception:  # noqa: BLE001
-                results = None
-            for idx, (url, page_no, w, h, payload) in enumerate(zip(
-                pdf["url"], pdf["page_no"], pdf["width"], pdf["height"], payloads
-            )):
-                try:
-                    dets = (results[idx] if results is not None
-                            else backend.detect_batch([payload])[0])
-                    blocks = json.loads(bytes(payload))["blocks"]
-                    boxes = [tuple(d["bbox"]) for d in dets]
-                    order = xy_cut_order(boxes)
-                    ranks = [0] * len(order)
-                    for rank, pos in enumerate(order):
-                        ranks[pos] = rank
-                    texts = [clip_text(blocks, *d["bbox"]) for d in dets]
-                except Exception as exc:  # noqa: BLE001 — quarantine semantics
-                    emit_error(url, page_no, w, h, exc)
-                    continue
-                for i, d in enumerate(dets):
-                    cols["url"].append(url)
-                    cols["page_no"].append(page_no)
-                    cols["width"].append(w)
-                    cols["height"].append(h)
-                    cols["det_idx"].append(i)
-                    cols["class_id"].append(d["class_id"])
-                    cols["raw_name"].append(d["raw_name"])
-                    cols["confidence"].append(d["confidence"])
-                    x1, y1, x2, y2 = d["bbox"]
-                    cols["x1"].append(x1)
-                    cols["y1"].append(y1)
-                    cols["x2"].append(x2)
-                    cols["y2"].append(y2)
-                    cols["reading_order_rank"].append(ranks[i])
-                    cols["text"].append(texts[i])
-                    cols["error"].append(None)
-            yield pd.DataFrame(cols)
-
-    # profile: stage-level scheduling — pin this stage to GPU executors via
-    # session.gpu_task_profile() on a GPU cluster (None on local[N])
-    return pages.mapInPandas(run, schema=schema, profile=profile)
-
-
 def rasterize_detect_enrich(planned: DataFrame,
                             backend_factory=StubDetectorBackend,
                             profile=None) -> DataFrame:
-    """r9 hot path: plan chunks -> ONE mapInPandas stage doing rasterize
-    (real render work, checksum semantics identical to
-    rasterize._render_page) + detection + clipped text + XY-cut.
+    """Plan chunks -> ONE mapInPandas stage doing rasterize (real render
+    work, checksum semantics identical to rasterize._render_page) +
+    detection + clipped text + XY-cut.
 
-    Versus the two-stage rasterize_pages |> detect_enrich_layout chain
-    this removes a full JVM->Python->JVM round trip of the page table
-    (one Arrow (de)serialization of ~1 KB page payloads per page each
-    way) and the per-page ``json.dumps`` + double ``json.loads`` of the
-    page payload between the stages (guide §4.1: every Python boundary
-    costs a transpose + serialization both ways). With the default
-    StubDetectorBackend the detections are read straight off the parsed
-    page dict — value-identical to ``detect_batch(json.dumps(page))``
-    because the stub's parse of the serialized page is the page (pinned
-    by tests/test_pipeline.py's parity against the two-stage operators
-    and the pipeline oracle queries); any other backend still receives
+    Each page crosses the JVM->Python boundary once: no page table is
+    materialized between render and inference, and the page payload is
+    parsed once per chunk (every Python boundary costs a transpose +
+    serialization both ways). With the default StubDetectorBackend the
+    detections are read straight off the parsed page dict — value-
+    identical to ``detect_batch(json.dumps(page))`` because the stub's
+    parse of the serialized page is the page; any other backend receives
     serialized page payloads through its documented ``detect_batch``
-    contract, batched per Arrow batch with the same whole-batch-then-
-    per-page fallback as detect_enrich_layout.
+    contract, batched per Arrow batch, falling back to one page at a time
+    when the whole batch fails. Both paths are pinned row for row against
+    a pure-Python spec of the synthetic corpus (tests/test_pipeline.py).
 
     Emits RAW names/values plus ``reading_order_rank``/``text`` and the
     quarantine columns ``stage``/``error`` ('rasterize' for chunk-decode
-    and render failures, 'detect' for inference/enrichment failures —
-    the same split the two-stage chain produced). Every successfully
+    and render failures, 'detect' for inference/enrichment failures).
+    Every successfully
     rendered page also yields one page-tally row (``stage='page'``,
     ``det_idx=-1``, ``error`` null), emitted before the detect leg so a
     page that fails in detect still counts as rendered: the per-document
@@ -293,9 +164,9 @@ def rasterize_detect_enrich(planned: DataFrame,
                 emit_page_row(url, page_no, w, h, stage,
                               f"{type(exc).__name__}: {exc}")
 
-            # rasterize leg: decode chunks, render pages (error rows keep
-            # the two-stage chain's 'rasterize' stage label; each rendered
-            # page emits its tally row here, before detection can fail)
+            # rasterize leg: decode chunks, render pages (failures are
+            # 'rasterize' quarantine rows; each rendered page emits its
+            # tally row here, before detection can fail)
             pages: list[tuple] = []   # (url, page dict) for rendered pages
             for url, payload, start, end in zip(
                 pdf["url"], pdf["html"], pdf["page_start"], pdf["page_end"]
@@ -320,8 +191,8 @@ def rasterize_detect_enrich(planned: DataFrame,
             # detect leg: batched inference (generic backends get the
             # serialized payload contract; the stub reads the parsed dict
             # PER PAGE inside the containment try below, so a malformed
-            # block quarantines that page exactly like the two-stage
-            # chain's whole-batch-then-per-page fallback did)
+            # block quarantines only that page, as the generic path's
+            # whole-batch-then-per-page fallback does)
             results = None
             if not stub_fast:
                 payloads = [

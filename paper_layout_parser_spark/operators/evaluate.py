@@ -185,20 +185,6 @@ def error_analysis(comparisons: DataFrame) -> DataFrame:
     )
 
 
-def errors_by_page(comparisons: DataFrame) -> DataFrame:
-    """A12 second half (evaluator.py:377-387): per (url, page) list of error
-    records — collect_list folded only at the report edge."""
-    return (
-        comparisons.where(~F.col("is_correct"))
-        .groupBy("url", "page_number")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("figure_id", "error_type"))
-            ).alias("errors")
-        )
-    )
-
-
 def batch_rollup(per_doc_summaries: DataFrame) -> DataFrame:
     """A11 (overall): cross-document benchmark rollup (batch.py:134-213) —
     tp/fp/fn summed exactly over per-document evaluation summaries (input:

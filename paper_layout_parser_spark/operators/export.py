@@ -2,9 +2,8 @@
 scripts/export_to_label_studio.py:114-123, 219-393).
 
 The exportable core is a projection: pixel bboxes -> percent coordinates
-relative to the page size, one task row per item with its matched caption
-region and a relation. Pure column arithmetic; the JSON envelope is applied
-with to_json at the edge.
+relative to the page size, one row per item with its matched caption
+region. Pure column arithmetic.
 """
 
 from __future__ import annotations
@@ -50,15 +49,3 @@ def to_percent_coords(matched: DataFrame, page_w: int | None = None,
         ).alias("caption_region"),
     )
 
-
-def label_studio_tasks(matched: DataFrame, page_w: int | None = None,
-                       page_h: int | None = None) -> DataFrame:
-    """(url, task_json) — one Label-Studio task per item, deduplicated on
-    item_id (U5: export_to_label_studio.py:364-388 'already added' guard)."""
-    pct = to_percent_coords(matched, page_w, page_h).dropDuplicates(["url", "item_id"])
-    payload = F.struct(
-        F.col("item_id"), F.col("item_type"), F.col("page_number"),
-        F.col("x_pct"), F.col("y_pct"), F.col("w_pct"), F.col("h_pct"),
-        F.col("caption_region"),
-    )
-    return pct.select("url", "item_id", F.to_json(payload).alias("task_json"))

@@ -11,11 +11,11 @@ The fused stage is the only render of the default outputs. Its normalized
 output is the hub: detections (``stage`` null) form ``enriched``, failed
 pages (``error`` set) form ``quarantine``, and the one tally row per
 rendered page (``stage='page'``) gives ``doc_stats`` its page counts.
-Stats, matching, assembly and quarantine all branch from it, so callers
-that need several outputs should persist it once (``persist_enriched``)
-and release it with ``PipelineOutputs.unpersist`` (see sources.catalog
-for the Iceberg/parquet stage-checkpoint helper). ``rasterized`` is a
-separate lazy render, read only by crop re-rendering and VLM payloads.
+Stats, matching, assembly and quarantine all branch from it, so
+run_pipeline persists it once; callers release it with
+``PipelineOutputs.unpersist`` (see sources.catalog for the Iceberg/parquet
+stage-checkpoint helper). ``rasterized`` is a separate lazy render, read
+only by crop re-rendering and VLM payloads.
 """
 
 from __future__ import annotations
@@ -46,13 +46,11 @@ class PipelineOutputs:
     doc_stats: DataFrame      # per-url totals
     quarantine: DataFrame     # failed pages (url, page_no, stage, error)
     # the persisted fused-stage output every other frame filters
-    fused: DataFrame | None = field(default=None, repr=False)
+    fused: DataFrame = field(repr=False)
 
     def unpersist(self) -> None:
-        """Release the cached fused-stage output (a no-op when the
-        pipeline ran with ``persist_enriched=False``)."""
-        if self.fused is not None:
-            self.fused.unpersist()
+        """Release the cached fused-stage output."""
+        self.fused.unpersist()
 
 
 def run_pipeline(
@@ -60,22 +58,19 @@ def run_pipeline(
     backend_factory=StubDetectorBackend,
     chunk_pages: int = 16,
     num_partitions: int | None = None,
-    persist_enriched: bool = True,
 ) -> PipelineOutputs:
     planned = plan_splits(pages, chunk_pages=chunk_pages, num_partitions=num_partitions)
     # rasterize + inference + clipped text + XY-cut in ONE mapInPandas
     # stage (see rasterize_detect_enrich). Its rows are detections, page
     # tallies and quarantine rows (C6 error containment: failed pages
     # become rows, never failed jobs).
-    fused = normalize_detections(rasterize_detect_enrich(planned, backend_factory))
-    # persist_enriched: persists the single fused output — detections,
-    # tallies and quarantine rows — so enriched, matched, doc_text,
-    # doc_stats and quarantine all read the cache and the UDF stage runs
-    # once. Without it each branch re-executes the UDF chain from the
-    # scan. On a cluster, replace the persist with a
-    # catalog.checkpoint_stage (same cut point, durable + resumable).
-    if persist_enriched:
-        fused = fused.persist()
+    # persist the single fused output — detections, tallies and
+    # quarantine rows — so enriched, matched, doc_text, doc_stats and
+    # quarantine all read the cache and the UDF stage runs once. On a
+    # cluster, replace the persist with a catalog.checkpoint_stage (same
+    # cut point, durable + resumable).
+    fused = normalize_detections(
+        rasterize_detect_enrich(planned, backend_factory)).persist()
     enriched = fused.where(F.col("stage").isNull()).drop("stage", "error")
     quarantine = fused.where(F.col("error").isNotNull()).select(
         "url", "page_no", "stage", "error"
@@ -98,5 +93,5 @@ def run_pipeline(
         doc_text=assemble_doc_text(enriched),
         doc_stats=doc_stats(enriched, total_pages=total_pages),
         quarantine=quarantine,
-        fused=fused if persist_enriched else None,
+        fused=fused,
     )

@@ -62,7 +62,7 @@ def gpu_task_profile(gpus_per_task: float = 1.0, cpus_per_task: int = 1):
     """Stage-level resource profile for the inference stage (north star:
     'layout inference runs as mapInPandas batches pinned to GPU executors').
 
-    Pass the result as ``detect_enrich_layout(..., profile=...)`` on a
+    Pass the result as ``rasterize_detect_enrich(..., profile=...)`` on a
     cluster with GPU executors (spark.executor.resource.gpu.amount set);
     local[N] has no GPUs, so callers default to profile=None here."""
     from pyspark.resource import ResourceProfileBuilder, TaskResourceRequests

@@ -550,7 +550,7 @@ def clustered_embeddings(spark, n: int, dim: int, n_clusters: int,
                          noise: float = 0.15, id_start: int = 0):
     """Deterministic mixture-of-clusters embedding corpus (no RNG).
 
-    The uniform hash-derived corpus in ``bench.py --ann-capacity`` is the
+    A uniform hash-derived corpus (BENCH/ANN_CAPACITY.md) is the
     WORST case for a coarse quantizer — no cluster structure, so IVF
     recall stays near nprobe/C regardless of index quality. Real
     embedding corpora cluster; this generator plants that structure so

@@ -9,8 +9,8 @@ cd "$(dirname "$0")/.."
 rm -f /tmp/plp_spark.zip
 zip -qr /tmp/plp_spark.zip paper_layout_parser_spark
 
-# N-executor run (swap num-executors for the 4N run; bench.py --scaling is
-# the single-node stand-in used in this sandbox)
+# N-executor run (swap num-executors for the 4N run; python3 perfbench/run.py
+# is the single-node benchmark)
 spark-submit \
   --master "${SPARK_MASTER:-yarn}" \
   --deploy-mode cluster \

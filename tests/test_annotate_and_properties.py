@@ -90,17 +90,18 @@ class TestAnnotateStage:
         assert gt.where(F.col("figure_id") == "EMPTY_CALL").count() == 0
         # detections semi-join path
         from paper_layout_parser_spark.operators.annotate import annotatable_pages
-        from paper_layout_parser_spark.operators.detect import (
-            StubDetectorBackend, detect_layout, normalize_detections,
-        )
+        from paper_layout_parser_spark.plans.pipeline import run_pipeline
 
-        det = normalize_detections(detect_layout(pages, StubDetectorBackend))
+        out = run_pipeline(build_pages(spark, SF_SMALL).where(
+            F.regexp_extract("url", r"([0-9]+)$", 1).cast("long").isin(1, 2, 3)))
+        det = out.detections
         kept = annotatable_pages(pages, det)
         assert 0 < kept.count() < total
         gt2 = annotate_and_parse(pages, detections=det,
                                  client_factory=TattlingClient)
         assert gt2.where(F.col("figure_id") == "EMPTY_CALL").count() == 0
         assert gt2.count() == gt.count() == annotate_and_parse(pages).count()
+        out.unpersist()
 
 
 BOX = st.tuples(

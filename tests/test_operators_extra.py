@@ -127,8 +127,9 @@ class TestQuarantine:
         """r9 review finding: a page whose block RENDERS fine (bbox +
         conf present) but is malformed for detection (no 'class_id'/
         'name' keys) must become a detect-stage quarantine row through
-        the fused stub fast path — never a failed job (the containment
-        the two-stage chain's whole-batch-then-per-page fallback gave)."""
+        the fused stub fast path — never a failed job (the per-page
+        containment the serialized path's whole-batch-then-per-page
+        fallback gives)."""
         bad_page = {"page_no": 1, "width": 400, "height": 400, "blocks": [
             {"conf": 0.9, "bbox": [10.0, 10.0, 100.0, 50.0]},  # no class_id
         ]}
@@ -154,9 +155,9 @@ class TestQuarantine:
     def test_enrich_failure_carries_detect_stage_label(self, spark):
         """r9 fused-stage parity: a page that RENDERS fine (bbox/conf
         present) but whose blocks break text enrichment (no 'text' key
-        -> clip_text raises) must quarantine with stage='detect' — the
-        same split the two-stage chain produced (render errors are
-        'rasterize', inference/enrichment errors are 'detect')."""
+        -> clip_text raises) must quarantine with stage='detect' (render
+        errors are 'rasterize', inference/enrichment errors are
+        'detect')."""
         bad_page = {"page_no": 1, "width": 400, "height": 400, "blocks": [
             {"b": 0, "class_id": 0, "name": "Title", "conf": 0.9,
              "bbox": [10.0, 10.0, 100.0, 50.0]},  # no 'text' key

@@ -1,6 +1,6 @@
 """End-to-end pipeline tests on a slice of the synthetic corpus:
 byte-identity of assembled text, stats parity with the Python spec,
-detection parity, skew-plan behavior."""
+fused-stage parity with a pure-Python oracle, skew-plan behavior."""
 
 import json
 import struct
@@ -9,18 +9,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from paper_layout_parser_spark import synthdata as sd
+from paper_layout_parser_spark.algorithms import clip_text, xy_cut_order
 from paper_layout_parser_spark.corpus import build_pages
 from paper_layout_parser_spark.operators.detect import (
     DEFAULT_CONF,
     StubDetectorBackend,
-    detect_layout,
-    normalize_detections,
 )
-from paper_layout_parser_spark.operators.page_text import enrich_detections
 from paper_layout_parser_spark.operators.rasterize import (
     plan_splits,
     probe_pages,
-    rasterize_pages,
 )
 from paper_layout_parser_spark.operators.stats import (
     class_stats,
@@ -41,7 +38,7 @@ def corpus(spark):
     pages = build_pages(spark, SF_SMALL).where(
         F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < N_DOCS
     ).persist()
-    out = run_pipeline(pages, persist_enriched=True)
+    out = run_pipeline(pages)
     out.matched = out.matched.persist()
     yield pages, out
     pages.unpersist()
@@ -202,28 +199,6 @@ def test_rasterize_page_counts(corpus):
         assert r["count"] == sd.n_pages(doc_id)
 
 
-def test_fused_stage_matches_two_stage_operators(spark):
-    """The pipeline's one fused UDF stage against the two-stage operators
-    composed directly as the oracle: rasterize_pages -> detect_layout ->
-    normalize_detections -> enrich_detections."""
-    pages = build_pages(spark, SF_SMALL).where(
-        F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < 15
-    ).persist()
-    cols = ["url", "page_no", "det_idx", "class_name", "confidence",
-            "x1", "y1", "x2", "y2", "reading_order_rank", "text"]
-    out = run_pipeline(pages)
-    a = out.enriched.select(cols)
-    rasterized = (rasterize_pages(plan_splits(pages))
-                  .where(F.col("error").isNull()).drop("error"))
-    det = normalize_detections(detect_layout(rasterized))
-    b = enrich_detections(det, rasterized).select(cols)
-    assert a.count() == b.count() > 0
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    out.unpersist()
-    pages.unpersist()
-
-
 def _doc_pages_df(spark, docs: dict[str, list[dict]]):
     """pages rows for hand-built documents: url -> list of page dicts in
     the synthetic PLP1 container (sd.doc_html's layout)."""
@@ -249,6 +224,64 @@ def _block(b: int, class_id: int, name: str, conf: float, y1: float,
            text: str) -> dict:
     return {"b": b, "class_id": class_id, "name": name, "conf": conf,
             "bbox": [10.0, y1, 200.0, y1 + 30.0], "text": text}
+
+
+def _oracle_enriched(docs: dict[str, list[dict]]) -> list[tuple]:
+    """Pure-Python spec of the fused stage's enriched rows for documents
+    given as url -> page dicts (the PLP1 body's layout): no Spark, no UDF.
+    A block is detected when its confidence clears DEFAULT_CONF; det_idx
+    is its position among the kept blocks of its page."""
+    rows = []
+    for url, pgs in docs.items():
+        for pg in pgs:
+            kept = [b for b in pg["blocks"] if b["conf"] >= DEFAULT_CONF]
+            order = xy_cut_order([tuple(b["bbox"]) for b in kept])
+            rank = {pos: r for r, pos in enumerate(order)}
+            for i, b in enumerate(kept):
+                x1, y1, x2, y2 = b["bbox"]
+                rows.append((
+                    url, pg["page_no"], i,
+                    sd.normalize_class_name(b["name"]), round(b["conf"], 4),
+                    round(x1, 2), round(y1, 2), round(x2, 2), round(y2, 2),
+                    rank[i], clip_text(pg["blocks"], x1, y1, x2, y2),
+                ))
+    return rows
+
+
+@pytest.mark.parametrize("path", ["stub_fast_path", "serialized_detect_batch"])
+def test_fused_stage_matches_python_oracle(spark, path):
+    """The pipeline's one fused UDF stage, row for row, against the
+    pure-Python oracle — for the stub's dict fast path and for the
+    generic serialized detect_batch path. Next to the synthetic corpus
+    (integer boxes, reading-order permutations that are their own
+    inverse) runs one hand-built page whose values need rounding and
+    whose reading order is a 3-cycle."""
+
+    class SerializedStub(StubDetectorBackend):
+        # a subclass skips the stub's dict fast path: pages reach it as
+        # serialized payloads through detect_batch
+        pass
+
+    backend = StubDetectorBackend if path == "stub_fast_path" else SerializedStub
+    n_docs = 15
+    docs = {sd.url_of(d): json.loads(sd.doc_html(d)[8:])["pages"]  # skip PLP1 header
+            for d in range(n_docs)}
+    cycle = [_page(1,
+                   _block(0, 3, "figure", 0.87654, 200.004, "third"),
+                   _block(1, 0, "title", 0.9, 10.0, "first"),
+                   _block(2, 1, "plain_text", 0.5, 100.0, "second"))]
+    pages = build_pages(spark, SF_SMALL).where(
+        F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < n_docs
+    ).unionByName(_doc_pages_df(spark, {"u_cycle": cycle}))
+    cols = ["url", "page_no", "det_idx", "class_name", "confidence",
+            "x1", "y1", "x2", "y2", "reading_order_rank", "text"]
+    out = run_pipeline(pages, backend_factory=backend)
+    got = [tuple(r) for r in out.enriched.select(cols).collect()]
+    out.unpersist()
+    want = _oracle_enriched({**docs, "u_cycle": cycle})
+    assert [r[9] for r in want if r[0] == "u_cycle"] == [2, 0, 1]
+    assert len(set(got)) == len(got)
+    assert sorted(got) == sorted(want)
 
 
 def test_page_tally_semantics(spark):

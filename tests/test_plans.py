@@ -31,11 +31,12 @@ def test_single_repartition_before_rasterize(spark, tmp_path):
     # own repartition is scaffolding, excluded by materializing first)
     path = str(tmp_path / "pages.parquet")
     build_pages(spark, SF_SMALL).limit(50).write.parquet(path)
-    out = run_pipeline(spark.read.parquet(path), persist_enriched=False)
+    out = run_pipeline(spark.read.parquet(path))
     plan = plan_of(spark, out.detections, "simple")
     # exactly one explicit repartition (the skew spread) upstream of detect
     assert plan.count("REPARTITION_BY_NUM") == 1
     assert "xxhash64(url" in plan
+    out.unpersist()
 
 
 def test_topk_uses_window_group_limit(spark):
@@ -51,7 +52,7 @@ def test_branches_reuse_persisted_enriched(spark):
     pages = build_pages(spark, SF_SMALL).where(
         F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < 5
     )
-    out = run_pipeline(pages)  # persist_enriched=True default
+    out = run_pipeline(pages)
     out.enriched.count()       # materialize the cache
     # every default output reads the one cached fused pass: neither the
     # UDF chain nor a second render appears outside the cached plan

@@ -1,5 +1,5 @@
 """Training-data operator tests: dedup strategies, similarity search,
-text analysis, multimodal plumbing — correctness vs numpy/python oracles
+text analysis, catalog resume — correctness vs numpy/python oracles
 plus recall of the approximate paths against their exact twins."""
 
 import numpy as np
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from paper_layout_parser_spark.operators import dedup as dd
-from paper_layout_parser_spark.operators import multimodal as mm
 from paper_layout_parser_spark.operators import similarity as sim
 
 from .conftest import SF_SMALL
@@ -540,50 +539,6 @@ class TestSimilarity:
                 for r in sim.ivf_topk(emb, queries, k=5, num_centroids=8,
                                       nprobe=8).collect()}
         assert full == exact
-
-
-class TestMultimodal:
-    def test_media_meta_sniffing(self, spark):
-        df = spark.createDataFrame(
-            [(1, bytes.fromhex("89504E470D0A1A0A") + b"x" * 10),
-             (2, bytes.fromhex("FFD8FFE0") + b"y" * 5),
-             (3, b"random-bytes")],
-            "doc_id long, media binary",
-        )
-        got = {r.doc_id: r.media_meta for r in mm.attach_media_meta(df).collect()}
-        assert got[1]["media_type"] == "image/png"
-        assert got[2]["media_type"] == "image/jpeg"
-        assert got[3]["media_type"] == "application/octet-stream"
-        assert got[1]["byte_len"] == 18
-
-    def test_decode_image_stub_deterministic(self, spark):
-        df = spark.createDataFrame(
-            [(1, b"imagebytes"), (2, b"imagebytes"), (3, b"other")],
-            "doc_id long, media binary",
-        )
-        got = {r.doc_id: r.features for r in mm.decode_image(df).collect()}
-        assert got[1] == got[2] != got[3]
-        assert len(got[1]) == mm.FEATURE_DIM
-        assert all(0.0 <= v <= 1.0 for v in got[1])
-
-    def test_decode_image_strict_raises(self, spark):
-        df = spark.createDataFrame([(1, b"img")], "doc_id long, media binary")
-        with pytest.raises(Exception, match="NotImplementedError|decode"):
-            mm.decode_image(df, strict=True).collect()
-
-    def test_sample_frames_flatmap_shape(self, spark):
-        df = spark.createDataFrame(
-            [(1, bytes(range(64))), (2, bytes(range(8)))],
-            "doc_id long, media binary",
-        )
-        got = mm.sample_frames(df, n_frames=4).collect()
-        by_doc = {}
-        for r in got:
-            by_doc.setdefault(r.doc_id, []).append(r)
-        assert len(by_doc[1]) == 4 and len(by_doc[2]) == 4
-        frames = sorted((r.frame_no, bytes(r.frame_payload)) for r in by_doc[1])
-        assert frames[0] == (0, bytes(range(16)))
-        assert frames[3] == (3, bytes(range(48, 64)))
 
 
 class TestCatalogResume:

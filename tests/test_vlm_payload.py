@@ -111,7 +111,7 @@ def pipeline_out(spark):
     from paper_layout_parser_spark.plans.pipeline import run_pipeline
 
     pages = build_pages(spark, "/root/testdata/sf0.001")
-    return run_pipeline(pages, persist_enriched=True)
+    return run_pipeline(pages)
 
 
 def test_elements_description_matches_reference(spark, pipeline_out):
