@@ -131,6 +131,12 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.3,
     explode the same materialized arrays. ``checkpoint=`` a Catalog
     swaps the localCheckpoint for a durable catalog table on clusters
     (operators.materialize).
+
+    Precondition: ``id_col`` values must be unique (one row per
+    document), as for remove_duplicate_spans. Rows that share an id are
+    never compared with each other (a < b), and each pair they are in
+    comes out once per such row with the shingle matches of all of them
+    summed — a Jaccard above 1 is possible. Dedup the ids upstream.
     """
     sets = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -250,6 +256,11 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
     non-replicated); a sources.catalog.Catalog = committed catalog tables
     that survive executor loss on a cluster. Identical results either way
     (twin-tested).
+
+    Precondition: ``id_col`` values must be unique (one row per
+    document), as for jaccard_pairs. Rows that share an id get one merged
+    signature, are never compared with each other (a < b), and each pair
+    they are in comes out once per such row. Dedup the ids upstream.
     """
     from .materialize import materialize
 

@@ -14,11 +14,12 @@ page URL throughout — every operator takes id_col/text_col, so the same
 composition runs over any (id, text) table (skip the extraction stage and
 start from documents directly via ``curate_documents``).
 
-At scale: checkpoint ``extracted`` through sources.catalog between the
-two phases (same cut point the batch job uses) so curation re-runs never
-re-rasterize; the curation phase's shuffles are all on narrow keys
-(xxhash64+length for dup rules, (hash, len) for line counts, url for the
-final reassembly).
+At scale, pass ``catalog=`` to ``build_training_corpus``: it commits
+``extracted`` to ``corpus_extracted`` (and the quarantine rows to
+``quarantine``) through sources.catalog.commit_pending, the exactly-once
+committer the batch job uses, so curation re-runs never re-rasterize. The
+curation phase's shuffles are all on narrow keys (xxhash64+length for dup
+rules, (hash, len) for line counts, url for the final reassembly).
 """
 
 from __future__ import annotations
@@ -37,6 +38,8 @@ from ..operators.curation import (
     deterministic_shuffle,
 )
 from ..operators.dedup import dedup_lines
+
+CORPUS_TABLE = "corpus_extracted"   # the committed extraction phase
 
 
 @dataclass
@@ -164,9 +167,7 @@ def build_training_corpus(
     host_cap: int | None = None,
     host_col: str | None = None,
     shuffle_salt: str | None = None,
-    pipeline_kwargs: dict | None = None,
     catalog=None,
-    checkpoint_table: str = "corpus_extracted",
 ) -> CorpusBuildOutputs:
     """Full build: raw pages table -> extracted text -> curated, split
     training corpus. ``benchmark`` (any table with a text column named
@@ -175,13 +176,13 @@ def build_training_corpus(
     ``catalog`` (a sources.catalog.Catalog) makes the module docstring's
     "checkpoint ``extracted`` between the two phases" contract CODE: the
     extraction phase commits ``extracted`` (with per-partition lineage)
-    to ``checkpoint_table`` and the curation phase reads the committed
-    table back — the audit/kept/line-dedup branches, which each consume
-    ``extracted`` several times, then scan parquet instead of re-running
-    the rasterize+detect UDF chain. The commit goes through
-    ``run_resumable``'s pending gate, so the call is IDEMPOTENT per url:
-    a re-run (killed curation phase, or the same build invoked twice on
-    the same warehouse) extracts only not-yet-committed urls and never
+    to ``corpus_extracted``, plus its quarantine rows, and the curation
+    phase reads the committed table back — the audit/kept/line-dedup
+    branches, which each consume ``extracted`` several times, then scan
+    parquet instead of re-running the rasterize+detect UDF chain. The
+    commit goes through ``commit_pending``, so the call is IDEMPOTENT per
+    url: a re-run (killed curation phase, or the same build invoked twice
+    on the same warehouse) extracts only not-yet-committed urls and never
     double-appends — an ungated append would silently duplicate every
     row, and duplicated rows would then double the corpus-wide line
     counts and make line dedup empty every document's text.
@@ -195,25 +196,21 @@ def build_training_corpus(
     from .pipeline import run_pipeline
 
     if catalog is not None:
-        from ..sources.catalog import run_resumable
+        from ..sources.catalog import commit_pending
 
-        outs = []
+        def run_stages(todo):
+            # the committed table replaces every downstream read of the
+            # extraction lineage, so the pipeline cache is released right
+            # after the commit instead of pinning executor memory through
+            # the curation phase
+            out = run_pipeline(todo)
+            return ([(CORPUS_TABLE, out.doc_text, None),
+                     ("quarantine", out.quarantine, None)], out.unpersist)
 
-        def _extract(todo):
-            out = run_pipeline(todo, **(pipeline_kwargs or {}))
-            outs.append(out)
-            return out.doc_text
-
-        extracted = run_resumable(catalog, pages, checkpoint_table,
-                                  _extract, key="url")
-        # the committed table replaces every downstream read of the
-        # extraction lineage — release the pipeline cache immediately
-        # instead of pinning executor memory through the curation phase
-        for out in outs:
-            out.unpersist()
+        commit_pending(catalog, pages, [CORPUS_TABLE], run_stages)
+        extracted = catalog.read(CORPUS_TABLE)
     else:
-        out = run_pipeline(pages, **(pipeline_kwargs or {}))
-        extracted = out.doc_text
+        extracted = run_pipeline(pages).doc_text
     audit, curated, funnel = curate_documents(
         extracted, benchmark=benchmark, id_col="url", text_col="doc_text",
         lang=lang, min_quality=min_quality,

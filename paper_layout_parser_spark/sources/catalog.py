@@ -11,10 +11,13 @@ This module is format-agnostic behind one ``Catalog`` helper:
     see /opt guide) — same table semantics, append = new files.
 
 Resume semantics mirror the reference's skip-existing incremental mode
-(benchmarks/cli.py:318-323, SURVEY F8/U6): a restarted run left-anti joins
-its input keys against the committed output snapshot and processes only the
-remainder. Lineage rows are collected during the stage write via
-``mapInPandas`` accounting, appended to a ``<table>__lineage`` table.
+(benchmarks/cli.py:318-323, SURVEY F8/U6), which is per input document:
+``commit_pending`` is the one exactly-once committer, shared by the batch
+job, the streaming ingest and the corpus build. It left-anti joins its
+input urls against per-table url key rows that every caller shares and
+processes only the remainder.
+Lineage rows come from a ``groupBy`` over the persisted stage frame, in
+the same pass as the data append, and go to a ``<table>__lineage`` table.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,10 +77,10 @@ class Catalog:
 
     def checkpoint_stage(self, df: DataFrame, table: str,
                          url_col: str = "url",
-                         page_col: str | None = "page_no") -> DataFrame:
+                         page_col: str | None = "page_no") -> None:
         """Append ``df`` to ``table`` while recording per-partition lineage
         rows (partition_id, urls_in, pages_in, bytes_out, wall_ms) to
-        ``<table>__lineage``, then return the committed table.
+        ``<table>__lineage``.
 
         The staged DataFrame is persisted around the two appends: without
         it, the lineage append would RECOMPUTE the whole upstream (incl.
@@ -121,7 +125,6 @@ class Catalog:
                         f"{table}__lineage")
         finally:
             staged.unpersist()
-        return self.read(table)
 
     # -- bucketing ------------------------------------------------------------
 
@@ -146,6 +149,32 @@ class Catalog:
         )
         return self.spark.read.table(table)
 
+    # -- url key tables ------------------------------------------------------
+
+    def append_keys(self, keys: DataFrame, table: str) -> None:
+        """Append ``(url, table)`` key rows partitioned by ``table``, so on
+        parquet ``has_keys`` is a file listing, not a Spark job."""
+        if self.iceberg:
+            w = keys.writeTo(f"{self.catalog_name}.{table}")
+            w.append() if self.exists(table) else \
+                w.partitionedBy(F.col("table")).create()
+        else:
+            keys.write.mode("append").partitionBy("table").parquet(
+                self._path(table))
+
+    def read_keys(self, table: str) -> DataFrame:
+        """A key table, read without a schema-inference job."""
+        if self.iceberg:
+            return self.read(table)
+        return self.spark.read.schema("url string, table string").parquet(
+            self._path(table))
+
+    def has_keys(self, table: str, stage_table: str) -> bool:
+        if self.iceberg:
+            return self.exists(table) and self.read_keys(table).where(
+                F.col("table") == stage_table).limit(1).count() > 0
+        return self.exists(os.path.join(table, f"table={stage_table}"))
+
     # -- resume -------------------------------------------------------------
 
     def pending_inputs(self, inputs: DataFrame, table: str,
@@ -159,13 +188,95 @@ class Catalog:
         return inputs.join(done, key, "left_anti")
 
 
-def run_resumable(catalog: Catalog, pages: DataFrame, table: str,
-                  stage_fn, key: str = "url") -> DataFrame:
-    """Process only not-yet-committed inputs through ``stage_fn`` and
-    checkpoint the results; returns the full committed table. Calling this
-    again after a crash (or with new inputs) finishes the remainder —
-    exactly-once per input key as long as stage_fn is deterministic."""
-    todo = catalog.pending_inputs(pages, table, key=key)
-    if todo.limit(1).count() > 0:
-        catalog.checkpoint_stage(stage_fn(todo), table, url_col=key)
-    return catalog.read(table)
+KEYS = "committed_urls"      # (url, table): the url's batch committed to table
+INFLIGHT = "inflight_urls"   # (url, table): a batch started writing the url
+
+
+def _key_rows(urls: DataFrame, tables: list[str]) -> DataFrame:
+    # one file per table and batch: a batch's urls are few
+    return urls.coalesce(1).select(
+        "url", F.explode(F.array(*[F.lit(t) for t in tables])).alias("table"))
+
+
+def _bootstrap_keys(catalog: Catalog, tables: list[str]) -> None:
+    """Migrate each table in ``tables`` that holds rows but no key rows
+    (written before key tables): every url it holds counts as inflight
+    for and committed to it. Reads that table's distinct urls only."""
+    fresh = [t for t in tables
+             if catalog.exists(t) and not catalog.has_keys(INFLIGHT, t)]
+    if fresh:
+        keys = reduce(DataFrame.unionByName, [
+            catalog.read(t).select("url").distinct()
+            .withColumn("table", F.lit(t)) for t in fresh])
+        catalog.append_keys(keys, INFLIGHT)
+        catalog.append_keys(keys, KEYS)
+
+
+def commit_pending(catalog: Catalog, inputs: DataFrame, tables: list[str],
+                   run_stages) -> int:
+    """Run ``run_stages`` over the ``inputs`` whose url is not committed
+    yet and commit its frames exactly once per url; returns the number of
+    urls committed.
+
+    ``run_stages(todo) -> (frames, cleanup)``: ``frames`` lists
+    ``(table, df, page_col)`` to commit, ``cleanup`` (or None) runs after
+    the commit (cache release). A frame whose table is in ``tables`` is a
+    stage table: checkpointed with lineage, and part of the gate. Any
+    other frame (quarantine) is a side table: a plain append.
+
+    Exactly-once bookkeeping is O(keys), never O(committed corpus): two
+    warehouse-wide key tables of ``(url, table)`` rows hold per-table
+    state that every caller shares, whatever its table set —
+
+      * ``committed_urls``: the url's batch committed to the table. A url
+        is pending unless it is committed to every table in ``tables``
+        (one left-anti), whether or not it has rows there (a document
+        without figures has no extracted item);
+      * ``inflight_urls``: a batch STARTED writing the url to the table,
+        appended before the frame writes. A frame whose table already
+        has a pending url inflight (a crash window, or another caller
+        that committed the url there) is left-anti joined against that
+        table (``pending_inputs``), so the re-run neither duplicates rows
+        nor leaves gaps. Steady-state batches read no stage table.
+
+    Each batch appends one small file per table to each key table; on a
+    long-running deployment compact them (Iceberg rewrite_data_files).
+    Works as a ``foreachBatch`` body: the batch is ``inputs``."""
+    _bootstrap_keys(catalog, tables)
+    todo = inputs
+    if catalog.exists(KEYS):
+        # key rows repeat after a crash window: count distinct tables
+        done = (catalog.read_keys(KEYS).where(F.col("table").isin(tables))
+                .groupBy("url").agg(F.size(F.collect_set("table")).alias("n"))
+                .where(F.col("n") == len(tables)))
+        todo = inputs.join(done.select("url"), "url", "left_anti")
+    todo_urls = todo.select("url").distinct().persist()
+    try:
+        n_urls = todo_urls.count()
+        if n_urls == 0:
+            return 0
+        frames, cleanup = run_stages(todo)
+        written = [t for t, _, _ in frames]
+        _bootstrap_keys(catalog, written)   # side tables
+        seen = set()
+        if catalog.exists(INFLIGHT):
+            inflight = catalog.read_keys(INFLIGHT)
+            seen = {r["table"] for r in
+                    inflight.where(F.col("table").isin(written))
+                    .join(todo_urls, "url", "left_semi")
+                    .select("table").distinct().collect()}
+        # mark in-flight BEFORE the frame writes: a crash mid-commit makes
+        # the re-delivered urls suspicious on the next run
+        catalog.append_keys(_key_rows(todo_urls, written), INFLIGHT)
+        for t, df, page_col in frames:
+            fresh = catalog.pending_inputs(df, t) if t in seen else df
+            if t in tables:
+                catalog.checkpoint_stage(fresh, t, page_col=page_col)
+            else:
+                catalog.append(fresh, t)
+        catalog.append_keys(_key_rows(todo_urls, written), KEYS)
+        if cleanup is not None:
+            cleanup()
+        return n_urls
+    finally:
+        todo_urls.unpersist()

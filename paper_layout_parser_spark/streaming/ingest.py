@@ -4,15 +4,17 @@ The reference has NO streaming (SURVEY §2.8) — its incremental story is
 skip-existing file checks. At web scale, new WARC dumps arrive continuously,
 so the rebuild offers a micro-batch wrapper: a file-source stream over the
 pages table directory, each micro-batch pushed through the SAME batch
-pipeline via foreachBatch, committed through the Catalog (exactly-once per
-input key thanks to the left-anti resume primitive + the streaming
-checkpoint). ``trigger(availableNow=True)`` drains the backlog and stops —
-the pattern for both tests and scheduled incremental runs.
+pipeline via foreachBatch and committed through
+``sources.catalog.commit_pending``, the exactly-once committer the batch
+job and the corpus build share (per-table url keys + the streaming
+checkpoint; quarantine rows commit with each batch).
+``trigger(availableNow=True)`` drains the backlog and stops — the pattern
+for both tests and scheduled incremental runs.
 
 Also includes event-stream operators over the driver's ``events`` table
-shape: watermarked tumbling-window aggregation and gap-based
-sessionization (session_window) — the standard late-data-tolerant ops a
-training-data telemetry pipeline needs.
+shape: watermarked tumbling-window aggregation, bounded-state dedup and
+sessionization (a custom stateful operator and its batch twin) — the
+standard late-data-tolerant ops a training-data telemetry pipeline needs.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import PAGES_SCHEMA
-from ..sources.catalog import Catalog
+from ..sources.catalog import Catalog, commit_pending
 
 
 def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
@@ -33,148 +35,42 @@ def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
     )
 
 
-def _bootstrap_key_tables(catalog: Catalog, stage_tables, committed_table: str,
-                          inflight_table: str) -> None:
-    """One-time migration for a warehouse written before key tracking:
-    derive committed (INTERSECTION of stage-table urls — the multi-table
-    exactly-once contract) and inflight (UNION — anything any table has
-    seen) from the stage tables themselves. Runs once per job start, never
-    per micro-batch."""
-    if catalog.exists(committed_table) or catalog.exists(inflight_table):
-        return
-    existing = [t for t, _, _ in stage_tables if catalog.exists(t)]
-    if not existing:
-        return
-    union = None
-    inter = None
-    for t in existing:
-        keys = catalog.read(t).select("url").distinct()
-        union = keys if union is None else union.unionByName(keys).distinct()
-        inter = keys if inter is None else inter.join(keys, "url", "left_semi")
-    catalog.append(union, inflight_table)
-    if len(existing) == len(stage_tables):
-        catalog.append(inter, committed_table)
-
-
 def run_incremental_extraction(
     spark: SparkSession,
     pages_dir: str,
     catalog: Catalog,
     checkpoint_dir: str,
-    table: str = "doc_text",
     tables: list[tuple[str, str, str | None]] | None = None,
-    pipeline_kwargs: dict | None = None,
-    committed_table: str | None = None,
 ):
     """Drain all available input files through the batch pipeline, one
-    micro-batch at a time, checkpointing results + lineage per batch.
-    Returns after the backlog is consumed (availableNow).
+    micro-batch at a time, committing each batch's stage tables (with
+    lineage) and its quarantine rows through ``commit_pending``. Returns
+    after the backlog is consumed (availableNow).
 
     ``tables`` optionally lists (table, PipelineOutputs attr, page_col)
-    stages to commit per batch — same multi-table resume contract as
-    scripts/run_extraction_job.py. Default: doc_text only.
-
-    Exactly-once bookkeeping is O(keys), never O(committed corpus) per
-    batch: two compact url-only tables ride next to the stage tables —
-
-      * ``<committed_table>`` — urls committed to EVERY stage table;
-        the per-batch re-delivery gate is one left-anti against it (the
-        old implementation re-read and intersected ALL stage tables every
-        micro-batch, so a long-running ingest got slower per batch);
-      * ``<committed_table>__inflight`` — urls a batch STARTED (appended
-        before the stage writes). A url in inflight but not committed
-        marks a crash window; only then does the per-table left-anti
-        safety net (pending_inputs, which reads the stage tables) engage.
-        Steady-state batches never read a stage table for gating at all.
-
-    The key tables are a cache over the authoritative per-table state: a
-    crash between the stage appends and the committed append re-delivers
-    the batch, the inflight mark flags it suspicious, and the per-table
-    anti-join dedupes — no gaps, no duplicates. Pre-existing warehouses
-    without key tables are migrated once at job start. Each batch appends
-    one small file per key table; on a long-running Iceberg deployment
-    schedule a rewrite_data_files compaction on them (they are url-only,
-    so compaction is cheap), or rebuild them from the stage tables via the
-    bootstrap path."""
+    stages to commit per batch. Default: doc_text only. A re-delivered
+    file is a no-op: its urls are gated by the committed url keys."""
     from ..plans.pipeline import run_pipeline
 
-    kwargs = pipeline_kwargs or {}
-    stage_tables = tables or [(table, "doc_text", None)]
-    if committed_table is None:
-        committed_table = (
-            "_".join(t for t, _, _ in stage_tables) + "__committed_urls"
-        )
-    _bootstrap_key_tables(catalog, stage_tables, committed_table,
-                          committed_table + "__inflight")
+    stage_tables = tables or [("doc_text", "doc_text", None)]
 
     def run_stages(todo: DataFrame):
-        out = run_pipeline(todo, **kwargs)
-        return ([(t, getattr(out, attr), page_col)
-                 for t, attr, page_col in stage_tables],
-                out.unpersist)
+        out = run_pipeline(todo)
+        frames = [(t, getattr(out, attr), page_col)
+                  for t, attr, page_col in stage_tables]
+        return frames + [("quarantine", out.quarantine, None)], out.unpersist
 
-    process_batch = exactly_once_batch_committer(
-        catalog, committed_table, run_stages
-    )
     q = (
         stream_pages(spark, pages_dir)
-        .writeStream.foreachBatch(process_batch)
+        .writeStream.foreachBatch(
+            lambda batch, _epoch: commit_pending(
+                catalog, batch, [t for t, _, _ in stage_tables], run_stages))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     return q
-
-
-def exactly_once_batch_committer(catalog: Catalog, committed_table: str,
-                                 run_stages):
-    """The compact key-table exactly-once commit path as a reusable
-    ``foreachBatch`` callable — shared by the availableNow backlog drain
-    above and any steady-trigger (``processingTime``) deployment.
-
-    ``run_stages(todo_df) -> (stages, cleanup)`` where ``stages`` is a
-    list of ``(table, df, page_col)`` to commit for this batch and
-    ``cleanup`` (or None) runs after the commit (cache release).
-
-    Contract (the docstring of run_incremental_extraction has the full
-    story): one left-anti against the url-only ``committed_table`` gates
-    re-delivery in O(keys); ``<committed_table>__inflight`` is appended
-    BEFORE the stage writes so a crash mid-commit makes the re-delivered
-    urls suspicious on the next run, and only then does the per-table
-    ``pending_inputs`` safety net (which reads stage tables) engage."""
-    inflight_table = committed_table + "__inflight"
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        todo = batch_df
-        if catalog.exists(committed_table):
-            done = catalog.read(committed_table).select("url")
-            todo = batch_df.join(done, "url", "left_anti")
-        if todo.limit(1).count() == 0:
-            return
-        todo_urls = todo.select("url").distinct().persist()
-        suspicious = False
-        if catalog.exists(inflight_table):
-            inflight = catalog.read(inflight_table).select("url")
-            suspicious = (
-                todo_urls.join(inflight, "url", "left_semi").limit(1).count() > 0
-            )
-        # mark in-flight BEFORE the stage writes: a crash mid-commit makes
-        # the re-delivered urls suspicious on the next run
-        catalog.append(todo_urls, inflight_table)
-        stages, cleanup = run_stages(todo)
-        for t, df, page_col in stages:
-            # stage tables are only re-read for dedup when a crash window
-            # was detected; the steady-state path writes straight through
-            fresh = (catalog.pending_inputs(df, t, key="url")
-                     if suspicious else df)
-            catalog.checkpoint_stage(fresh, t, url_col="url", page_col=page_col)
-        catalog.append(todo_urls, committed_table)
-        if cleanup is not None:
-            cleanup()
-        todo_urls.unpersist()
-
-    return process_batch
 
 
 def stream_dedup(df: DataFrame, keys: list[str], ts_col: str = "ts",
@@ -204,22 +100,6 @@ def windowed_event_counts(events: DataFrame, window: str = "5 minutes",
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
             "event_type", "n_events", "sum_value",
-        )
-    )
-
-
-def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Gap-based sessions per user via session_window (streaming-native;
-    the batch twin is the lag+cumsum window pattern)."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.withWatermark("ts", gap)
-        .groupBy(F.session_window("ts", gap).alias("s"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "user_id", "n_events", "sum_value",
         )
     )
 

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from paper_layout_parser_spark.corpus import build_pages
 from paper_layout_parser_spark.plans.corpus_build import build_training_corpus
 
-from .conftest import SF_SMALL
+from .conftest import CORRUPT_HTML, SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -184,3 +184,27 @@ def test_checkpointed_build_is_idempotent(spark, tmp_path):
     assert got == want and got
     # nothing was pending, so no new lineage run was recorded
     assert cat.read("corpus_extracted__lineage").count() == n_lineage
+
+
+def test_checkpointed_build_quarantines_each_bad_page_once(spark, tmp_path):
+    """With catalog= the extraction phase commits its quarantine rows next
+    to corpus_extracted: a corrupt document is one quarantine row, and a
+    second build on the same warehouse adds none."""
+    import datetime
+
+    from paper_layout_parser_spark import synthdata as sd
+    from paper_layout_parser_spark.corpus import PAGES_SCHEMA
+    from paper_layout_parser_spark.sources.catalog import Catalog
+
+    corrupt = spark.createDataFrame(
+        [("u_corrupt", datetime.datetime(2020, 1, 1), CORRUPT_HTML, "", "en")],
+        PAGES_SCHEMA)
+    pages = build_pages(spark, SF_SMALL).where(
+        F.col("url").isin([sd.url_of(d) for d in range(3)])
+    ).unionByName(corrupt)
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    for _ in range(2):
+        build_training_corpus(pages, lang="und", min_quality=0.0, catalog=cat)
+        q = cat.read("quarantine").collect()
+        assert [r["url"] for r in q] == ["u_corrupt"]
+        assert cat.read("corpus_extracted").count() == 3

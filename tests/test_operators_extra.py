@@ -12,7 +12,28 @@ from paper_layout_parser_spark.corpus import build_pages
 from paper_layout_parser_spark.operators.stats import document_result, result_json
 from paper_layout_parser_spark.plans.pipeline import run_pipeline
 
-from .conftest import SF_SMALL
+from .conftest import CORRUPT_HTML, SF_SMALL
+
+
+def pages_of(spark, rows):
+    """A pages table from (url, html) pairs."""
+    return spark.createDataFrame(rows, "url string, html binary").select(
+        "url",
+        F.lit("2020-01-01").cast("timestamp").alias("warc_ts"),
+        "html",
+        F.lit("").alias("text"),
+        F.lit("en").alias("lang"),
+    )
+
+
+def import_run_job():
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+    from run_extraction_job import run_job
+
+    return run_job
 
 
 @pytest.fixture(scope="module")
@@ -220,10 +241,12 @@ class TestStreamingIngest:
         cat = Catalog(spark, str(tmp_path / "wh"))
         reads: list[str] = []
         orig_read = Catalog.read
-        monkeypatch.setattr(
-            Catalog, "read",
-            lambda self, table: (reads.append(table), orig_read(self, table))[1],
-        )
+        for name in ("read", "read_keys"):
+            monkeypatch.setattr(
+                Catalog, name,
+                lambda self, table, orig=getattr(Catalog, name):
+                    (reads.append(table), orig(self, table))[1],
+            )
         stage = [("doc_text", "doc_text", None), ("matched", "matched", None)]
 
         def slice_docs(lo, hi):
@@ -236,19 +259,19 @@ class TestStreamingIngest:
         slice_docs(0, 5).write.mode("overwrite").parquet(pages_dir)
         run_incremental_extraction(spark, pages_dir, cat,
                                    str(tmp_path / "ck1"), tables=stage)
-        # steady state: each stage table read exactly once (the
-        # checkpoint_stage return), never for gating/anti-joins
-        assert reads.count("doc_text") == 1 and reads.count("matched") == 1
+        # steady state: no stage table is read, neither for gating nor
+        # for anti-joins nor after the write
+        assert reads.count("doc_text") == 0 and reads.count("matched") == 0
 
         # many more batches, corpus growing: stage-table reads per batch
-        # stay at 1 (write path) regardless of committed size
+        # stay at 0 regardless of committed size
         for lo in (6, 10, 14):
             reads.clear()
             slice_docs(lo, lo + 3).write.mode("append").parquet(pages_dir)
             run_incremental_extraction(spark, pages_dir, cat,
                                        str(tmp_path / f"ck_{lo}"), tables=stage)
-            assert reads.count("doc_text") == 1, reads
-            assert reads.count("matched") == 1, reads
+            assert reads.count("doc_text") == 0, reads
+            assert reads.count("matched") == 0, reads
 
         # all-committed re-delivery (fresh stream checkpoint, same files):
         # the gate consults ONLY the committed key table — zero stage reads
@@ -279,28 +302,27 @@ class TestStreamingIngest:
         cat = Catalog(spark, str(tmp_path / "wh"))
         ckpt = str(tmp_path / "ckpt")
 
-        orig_append = Catalog.append
+        orig_append_keys = Catalog.append_keys
 
-        def crashing_append(self, df, table):
-            if table.endswith("__committed_urls"):
+        def crashing_append_keys(self, keys, table):
+            if table == "committed_urls":
                 raise RuntimeError("simulated crash before committed append")
-            return orig_append(self, df, table)
+            return orig_append_keys(self, keys, table)
 
-        monkeypatch.setattr(Catalog, "append", crashing_append)
+        monkeypatch.setattr(Catalog, "append_keys", crashing_append_keys)
         with pytest.raises(Exception, match="simulated crash"):
             run_incremental_extraction(spark, pages_dir, cat, ckpt)
-        monkeypatch.setattr(Catalog, "append", orig_append)
+        monkeypatch.setattr(Catalog, "append_keys", orig_append_keys)
 
         # stage data landed, committed mark didn't -> crash window
-        assert cat.exists("doc_text") and not cat.exists(
-            "doc_text__committed_urls")
+        assert cat.exists("doc_text") and not cat.exists("committed_urls")
         # resume with the same stream checkpoint: batch re-delivers,
         # inflight flags it, anti-join dedupes
         run_incremental_extraction(spark, pages_dir, cat, ckpt)
         committed = cat.read("doc_text")
         assert committed.select("url").distinct().count() == 8
         assert committed.groupBy("url").count().where("count > 1").count() == 0
-        assert cat.exists("doc_text__committed_urls")
+        assert cat.has_keys("committed_urls", "doc_text")
 
     def test_streaming_multi_table_exactly_once(self, spark, tmp_path, small_pages):
         """The streaming ingest honors the same multi-table resume contract
@@ -335,14 +357,9 @@ class TestStreamingIngest:
         gaps: a url committed to doc_text but not to extracted_items /
         doc_stats is reprocessed on the next run, and the already-committed
         table gets no duplicate rows."""
-        import os
-        import sys
-
-        sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-        from run_extraction_job import run_job
-
         from paper_layout_parser_spark.sources.catalog import Catalog
 
+        run_job = import_run_job()
         cat = Catalog(spark, str(tmp_path / "wh"))
         pages10 = small_pages.limit(10).persist()
 
@@ -370,6 +387,169 @@ class TestStreamingIngest:
         assert cat.read("crops").select("url").distinct().count() == 10
         assert cat.read("doc_text").groupBy("url").count().where("count > 1").count() == 0
         assert run_job(spark, pages10, cat, full=True) == 0
+
+    def test_second_run_job_is_a_no_op(self, spark, tmp_path):
+        """A url counts as committed once its batch commits, whether or not
+        it has rows in every table: a second run over a corrupt document
+        (a quarantine row only) and a document without a figure or table
+        (no extracted item) processes nothing and adds no row and no
+        lineage run to any table."""
+        import os
+
+        from paper_layout_parser_spark.sources.catalog import Catalog
+
+        run_job = import_run_job()
+        no_items = 40   # Title and Text blocks only
+        assert not {b["class_name"] for p in sd.doc_pages(no_items)
+                    for b in p["blocks"]} & {"Figure", "Table"}
+        pages = pages_of(spark, [
+            (sd.url_of(1), sd.doc_html(1)),
+            (sd.url_of(no_items), sd.doc_html(no_items)),
+            ("u_corrupt", CORRUPT_HTML),
+        ])
+        wh = tmp_path / "wh"
+        cat = Catalog(spark, str(wh))
+        assert run_job(spark, pages, cat) == 3
+        items = {r["url"] for r in cat.read("extracted_items").collect()}
+        assert items == {sd.url_of(1)}
+        assert [r["url"] for r in cat.read("quarantine").collect()] == ["u_corrupt"]
+
+        def snapshot():
+            tables = sorted(os.listdir(wh))
+            return (
+                {t: cat.read(t).count() for t in tables},
+                {t: {r["run_id"] for r in cat.read(t).collect()}
+                 for t in tables if t.endswith("__lineage")},
+            )
+
+        before = snapshot()
+        assert run_job(spark, pages, cat) == 0
+        assert snapshot() == before
+
+    def test_ingest_commits_quarantine_once(self, spark, tmp_path, monkeypatch):
+        """A corrupt page in a drained file becomes exactly one quarantine
+        row, across a crash before the committed-key append and across
+        re-delivery of the file."""
+        import glob
+        import shutil
+
+        from paper_layout_parser_spark.sources.catalog import Catalog
+        from paper_layout_parser_spark.streaming.ingest import (
+            run_incremental_extraction,
+        )
+
+        pages_dir = tmp_path / "pages_in"
+        pages_of(spark, [(sd.url_of(1), sd.doc_html(1)),
+                         ("u_corrupt", CORRUPT_HTML)]
+                 ).coalesce(1).write.parquet(str(pages_dir))
+        cat = Catalog(spark, str(tmp_path / "wh"))
+        ckpt = str(tmp_path / "ckpt")
+
+        orig_append_keys = Catalog.append_keys
+
+        def crashing_append_keys(self, keys, table):
+            if table == "committed_urls":
+                raise RuntimeError("simulated crash before committed append")
+            return orig_append_keys(self, keys, table)
+
+        monkeypatch.setattr(Catalog, "append_keys", crashing_append_keys)
+        with pytest.raises(Exception, match="simulated crash"):
+            run_incremental_extraction(spark, str(pages_dir), cat, ckpt)
+        monkeypatch.setattr(Catalog, "append_keys", orig_append_keys)
+        assert cat.read("quarantine").count() == 1
+
+        run_incremental_extraction(spark, str(pages_dir), cat, ckpt)
+        q = cat.read("quarantine").collect()
+        assert [(r["url"], r["stage"]) for r in q] == [("u_corrupt", "rasterize")]
+
+        (part,) = glob.glob(str(pages_dir / "*.parquet"))
+        shutil.copyfile(part, pages_dir / "redelivered.parquet")
+        run_incremental_extraction(spark, str(pages_dir), cat, ckpt)
+        assert cat.read("quarantine").count() == 1
+        assert cat.read("doc_text").count() == 1
+
+    def test_table_sets_share_one_committed_state(self, spark, tmp_path):
+        """Callers with different table sets share one warehouse: run_job
+        over A, then --full over A+B, then run_job over A+B. The last
+        call finds everything committed, and no table holds a duplicate
+        row."""
+        from paper_layout_parser_spark.sources.catalog import Catalog
+
+        run_job = import_run_job()
+        a = [(sd.url_of(1), sd.doc_html(1)), ("u_corrupt_a", CORRUPT_HTML)]
+        b = [(sd.url_of(2), sd.doc_html(2)), ("u_corrupt_b", CORRUPT_HTML)]
+        cat = Catalog(spark, str(tmp_path / "wh"))
+        assert run_job(spark, pages_of(spark, a), cat) == 2
+        assert run_job(spark, pages_of(spark, a + b), cat, full=True) == 4
+        assert run_job(spark, pages_of(spark, a + b), cat) == 0
+        assert run_job(spark, pages_of(spark, a + b), cat, full=True) == 0
+
+        good = {sd.url_of(1), sd.url_of(2)}
+        for t in ("doc_text", "extracted_items", "doc_stats", "doc_results",
+                  "crops", "quarantine"):
+            df = cat.read(t)
+            assert df.count() == df.distinct().count(), t
+            want = {"u_corrupt_a", "u_corrupt_b"} if t == "quarantine" else good
+            assert {r["url"] for r in df.select("url").collect()} == want, t
+        assert cat.read("doc_text").count() == 2
+        assert cat.read("quarantine").count() == 2
+
+    def test_ingest_and_run_job_share_one_committed_state(self, spark, tmp_path):
+        """The default ingest (doc_text and quarantine) and run_job on one
+        warehouse: run_job over A, the ingest over A+B, run_job over A+B.
+        The ingest commits only B, run_job then fills only the tables the
+        ingest did not write, and a re-delivered ingest adds nothing."""
+        from paper_layout_parser_spark.sources.catalog import Catalog
+        from paper_layout_parser_spark.streaming.ingest import (
+            run_incremental_extraction,
+        )
+
+        run_job = import_run_job()
+        pages_dir = tmp_path / "pages_in"
+        a = [(sd.url_of(1), sd.doc_html(1)), ("u_corrupt_a", CORRUPT_HTML)]
+        b = [(sd.url_of(2), sd.doc_html(2)), ("u_corrupt_b", CORRUPT_HTML)]
+        pages_of(spark, a).coalesce(1).write.parquet(str(pages_dir / "a"))
+        cat = Catalog(spark, str(tmp_path / "wh"))
+        assert run_job(spark, spark.read.parquet(str(pages_dir / "a")), cat) == 2
+        pages_of(spark, b).coalesce(1).write.parquet(str(pages_dir / "b"))
+        for f in ("a", "b"):
+            (part,) = (pages_dir / f).glob("*.parquet")
+            part.rename(pages_dir / f"{f}.parquet")
+        run_incremental_extraction(spark, str(pages_dir), cat,
+                                   str(tmp_path / "ck1"))
+        assert cat.read("doc_text").count() == 2
+        everything = spark.read.parquet(*(str(pages_dir / f"{f}.parquet")
+                                          for f in ("a", "b")))
+        assert run_job(spark, everything, cat) == 2
+        assert run_job(spark, everything, cat) == 0
+        run_incremental_extraction(spark, str(pages_dir), cat,
+                                   str(tmp_path / "ck2"))
+
+        for t in ("doc_text", "extracted_items", "doc_stats", "quarantine"):
+            df = cat.read(t)
+            assert df.count() == df.distinct().count(), t
+        assert cat.read("doc_text").count() == 2
+        assert cat.read("doc_stats").count() == 2
+        assert sorted(r["url"] for r in cat.read("quarantine").collect()) == [
+            "u_corrupt_a", "u_corrupt_b"]
+
+    def test_run_job_then_corpus_build_quarantine_once(self, spark, tmp_path):
+        """run_job and the corpus build on one warehouse commit a corrupt
+        page's quarantine row once between them."""
+        from paper_layout_parser_spark.plans.corpus_build import (
+            build_training_corpus,
+        )
+        from paper_layout_parser_spark.sources.catalog import Catalog
+
+        run_job = import_run_job()
+        pages = pages_of(spark, [(sd.url_of(1), sd.doc_html(1)),
+                                 ("u_corrupt", CORRUPT_HTML)])
+        cat = Catalog(spark, str(tmp_path / "wh"))
+        assert run_job(spark, pages, cat) == 2
+        build_training_corpus(pages, lang="und", min_quality=0.0, catalog=cat)
+        assert [r["url"] for r in cat.read("quarantine").collect()] == ["u_corrupt"]
+        assert cat.read("corpus_extracted").count() == 1
+        assert run_job(spark, pages, cat) == 0
 
     def test_stream_dedup_bounded_state(self, spark, tmp_path):
         """dropDuplicatesWithinWatermark: re-delivered rows inside the

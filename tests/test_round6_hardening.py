@@ -14,10 +14,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from paper_layout_parser_spark.sources.catalog import Catalog
-from paper_layout_parser_spark.streaming.ingest import (
-    exactly_once_batch_committer,
-)
+from paper_layout_parser_spark.sources.catalog import Catalog, commit_pending
 
 
 def test_exactly_once_under_processing_time_trigger(spark, tmp_path):
@@ -44,7 +41,8 @@ def test_exactly_once_under_processing_time_trigger(spark, tmp_path):
     q = (
         rate.writeStream
         .foreachBatch(
-            exactly_once_batch_committer(cat, "rate_committed", run_stages))
+            lambda batch, _epoch: commit_pending(cat, batch, ["rate_docs"],
+                                                 run_stages))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="500 milliseconds")
         .start()
@@ -82,11 +80,13 @@ def test_exactly_once_under_processing_time_trigger(spark, tmp_path):
     # the stage table but not committed is exactly the designed crash
     # window and must carry its inflight mark (the next run's
     # pending_inputs safety net keys off it)
-    committed = {r["url"] for r in
-                 cat.read("rate_committed").distinct().collect()}
+    def keys(table):
+        return {r["url"] for r in cat.read(table)
+                .where(F.col("table") == "rate_docs").select("url").collect()}
+
+    committed = keys("committed_urls")
     doc_urls = {r["url"] for r in docs.select("url").collect()}
-    inflight = {r["url"] for r in
-                cat.read("rate_committed__inflight").distinct().collect()}
+    inflight = keys("inflight_urls")
     assert committed <= doc_urls
     assert doc_urls - committed <= inflight
     assert committed <= inflight

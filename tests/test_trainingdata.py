@@ -543,7 +543,7 @@ class TestSimilarity:
 
 class TestCatalogResume:
     def test_checkpoint_lineage_and_resume(self, spark, tmp_path):
-        from paper_layout_parser_spark.sources.catalog import Catalog, run_resumable
+        from paper_layout_parser_spark.sources.catalog import Catalog, commit_pending
 
         cat = Catalog(spark, str(tmp_path / "wh"))
         df1 = spark.createDataFrame(
@@ -560,7 +560,8 @@ class TestCatalogResume:
         agg = lineage.agg(F.sum("urls_in"), F.sum("rows_out")).collect()[0]
         assert agg[1] == 3
 
-        # resume: only the new url is processed
+        # resume: only the new url is processed (the committed keys are
+        # bootstrapped from the table checkpointed above)
         inputs = spark.createDataFrame(
             [("u1",), ("u2",), ("u3",)], "url string"
         )
@@ -568,15 +569,17 @@ class TestCatalogResume:
 
         def stage(todo):
             calls.append(todo.count())
-            return todo.withColumn("page_no", F.lit(1)).withColumn("text", F.lit("z"))
+            return [("stage1", todo.withColumn("page_no", F.lit(1))
+                     .withColumn("text", F.lit("z")), "page_no")], None
 
-        out = run_resumable(cat, inputs, "stage1", stage)
+        assert commit_pending(cat, inputs, ["stage1"], stage) == 1
         assert calls == [1]           # only u3 was pending
+        out = cat.read("stage1")
         assert out.select("url").distinct().count() == 3
         # second run: nothing pending, no new work
-        out2 = run_resumable(cat, inputs, "stage1", stage)
+        assert commit_pending(cat, inputs, ["stage1"], stage) == 0
         assert calls == [1]
-        assert out2.count() == out.count()
+        assert cat.read("stage1").count() == out.count()
 
 
 class TestVisualization:
