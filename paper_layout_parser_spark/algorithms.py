@@ -1,13 +1,24 @@
-"""Pure-Python per-page algorithms shared by the Spark UDFs and the test
-oracle: recursive XY-cut reading order, clipped text extraction, and the
-reference's greedy caption assignment.
+"""Pure-Python per-page algorithms run inside the fused detect stage and
+shared with the test oracle: recursive XY-cut reading order, clipped text
+extraction, and the reference's caption matching (greedy assignment).
 
-These run on O(10)-row groups inside Arrow-batched UDFs; keeping them here
-(dependency-free) means the oracle and the distributed path execute the
-*same* bytes, and byte-identity failures can only come from orchestration.
+These run on one page's detections inside the Arrow-batched mapInPandas
+stage; keeping them here (no Spark, no pandas) means the oracle and the
+distributed path execute the *same* bytes, and byte-identity failures can
+only come from orchestration.
 """
 
 from __future__ import annotations
+
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
+from .synthdata import (
+    FIGURE_CAPTION_CLASSES,
+    FIGURE_CLASSES,
+    TABLE_CAPTION_CLASSES,
+    TABLE_CLASSES,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -109,3 +120,67 @@ def greedy_assign(pairs: list[tuple[int, int, float]]) -> dict[int, int]:
             used_items.add(item)
             used_caps.add(cap)
     return result
+
+
+# ---------------------------------------------------------------------------
+# per-page caption matching (J1-J3 — caption_matcher.py:21-199)
+# ---------------------------------------------------------------------------
+
+# the reference defaults (caption_matcher.py:21-41): figures search BELOW,
+# tables ABOVE, within 100 px, overlapping >= 0.3 of the smaller width
+MAX_VERTICAL_DISTANCE = 100.0
+MIN_HORIZONTAL_OVERLAP = 0.3
+_SEARCHES = (  # (item classes, caption classes, caption below the item)
+    (FIGURE_CLASSES, FIGURE_CAPTION_CLASSES, True),
+    (TABLE_CLASSES, TABLE_CAPTION_CLASSES, False),
+)
+
+
+def horizontal_overlap(a: tuple, b: tuple) -> float:
+    """Overlap length of two (x1, y1, x2, y2) boxes relative to the SMALLER
+    width (caption_matcher.py:43-64); 0.0 when that width is degenerate."""
+    overlap = max(0.0, min(a[2], b[2]) - max(a[0], b[0]))
+    min_width = min(a[2] - a[0], b[2] - b[0])
+    return 0.0 if min_width <= 0 else overlap / min_width
+
+
+def match_page_captions(names: list[str],
+                        boxes: list[tuple[float, float, float, float]]
+                        ) -> list[int | None]:
+    """Caption assignment on one page, per item type: a pair is valid iff
+    the caption lies in the type's search direction no more than
+    MAX_VERTICAL_DISTANCE away and overlaps at least MIN_HORIZONTAL_OVERLAP
+    (caption_matcher.py:66-131); valid pairs go to ``greedy_assign`` in
+    item-major detection order.
+
+    ``names`` are normalized class names and ``boxes`` (x1, y1, x2, y2),
+    both in detection order. Returns, per detection, the position of the
+    caption assigned to it: None for unmatched items and for every other
+    class."""
+    assigned: list[int | None] = [None] * len(names)
+    for item_classes, cap_classes, below in _SEARCHES:
+        caps = [j for j, n in enumerate(names) if n in cap_classes]
+        pairs = []
+        for i, name in enumerate(names):
+            if name not in item_classes:
+                continue
+            item = boxes[i]
+            for j in caps:
+                cap = boxes[j]
+                dist = cap[1] - item[3] if below else item[1] - cap[3]
+                if (0 <= dist <= MAX_VERTICAL_DISTANCE and
+                        horizontal_overlap(item, cap) >= MIN_HORIZONTAL_OVERLAP):
+                    pairs.append((i, j, dist))
+        for i, j in greedy_assign(pairs).items():
+            assigned[i] = j
+    return assigned
+
+
+def spark_round(x: float, digits: int) -> float:
+    """``x`` as Spark's ``round(x, digits)`` returns it for a double:
+    HALF_UP on the shortest decimal string of ``x`` (java BigDecimal.valueOf),
+    so 300.005 -> 300.01 where Python's ``round`` gives 300.0."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(float(x))).quantize(Decimal(1).scaleb(-digits),
+                                                   ROUND_HALF_UP))

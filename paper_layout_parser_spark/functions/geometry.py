@@ -2,8 +2,6 @@
 
 These are the JVM-side (whole-stage-codegen) equivalents of the reference's
 per-pair Python math:
-  * horizontal overlap ratio — caption_matcher.py:43-64
-  * directional vertical distance — caption_matcher.py:66-100
   * IoU — benchmarks/caption_evaluator/evaluator.py:121-152
 
 Bboxes are passed as four explicit double columns (x1, y1, x2, y2) so the
@@ -14,37 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def horizontal_overlap(ax1: Column, ax2: Column, bx1: Column, bx2: Column) -> Column:
-    """Overlap length relative to the SMALLER width (caption_matcher.py:43-64);
-    0.0 when the smaller width is degenerate."""
-    overlap = F.greatest(F.lit(0.0), F.least(ax2, bx2) - F.greatest(ax1, bx1))
-    min_width = F.least(ax2 - ax1, bx2 - bx1)
-    return F.when(min_width <= 0, F.lit(0.0)).otherwise(overlap / min_width)
-
-
-def directional_distance(
-    item_y1: Column, item_y2: Column, cap_y1: Column, cap_y2: Column, direction: str
-) -> tuple[Column, Column]:
-    """(distance, is_valid_direction) per caption_matcher.py:66-100.
-
-    direction: 'below' (figure default), 'above' (table default), or 'both'.
-    """
-    dist_below = cap_y1 - item_y2
-    dist_above = item_y1 - cap_y2
-    if direction == "below":
-        return F.abs(dist_below), dist_below >= 0
-    if direction == "above":
-        return F.abs(dist_above), dist_above >= 0
-    if direction == "both":
-        dist = (
-            F.when(dist_below >= 0, dist_below)
-            .when(dist_above >= 0, dist_above)
-            .otherwise(F.lit(0.0))
-        )
-        return dist, F.lit(True)
-    raise ValueError(f"unknown direction {direction!r}")
 
 
 def iou(

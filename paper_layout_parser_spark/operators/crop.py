@@ -76,8 +76,9 @@ def crop_bounds(
     where page_rect_{w,h} = page pixel dims * 72/dpi (the page rect fitz
     reports for a page rendered at ``dpi``). The reference reads that rect
     PER PAGE (figure_extractor.py:117-133 ``page.rect``), so the default
-    here clamps against the row's own ``width``/``height`` columns (carried
-    from the rasterized page through match_captions); pass scalar
+    here clamps against the row's own ``width``/``height`` columns (the
+    item's page dims, which the fused detect stage emits and
+    match_captions keeps); pass scalar
     ``page_w``/``page_h`` only for a corpus known to be uniform-size.
     The pixel rect is the same rect at zoom = dpi/72 (what the re-render
     rasterizes).

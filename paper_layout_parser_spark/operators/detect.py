@@ -1,12 +1,11 @@
 """Page -> detections flatMap (reference: layout_detector.py:96-194).
 
 ``rasterize_detect_enrich`` is the package's one detect path: render,
-batched model inference, clipped text and XY-cut reading order in a single
-mapInPandas stage with the iterator-init pattern. The backend (model) is
-constructed ONCE per task, then fed whole Arrow batches — the reference's
-``detect_batch`` (layout_detector.py:96-109) is a sequential per-image
-loop; this version is genuinely batched and, on a real cluster, pinned to
-GPU executors via a resource profile.
+batched model inference, clipped text, XY-cut reading order and caption
+matching in a single mapInPandas stage with the iterator-init pattern. The
+backend (model) is constructed ONCE per task, then fed whole Arrow batches
+— the reference's ``detect_batch`` (layout_detector.py:96-109) is a
+sequential per-image loop; this version is genuinely batched.
 
 Backends are pluggable behind one schema:
   * StubDetectorBackend — deterministic: decodes the synthetic page payload
@@ -32,6 +31,10 @@ RAW_DETECTION_SCHEMA = (
     "class_id int, raw_name string, confidence double, "
     "x1 double, y1 double, x2 double, y2 double"
 )
+
+# the caption each figure/table row carries (null on every other row)
+CAPTION_BOX = ("cap_x1", "cap_y1", "cap_x2", "cap_y2")
+CAPTION_COLUMNS = ("cap_idx", *CAPTION_BOX, "cap_text")
 
 # thresholds from the reference config (config/config.yaml:7-12; main.py:204-205)
 DEFAULT_CONF = 0.25
@@ -92,11 +95,10 @@ class YoloDetectorBackend:
 
 
 def rasterize_detect_enrich(planned: DataFrame,
-                            backend_factory=StubDetectorBackend,
-                            profile=None) -> DataFrame:
+                            backend_factory=StubDetectorBackend) -> DataFrame:
     """Plan chunks -> ONE mapInPandas stage doing rasterize (real render
     work, checksum semantics identical to rasterize._render_page) +
-    detection + clipped text + XY-cut.
+    detection + clipped text + XY-cut + caption matching.
 
     Each page crosses the JVM->Python boundary once: no page table is
     materialized between render and inference, and the page payload is
@@ -110,8 +112,16 @@ def rasterize_detect_enrich(planned: DataFrame,
     when the whole batch fails. Both paths are pinned row for row against
     a pure-Python spec of the synthetic corpus (tests/test_pipeline.py).
 
-    Emits RAW names/values plus ``reading_order_rank``/``text`` and the
-    quarantine columns ``stage``/``error`` ('rasterize' for chunk-decode
+    Caption matching needs only one page's detections, so it runs here,
+    not as a join and a shuffle downstream: each figure or table row
+    carries the caption ``algorithms.match_page_captions`` assigns it
+    (CAPTION_COLUMNS: its ``det_idx``, raw bbox and clipped text). The
+    matcher decides on the values normalize_detections emits: normalized
+    class names and bboxes rounded the way Spark's ``round`` rounds.
+
+    Emits RAW names/values plus ``reading_order_rank``/``text``, the
+    caption columns and the quarantine columns ``stage``/``error``
+    ('rasterize' for chunk-decode
     and render failures, 'detect' for inference/enrichment failures).
     Every successfully
     rendered page also yields one page-tally row (``stage='page'``,
@@ -120,12 +130,19 @@ def rasterize_detect_enrich(planned: DataFrame,
     page counts come from these rows, not from a second render pass.
     Detection rows carry ``stage`` null; normalize_detections passes
     ``stage`` and ``error`` through."""
-    from ..algorithms import clip_text, xy_cut_order
+    from ..algorithms import (
+        clip_text,
+        match_page_captions,
+        spark_round,
+        xy_cut_order,
+    )
+    from ..synthdata import normalize_class_name
     from .rasterize import _render_page
 
     schema = (RAW_DETECTION_SCHEMA
-              + ", reading_order_rank int, text string, "
-              "stage string, error string")
+              + ", reading_order_rank int, text string, cap_idx int, "
+              "cap_x1 double, cap_y1 double, cap_x2 double, cap_y2 double, "
+              "cap_text string, stage string, error string")
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         backend = backend_factory()  # once per task, never per row/batch
@@ -135,8 +152,8 @@ def rasterize_detect_enrich(planned: DataFrame,
                 "url": [], "page_no": [], "width": [], "height": [],
                 "det_idx": [], "class_id": [], "raw_name": [],
                 "confidence": [], "x1": [], "y1": [], "x2": [], "y2": [],
-                "reading_order_rank": [], "text": [], "stage": [],
-                "error": [],
+                "reading_order_rank": [], "text": [],
+                **{c: [] for c in CAPTION_COLUMNS}, "stage": [], "error": [],
             }
 
             def emit_page_row(url, page_no, w, h, stage, error):
@@ -151,10 +168,9 @@ def rasterize_detect_enrich(planned: DataFrame,
                 cols["class_id"].append(-1)
                 cols["raw_name"].append(None)
                 cols["confidence"].append(None)
-                for c in ("x1", "y1", "x2", "y2"):
+                for c in ("x1", "y1", "x2", "y2", "text", *CAPTION_COLUMNS):
                     cols[c].append(None)
                 cols["reading_order_rank"].append(-1)
-                cols["text"].append(None)
                 cols["stage"].append(stage)
                 cols["error"].append(error)
 
@@ -219,6 +235,10 @@ def rasterize_detect_enrich(planned: DataFrame,
                     for rank, pos in enumerate(order):
                         ranks[pos] = rank
                     texts = [clip_text(blocks, *d["bbox"]) for d in dets]
+                    caption_of = match_page_captions(
+                        [normalize_class_name(d["raw_name"]) for d in dets],
+                        [tuple(spark_round(v, 2) for v in d["bbox"])
+                         for d in dets])
                 except Exception as exc:  # noqa: BLE001 — quarantine
                     emit_error(url, page_no, w, h, "detect", exc)
                     continue
@@ -238,23 +258,27 @@ def rasterize_detect_enrich(planned: DataFrame,
                     cols["y2"].append(y2)
                     cols["reading_order_rank"].append(ranks[i])
                     cols["text"].append(texts[i])
+                    j = caption_of[i]
+                    cap = ((None,) * 6 if j is None
+                           else (j, *dets[j]["bbox"], texts[j]))
+                    for c, v in zip(CAPTION_COLUMNS, cap):
+                        cols[c].append(v)
                     cols["stage"].append(None)
                     cols["error"].append(None)
             yield pd.DataFrame(cols)
 
-    return planned.mapInPandas(run, schema=schema, profile=profile)
+    return planned.mapInPandas(run, schema=schema)
 
 
 def normalize_detections(raw: DataFrame) -> DataFrame:
     """Native post-processing: class-name normalization exactly as
     layout_detector.py:143-146 (``name.replace('_','-').title().replace(' ','-')``
     == translate to spaces -> initcap -> translate back), confidence rounded
-    to 4 dp and bbox to 2 dp (layout_detector.py:46-58). Pure column exprs —
-    whole-stage codegen, no Python. Passes through the enrichment and
-    quarantine columns (reading_order_rank, text, stage, error) when the
-    fused detect path produced them."""
-    extra = [c for c in ("reading_order_rank", "text", "stage", "error")
-             if c in raw.columns]
+    to 4 dp and bbox to 2 dp (layout_detector.py:46-58), the caption bbox
+    too. Pure column exprs — whole-stage codegen, no Python. Passes through
+    the enrichment and caption columns, and the quarantine columns
+    (stage, error) that the caller has not dropped."""
+    extra = [c for c in ("stage", "error") if c in raw.columns]
     return raw.select(
         "url",
         "page_no",
@@ -269,5 +293,10 @@ def normalize_detections(raw: DataFrame) -> DataFrame:
         F.round("y1", 2).alias("y1"),
         F.round("x2", 2).alias("x2"),
         F.round("y2", 2).alias("y2"),
+        "reading_order_rank",
+        "text",
+        "cap_idx",
+        *(F.round(c, 2).alias(c) for c in CAPTION_BOX),
+        "cap_text",
         *extra,
     )

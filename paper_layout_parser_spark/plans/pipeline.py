@@ -1,20 +1,23 @@
 """End-to-end extraction pipeline (SURVEY §3.1 Spark shape):
 
 pages -> plan_splits (skew salting)
-      -> rasterize + detect + enrich (ONE batched mapInPandas stage)
+      -> rasterize + detect + enrich + caption match (ONE batched
+         mapInPandas stage)
       -> normalize (native)
       -> { enriched rows || quarantine rows || page tallies }
-      -> { stats aggs  ||  caption matching -> extraction }
+      -> { stats aggs  ||  item-id window -> extraction }
       -> groupBy(url) doc-text assembly
 
-The fused stage is the only render of the default outputs. Its normalized
-output is the hub: detections (``stage`` null) form ``enriched``, failed
-pages (``error`` set) form ``quarantine``, and the one tally row per
-rendered page (``stage='page'``) gives ``doc_stats`` its page counts.
-Stats, matching, assembly and quarantine all branch from it, so
-run_pipeline persists it once; callers release it with
-``PipelineOutputs.unpersist`` (see sources.catalog for the Iceberg/parquet
-stage-checkpoint helper). ``rasterized`` is a separate lazy render, read
+The fused stage is the default outputs' only render and, after
+plan_splits, their only Python. Its normalized output is the hub:
+detections (``stage`` null) form ``enriched``, failed pages (``error``
+set) form ``quarantine``, and the one tally row per rendered page
+(``stage='page'``) gives ``doc_stats`` its page counts. Each figure or
+table detection also carries its caption's columns, which only
+``matched`` reads; every other output drops them. Stats, matching,
+assembly and quarantine all branch from it, so run_pipeline persists it
+once; callers release it with ``PipelineOutputs.unpersist`` (see
+sources.catalog for the Iceberg/parquet stage-checkpoint helper). ``rasterized`` is a separate lazy render, read
 only by crop re-rendering and VLM payloads.
 """
 
@@ -27,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators.assembly import assemble_doc_text
 from ..operators.detect import (
+    CAPTION_COLUMNS,
     StubDetectorBackend,
     normalize_detections,
     rasterize_detect_enrich,
@@ -60,10 +64,11 @@ def run_pipeline(
     num_partitions: int | None = None,
 ) -> PipelineOutputs:
     planned = plan_splits(pages, chunk_pages=chunk_pages, num_partitions=num_partitions)
-    # rasterize + inference + clipped text + XY-cut in ONE mapInPandas
-    # stage (see rasterize_detect_enrich). Its rows are detections, page
-    # tallies and quarantine rows (C6 error containment: failed pages
-    # become rows, never failed jobs).
+    # rasterize + inference + clipped text + XY-cut + caption matching in
+    # ONE mapInPandas stage (see rasterize_detect_enrich). Its rows are
+    # detections (each figure and table with its caption), page tallies
+    # and quarantine rows (C6 error containment: failed pages become
+    # rows, never failed jobs).
     # persist the single fused output — detections, tallies and
     # quarantine rows — so enriched, matched, doc_text, doc_stats and
     # quarantine all read the cache and the UDF stage runs once. On a
@@ -71,7 +76,8 @@ def run_pipeline(
     # cut point, durable + resumable).
     fused = normalize_detections(
         rasterize_detect_enrich(planned, backend_factory)).persist()
-    enriched = fused.where(F.col("stage").isNull()).drop("stage", "error")
+    detected = fused.where(F.col("stage").isNull()).drop("stage", "error")
+    enriched = detected.drop(*CAPTION_COLUMNS)
     quarantine = fused.where(F.col("error").isNotNull()).select(
         "url", "page_no", "stage", "error"
     )
@@ -89,7 +95,7 @@ def run_pipeline(
         rasterized=rasterized,
         detections=det,
         enriched=enriched,
-        matched=match_captions(enriched),
+        matched=match_captions(detected),
         doc_text=assemble_doc_text(enriched),
         doc_stats=doc_stats(enriched, total_pages=total_pages),
         quarantine=quarantine,

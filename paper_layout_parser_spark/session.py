@@ -3,7 +3,8 @@
 Tuned for local[N] testing but written for a 1000-executor cluster:
 AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 Arrow on (every UDF boundary is vectorized), UTC session timezone
-(so DuckDB-oracle comparisons are stable).
+(so DuckDB-oracle comparisons are stable), and a generated-code cache
+large enough to hold a whole job's compiled classes.
 """
 
 from __future__ import annotations
@@ -47,6 +48,10 @@ def get_spark(
         # Arrow batch size bounds per-batch memory in mapInPandas stages
         # (pages carry binary payloads; keep batches modest).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        # Spark caches 100 generated classes by default, fewer than one
+        # extraction job (run_job plus evaluation) uses, so each repeat of
+        # the job recompiled ~100 classes (~1 s) and ran them cold.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/plp_spark_warehouse"))
@@ -57,15 +62,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def gpu_task_profile(gpus_per_task: float = 1.0, cpus_per_task: int = 1):
-    """Stage-level resource profile for the inference stage (north star:
-    'layout inference runs as mapInPandas batches pinned to GPU executors').
-
-    Pass the result as ``rasterize_detect_enrich(..., profile=...)`` on a
-    cluster with GPU executors (spark.executor.resource.gpu.amount set);
-    local[N] has no GPUs, so callers default to profile=None here."""
-    from pyspark.resource import ResourceProfileBuilder, TaskResourceRequests
-
-    reqs = TaskResourceRequests().cpus(cpus_per_task).resource("gpu", gpus_per_task)
-    return ResourceProfileBuilder().require(reqs).build

@@ -181,11 +181,23 @@ class Catalog:
                        key: str = "url") -> DataFrame:
         """Input rows NOT yet present in the committed output — the resume
         primitive (left-anti join against the last snapshot; reference
-        analogue: skip-existing, cli.py:318-323)."""
+        analogue: skip-existing, cli.py:318-323).
+
+        The table is joined with a cached copy of the input keys, never
+        with ``inputs``: the cache hides the caller's predicates from
+        constraint inference, which would otherwise run them on the
+        table's rows (under ANSI mode a cast in such a predicate fails on
+        keys the caller never passed). The result is checkpointed, so the
+        returned frame holds no cache and carries no constraint either."""
         if not self.exists(table):
             return inputs
-        done = self.read(table).select(key).distinct()
-        return inputs.join(done, key, "left_anti")
+        keys = inputs.select(key).distinct().persist()
+        try:
+            fresh = keys.join(self.read(table).select(key), key,
+                              "left_anti").localCheckpoint()
+        finally:
+            keys.unpersist()
+        return inputs.join(fresh, key, "left_semi")
 
 
 KEYS = "committed_urls"      # (url, table): the url's batch committed to table
@@ -243,15 +255,22 @@ def commit_pending(catalog: Catalog, inputs: DataFrame, tables: list[str],
     long-running deployment compact them (Iceberg rewrite_data_files).
     Works as a ``foreachBatch`` body: the batch is ``inputs``."""
     _bootstrap_keys(catalog, tables)
-    todo = inputs
-    if catalog.exists(KEYS):
-        # key rows repeat after a crash window: count distinct tables
-        done = (catalog.read_keys(KEYS).where(F.col("table").isin(tables))
-                .groupBy("url").agg(F.size(F.collect_set("table")).alias("n"))
-                .where(F.col("n") == len(tables)))
-        todo = inputs.join(done.select("url"), "url", "left_anti")
-    todo_urls = todo.select("url").distinct().persist()
+    # the gate joins the key rows with a cached copy of the input urls,
+    # never with ``inputs``: the cache hides the caller's predicates from
+    # constraint inference, which would otherwise run them on key rows of
+    # urls the caller never passed (under ANSI mode a cast there raises)
+    in_urls = inputs.select("url").distinct().persist()
+    todo, todo_urls = inputs, in_urls
     try:
+        if catalog.exists(KEYS):
+            # key rows repeat after a crash window: count distinct tables
+            done = (catalog.read_keys(KEYS).where(F.col("table").isin(tables))
+                    .groupBy("url")
+                    .agg(F.size(F.collect_set("table")).alias("n"))
+                    .where(F.col("n") == len(tables)))
+            todo_urls = in_urls.join(done.select("url"), "url",
+                                     "left_anti").persist()
+            todo = inputs.join(todo_urls, "url", "left_semi")
         n_urls = todo_urls.count()
         if n_urls == 0:
             return 0
@@ -279,4 +298,6 @@ def commit_pending(catalog: Catalog, inputs: DataFrame, tables: list[str],
             cleanup()
         return n_urls
     finally:
+        # todo_urls first: it is built from in_urls' cache
         todo_urls.unpersist()
+        in_urls.unpersist()

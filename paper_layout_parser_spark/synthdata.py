@@ -342,8 +342,9 @@ def matched_items_cte(docs_table: str = "documents") -> str:
 
     On this corpus each (page, type) has <=1 item and <=1 caption, so the
     reference's greedy assignment reduces to the validity predicate (the
-    multi-candidate greedy semantics are exercised in pytest against the
-    Python oracle instead).
+    multi-candidate greedy semantics, tie chains included, are checked in
+    pytest: tests/test_matching_spark.py and the hand-built pages of
+    tests/test_pipeline.py, against the Python oracle).
     """
     base = detections_cte(docs_table)
     overlap = (

@@ -21,5 +21,6 @@ spark-submit \
   --conf spark.sql.adaptive.skewJoin.enabled=true \
   --conf spark.sql.execution.arrow.pyspark.enabled=true \
   --conf spark.sql.shuffle.partitions="${SHUFFLE_PARTITIONS:-800}" \
+  --conf spark.sql.codegen.cache.maxEntries=1000 \
   --py-files /tmp/plp_spark.zip \
   scripts/run_extraction_job.py "$@"

@@ -1,200 +1,169 @@
-"""DataFrame ports of the reference's CaptionMatcher tests
-(/root/reference/tests/test_matching/test_caption_matcher.py) — same literal
-bboxes, asserted through the distributed matcher."""
+"""Ports of the reference's CaptionMatcher tests (the reference repo's
+tests/test_matching/test_caption_matcher.py) — same literal bboxes,
+asserted through the per-page matcher the fused detect stage runs
+(algorithms.match_page_captions, no Spark) — plus a Spark test of the
+item-id window in match_captions."""
 
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-
-from paper_layout_parser_spark.operators.matching import candidate_pairs, match_captions
+from paper_layout_parser_spark.algorithms import match_page_captions
+from paper_layout_parser_spark.operators.matching import match_captions
 
 DET_SCHEMA = (
-    "url string, page_no int, det_idx int, class_name string, "
-    "x1 double, y1 double, x2 double, y2 double, text string"
+    "url string, page_no int, width int, height int, det_idx int, "
+    "class_name string, x1 double, y1 double, x2 double, y2 double, "
+    "cap_x1 double, cap_y1 double, cap_x2 double, cap_y2 double, "
+    "cap_text string"
 )
 
 
-def det_df(spark, rows, url="u1", page=1):
-    """rows: (class_name, x1, y1, x2, y2) in detection order."""
-    data = [
-        (url, page, i, cn, float(x1), float(y1), float(x2), float(y2), f"t{i}")
-        for i, (cn, x1, y1, x2, y2) in enumerate(rows)
-    ]
-    return spark.createDataFrame(data, schema=DET_SCHEMA)
-
-
-def run_match(spark, rows, **kw):
-    out = match_captions(det_df(spark, rows), **kw)
-    return {
-        r["item_id"]: r
-        for r in out.collect()
-    }
+def match(rows):
+    """rows: (class_name, x1, y1, x2, y2) in detection order -> per row,
+    the position of its assigned caption (None: no caption)."""
+    return match_page_captions([r[0] for r in rows],
+                               [tuple(map(float, r[1:])) for r in rows])
 
 
 class TestMatchScenarios:
-    def test_single_figure_single_caption(self, spark):
-        m = run_match(spark, [
+    def test_single_figure_single_caption(self):
+        assert match([
             ("Figure", 100, 100, 300, 200),
             ("Figure-Caption", 100, 220, 300, 260),
-        ])
-        assert len(m) == 1
-        r = m["fig_01_01"]
-        assert (r["cap_x1"], r["cap_y1"]) == (100.0, 220.0)
-        assert r["caption_text"] == "t1"
+        ]) == [1, None]
 
-    def test_figure_no_caption(self, spark):
-        m = run_match(spark, [("Figure", 100, 100, 300, 200)])
-        assert m["fig_01_01"]["cap_x1"] is None
-        assert m["fig_01_01"]["caption_text"] is None
+    def test_figure_no_caption(self):
+        assert match([("Figure", 100, 100, 300, 200)]) == [None]
 
-    def test_multiple_figures_captions(self, spark):
-        m = run_match(spark, [
+    def test_multiple_figures_captions(self):
+        assert match([
             ("Figure", 50, 100, 250, 200),
             ("Figure", 300, 100, 500, 200),
             ("Figure-Caption", 50, 220, 250, 260),
             ("Figure-Caption", 300, 220, 500, 260),
-        ])
-        assert m["fig_01_01"]["cap_x1"] == 50.0
-        assert m["fig_01_02"]["cap_x1"] == 300.0
+        ]) == [2, 3, None, None]
 
-    def test_table_caption_above(self, spark):
-        m = run_match(spark, [
+    def test_table_caption_above(self):
+        assert match([
             ("Table", 100, 200, 400, 500),
             ("Table-Caption", 100, 150, 400, 180),
-        ])
-        assert m["table_01_01"]["cap_y1"] == 150.0
+        ]) == [1, None]
 
-    def test_greedy_closer_wins(self, spark):
-        m = run_match(spark, [
+    def test_greedy_closer_wins(self):
+        assert match([
             ("Figure", 100, 100, 300, 200),
             ("Figure-Caption", 100, 250, 300, 290),  # farther
             ("Figure-Caption", 100, 210, 300, 240),  # closer
-        ])
-        assert m["fig_01_01"]["cap_y1"] == 210.0
+        ]) == [2, None, None]
 
-    def test_caption_cannot_match_multiple_figures(self, spark):
-        m = run_match(spark, [
+    def test_caption_cannot_match_multiple_figures(self):
+        # the closer figure wins the one caption
+        assert match([
             ("Figure", 100, 100, 250, 200),
             ("Figure", 100, 220, 250, 320),
             ("Figure-Caption", 100, 340, 250, 370),
-        ])
-        matched = [r for r in m.values() if r["cap_x1"] is not None]
-        assert len(matched) == 1
-        assert matched[0]["item_id"] == "fig_01_02"  # closer figure wins
+        ]) == [None, 2, None]
 
-    def test_too_far(self, spark):
-        m = run_match(spark, [
+    def test_too_far(self):
+        assert match([
             ("Figure", 100, 100, 300, 200),
-            ("Figure-Caption", 100, 300, 300, 340),
-        ], max_vertical_distance=50.0)
-        assert m["fig_01_01"]["cap_x1"] is None
+            ("Figure-Caption", 100, 301, 300, 340),  # 101 px below
+        ]) == [None, None]
 
-    def test_no_horizontal_overlap(self, spark):
-        m = run_match(spark, [
+    def test_no_horizontal_overlap(self):
+        assert match([
             ("Figure", 100, 100, 200, 200),
             ("Figure-Caption", 300, 220, 400, 260),
-        ])
-        assert m["fig_01_01"]["cap_x1"] is None
+        ]) == [None, None]
 
-    def test_direction_both(self, spark):
-        m = run_match(spark, [
-            ("Figure", 100, 200, 300, 400),
-            ("Figure-Caption", 100, 140, 300, 180),  # above
-        ], figure_direction="both")
-        assert m["fig_01_01"]["cap_y1"] == 140.0
-
-    def test_wrong_direction_invalid(self, spark):
-        m = run_match(spark, [
+    def test_wrong_direction_invalid(self):
+        assert match([
             ("Table", 100, 200, 400, 500),
             ("Table-Caption", 100, 520, 400, 560),  # below, tables search above
-        ])
-        assert m["table_01_01"]["cap_x1"] is None
+        ]) == [None, None]
 
-    def test_distance_exactly_at_max_is_valid(self, spark):
-        m = run_match(spark, [
+    def test_distance_exactly_at_max_is_valid(self):
+        assert match([
             ("Figure", 100, 100, 300, 200),
             ("Figure-Caption", 100, 300, 300, 340),  # dist exactly 100
-        ])
-        assert m["fig_01_01"]["cap_y1"] == 300.0
+        ]) == [1, None]
 
     def test_item_ids_cumulative_per_document(self, spark):
         # figures on pages 1 and 3: counter is per-document cumulative
         # (figure_extractor.py:179-244)
-        d1 = det_df(spark, [("Figure", 100, 100, 300, 200)], page=1)
-        d3 = det_df(spark, [
-            ("Figure", 100, 100, 300, 200),
-            ("Table", 50, 500, 400, 700),
-        ], page=3)
-        out = match_captions(d1.unionByName(d3))
-        ids = sorted(r["item_id"] for r in out.collect())
+        def det(page, det_idx, class_name, x1, y1, x2, y2):
+            return ("u1", page, 400, 800, det_idx, class_name,
+                    float(x1), float(y1), float(x2), float(y2),
+                    None, None, None, None, None)
+
+        df = spark.createDataFrame([
+            det(1, 0, "Figure", 100, 100, 300, 200),
+            det(3, 0, "Figure", 100, 100, 300, 200),
+            det(3, 1, "Table", 50, 500, 400, 700),
+        ], DET_SCHEMA)
+        ids = sorted(r["item_id"] for r in match_captions(df).collect())
         assert ids == ["fig_01_01", "fig_03_02", "table_03_01"]
 
 
 class TestCandidatePairs:
-    def test_overlap_ratio_uses_smaller_width(self, spark):
+    def test_overlap_ratio_uses_smaller_width(self):
         # item width 300, caption width 100 fully inside -> ratio 1.0
-        df = det_df(spark, [
+        assert match([
             ("Figure", 100, 100, 400, 200),
             ("Figure-Caption", 150, 220, 250, 260),
-        ])
-        pairs = candidate_pairs(df)
-        assert pairs.count() == 1
+        ]) == [1, None]
 
-    def test_partial_overlap_below_threshold(self, spark):
+    def test_partial_overlap_below_threshold(self):
         # overlap 20 / min-width 100 = 0.2 < 0.3
-        df = det_df(spark, [
+        assert match([
             ("Figure", 100, 100, 300, 200),
             ("Figure-Caption", 280, 220, 380, 260),
-        ])
-        assert candidate_pairs(df).count() == 0
+        ]) == [None, None]
 
-    def test_pairs_only_within_page_and_type(self, spark):
-        a = det_df(spark, [("Figure", 100, 100, 300, 200)], page=1)
-        b = det_df(spark, [("Figure-Caption", 100, 220, 300, 260)], page=2)
-        c = det_df(spark, [("Table-Caption", 100, 220, 300, 260)], page=1)
-        assert candidate_pairs(a.unionByName(b).unionByName(c)).count() == 0
+    def test_pairs_only_within_page_and_type(self):
+        # a call sees one page; within it a figure never takes a table
+        # caption, nor a table a figure caption
+        assert match([
+            ("Figure", 100, 100, 300, 200),
+            ("Table-Caption", 100, 220, 300, 260),
+            ("Table", 100, 500, 300, 700),
+            ("Figure-Caption", 100, 440, 300, 480),
+        ]) == [None, None, None, None]
 
 
 class TestRandomizedParity:
-    def test_matches_oracle_on_many_random_pages(self, spark):
-        """Randomized equivalence: distributed matcher == reference-port
-        oracle across 150 random pages in one Spark job (greedy chains
-        included)."""
+    def test_matches_oracle_on_many_random_pages(self):
+        """Randomized equivalence: the per-page matcher == the
+        reference-port oracle on 300 random pages of figures, tables and
+        both caption kinds, in shuffled detection order (129 of 912 items
+        get a caption; greedy chains and distance ties included)."""
         import random
 
         from . import oracle
 
         rng = random.Random(7)
-        rows = []
-        expected: dict[tuple, float | None] = {}
-        for page in range(150):
-            url = f"d{page % 10}"
-            pno = page // 10 + 1
-            items, caps = [], []
-            det_i = 0
-            for _ in range(rng.randint(0, 4)):
-                x, y = rng.uniform(0, 700), rng.uniform(0, 1000)
-                bb = {"x1": x, "y1": y, "x2": x + rng.uniform(50, 400),
-                      "y2": y + rng.uniform(50, 400), "i": det_i}
-                items.append(bb)
-                rows.append((url, pno, det_i, "Figure", bb["x1"], bb["y1"], bb["x2"], bb["y2"], ""))
-                det_i += 1
-            for _ in range(rng.randint(0, 4)):
-                x, y = rng.uniform(0, 700), rng.uniform(0, 1100)
-                bb = {"x1": x, "y1": y, "x2": x + rng.uniform(50, 400),
-                      "y2": y + rng.uniform(10, 80), "i": det_i}
-                caps.append(bb)
-                rows.append((url, pno, det_i, "Figure-Caption", bb["x1"], bb["y1"], bb["x2"], bb["y2"], ""))
-                det_i += 1
-            for item, cap in oracle.match_items_to_captions(items, caps, "below"):
-                expected[(url, pno, item["x1"], item["y1"])] = (
-                    None if cap is None else cap["y1"]
-                )
-        df = spark.createDataFrame(rows, schema=DET_SCHEMA)
-        got = {
-            (r["url"], r["page_number"], r["item_x1"], r["item_y1"]): r["cap_y1"]
-            for r in match_captions(df).collect()
-        }
-        assert len(got) == len(expected)
-        for k, v in expected.items():
-            assert got[k] == pytest.approx(v) if v is not None else got[k] is None
+        searches = (("Figure", "Figure-Caption", "below"),
+                    ("Table", "Table-Caption", "above"))
+        for _ in range(300):
+            names, boxes = [], []
+            for name in ("Figure", "Table", "Figure-Caption", "Table-Caption"):
+                caption = name.endswith("Caption")
+                for _ in range(rng.randint(0, 3)):
+                    # a 10 px grid: many pairs tie on distance
+                    x, y = rng.randrange(0, 300, 10), rng.randrange(0, 400, 10)
+                    names.append(name)
+                    boxes.append((x, y, x + rng.randrange(50, 400, 10),
+                                  y + rng.randrange(*((10, 80, 10) if caption
+                                                      else (50, 200, 10)))))
+            rng.shuffle(order := list(range(len(names))))
+            names = [names[k] for k in order]
+            boxes = [boxes[k] for k in order]
+            got = match_page_captions(names, boxes)
+
+            want = [None] * len(names)
+            for item_name, cap_name, direction in searches:
+                as_dict = [{"x1": b[0], "y1": b[1], "x2": b[2], "y2": b[3],
+                            "pos": k} for k, b in enumerate(boxes)]
+                items = [d for d, n in zip(as_dict, names) if n == item_name]
+                caps = [d for d, n in zip(as_dict, names) if n == cap_name]
+                for item, cap in oracle.match_items_to_captions(items, caps,
+                                                                direction):
+                    want[item["pos"]] = None if cap is None else cap["pos"]
+            assert got == want

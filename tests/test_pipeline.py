@@ -4,6 +4,7 @@ fused-stage parity with a pure-Python oracle, skew-plan behavior."""
 
 import json
 import struct
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,6 +29,7 @@ from paper_layout_parser_spark.operators.stats import (
 )
 from paper_layout_parser_spark.plans.pipeline import run_pipeline
 
+from . import oracle
 from .conftest import SF_SMALL
 
 N_DOCS = 60  # slice for speed; includes doc_id 0 (a 64-page giant)
@@ -221,41 +223,89 @@ def _page(page_no: int, *blocks: dict) -> dict:
 
 
 def _block(b: int, class_id: int, name: str, conf: float, y1: float,
-           text: str) -> dict:
+           text: str, bbox: list[float] | None = None) -> dict:
     return {"b": b, "class_id": class_id, "name": name, "conf": conf,
-            "bbox": [10.0, y1, 200.0, y1 + 30.0], "text": text}
+            "bbox": bbox or [10.0, y1, 200.0, y1 + 30.0], "text": text}
+
+
+def _round(x: float, digits: int) -> float:
+    """Spark's round on a double: HALF_UP on the shortest decimal string,
+    so 300.005 -> 300.01 where Python's round gives 300.0."""
+    return float(Decimal(repr(x)).quantize(Decimal(10) ** -digits,
+                                           ROUND_HALF_UP))
+
+
+def _kept(pg: dict) -> list[dict]:
+    """A page's detections: the blocks whose confidence clears
+    DEFAULT_CONF, in block order (det_idx is the position here)."""
+    return [b for b in pg["blocks"] if b["conf"] >= DEFAULT_CONF]
 
 
 def _oracle_enriched(docs: dict[str, list[dict]]) -> list[tuple]:
     """Pure-Python spec of the fused stage's enriched rows for documents
-    given as url -> page dicts (the PLP1 body's layout): no Spark, no UDF.
-    A block is detected when its confidence clears DEFAULT_CONF; det_idx
-    is its position among the kept blocks of its page."""
+    given as url -> page dicts (the PLP1 body's layout): no Spark, no UDF."""
     rows = []
     for url, pgs in docs.items():
         for pg in pgs:
-            kept = [b for b in pg["blocks"] if b["conf"] >= DEFAULT_CONF]
+            kept = _kept(pg)
             order = xy_cut_order([tuple(b["bbox"]) for b in kept])
             rank = {pos: r for r, pos in enumerate(order)}
             for i, b in enumerate(kept):
                 x1, y1, x2, y2 = b["bbox"]
                 rows.append((
                     url, pg["page_no"], i,
-                    sd.normalize_class_name(b["name"]), round(b["conf"], 4),
-                    round(x1, 2), round(y1, 2), round(x2, 2), round(y2, 2),
+                    sd.normalize_class_name(b["name"]), _round(b["conf"], 4),
+                    *(_round(v, 2) for v in b["bbox"]),
                     rank[i], clip_text(pg["blocks"], x1, y1, x2, y2),
                 ))
+    return rows
+
+
+def _oracle_matched(docs: dict[str, list[dict]]) -> list[tuple]:
+    """Pure-Python spec of ``matched``: the reference matcher port
+    (tests/oracle.py) on each page's detections with their enriched values
+    (normalized class, bbox rounded as Spark rounds), then per-document
+    item counters in (page, detection) order."""
+    searches = (("figure", "fig", sd.FIGURE_CLASSES,
+                 sd.FIGURE_CAPTION_CLASSES, "below"),
+                ("table", "table", sd.TABLE_CLASSES,
+                 sd.TABLE_CAPTION_CLASSES, "above"))
+    box = ("x1", "y1", "x2", "y2")
+    rows = []
+    for url, pgs in docs.items():
+        for item_type, prefix, item_cls, cap_cls, direction in searches:
+            seq = 0
+            for pg in sorted(pgs, key=lambda p: p["page_no"]):
+                dets = [{"name": sd.normalize_class_name(b["name"]),
+                         **dict(zip(box, (_round(v, 2) for v in b["bbox"]))),
+                         "text": clip_text(pg["blocks"], *b["bbox"])}
+                        for b in _kept(pg)]
+                items = [d for d in dets if d["name"] in item_cls]
+                caps = [d for d in dets if d["name"] in cap_cls]
+                for item, cap in oracle.match_items_to_captions(items, caps,
+                                                                direction):
+                    seq += 1
+                    rows.append((
+                        url, item_type,
+                        f"{prefix}_{pg['page_no']:02d}_{seq:02d}", seq,
+                        pg["page_no"], pg["width"], pg["height"],
+                        *(item[k] for k in box),
+                        *(cap and cap[k] for k in box), cap and cap["text"],
+                    ))
     return rows
 
 
 @pytest.mark.parametrize("path", ["stub_fast_path", "serialized_detect_batch"])
 def test_fused_stage_matches_python_oracle(spark, path):
     """The pipeline's one fused UDF stage, row for row, against the
-    pure-Python oracle — for the stub's dict fast path and for the
-    generic serialized detect_batch path. Next to the synthetic corpus
-    (integer boxes, reading-order permutations that are their own
-    inverse) runs one hand-built page whose values need rounding and
-    whose reading order is a 3-cycle."""
+    pure-Python oracle — enriched and matched, for the stub's dict fast
+    path and for the generic serialized detect_batch path. Next to the
+    synthetic corpus (integer boxes, reading-order permutations that are
+    their own inverse, at most one item and one caption per page and type)
+    run hand-built pages: one whose values need rounding and whose
+    reading order is a 3-cycle, one whose captions the greedy assignment
+    resolves through a chain of ties, and one whose captions are 100 px
+    away or not depending on how the edges are rounded."""
 
     class SerializedStub(StubDetectorBackend):
         # a subclass skips the stub's dict fast path: pages reach it as
@@ -270,18 +320,53 @@ def test_fused_stage_matches_python_oracle(spark, path):
                    _block(0, 3, "figure", 0.87654, 200.004, "third"),
                    _block(1, 0, "title", 0.9, 10.0, "first"),
                    _block(2, 1, "plain_text", 0.5, 100.0, "second"))]
+
+    def box(b, class_id, name, bbox):
+        return _block(b, class_id, name, 0.9, 0.0, f"{name} {b}", bbox)
+
+    # greedy order: F1-C1 (10 px) first, then F0-C0 and F2-C2 through the
+    # ties at 20, 30 and 40 px; going through the items in reverse order
+    # would give F2 C0, and each item taking its nearest free caption
+    # would give F0 C1. C0's right edge needs rounding.
+    ties = [_page(1,
+                  box(0, 3, "figure", [10.0, 50.0, 200.0, 100.0]),
+                  box(1, 3, "figure", [10.0, 60.0, 110.0, 110.0]),
+                  box(2, 3, "figure", [60.0, 50.0, 100.0, 100.0]),
+                  box(3, 4, "figure_caption", [60.0, 130.0, 150.004, 140.0]),
+                  box(4, 4, "figure_caption", [10.0, 120.0, 100.0, 130.0]),
+                  box(5, 4, "figure_caption", [60.0, 140.0, 100.0, 150.0]))]
+    # matching decides on the rounded edges: Spark rounds 300.005 to
+    # 300.01, 100.01 px below the left figure, too far (Python's round
+    # gives 300.0); 300.004 rounds to 300.0, exactly 100 px below the
+    # right figure, a match (unrounded, 100.004 px is too far)
+    half_way = [_page(1,
+                      box(0, 3, "figure", [10.0, 100.0, 200.0, 200.0]),
+                      box(1, 4, "figure_caption", [10.0, 300.005, 200.0, 330.0]),
+                      box(2, 3, "figure", [250.0, 100.0, 390.0, 200.0]),
+                      box(3, 4, "figure_caption", [250.0, 300.004, 390.0, 330.0]))]
+    extra = {"u_cycle": cycle, "u_ties": ties, "u_half_way": half_way}
     pages = build_pages(spark, SF_SMALL).where(
         F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < n_docs
-    ).unionByName(_doc_pages_df(spark, {"u_cycle": cycle}))
+    ).unionByName(_doc_pages_df(spark, extra))
     cols = ["url", "page_no", "det_idx", "class_name", "confidence",
             "x1", "y1", "x2", "y2", "reading_order_rank", "text"]
     out = run_pipeline(pages, backend_factory=backend)
     got = [tuple(r) for r in out.enriched.select(cols).collect()]
+    got_matched = [tuple(r) for r in out.matched.collect()]
     out.unpersist()
-    want = _oracle_enriched({**docs, "u_cycle": cycle})
+    want = _oracle_enriched({**docs, **extra})
     assert [r[9] for r in want if r[0] == "u_cycle"] == [2, 0, 1]
     assert len(set(got)) == len(got)
     assert sorted(got) == sorted(want)
+
+    want_matched = _oracle_matched({**docs, **extra})
+    assert [r[12] for r in sorted(want_matched) if r[0] == "u_ties"] == [
+        130.0, 120.0, 140.0]
+    assert [r[12] for r in sorted(want_matched)
+            if r[0] == "u_half_way"] == [None, 300.0]
+    assert sum(r[11] is not None for r in want_matched) > 20
+    assert len(set(got_matched)) == len(got_matched)
+    assert sorted(got_matched, key=repr) == sorted(want_matched, key=repr)
 
 
 def test_page_tally_semantics(spark):

@@ -63,6 +63,24 @@ def test_branches_reuse_persisted_enriched(spark):
     out.unpersist()
 
 
+def test_matched_is_one_window_over_the_cache(spark):
+    """Captions are assigned inside the fused stage: outside the cached
+    subplan, matched runs no Python and no join, and its only exchange is
+    the item-id window's."""
+    pages = build_pages(spark, SF_SMALL).where(
+        F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < 5
+    )
+    out = run_pipeline(pages)
+    out.matched.count()        # materialize the cache
+    plan = _outside_cached_plans(plan_of(spark, out.matched, "simple"))
+    assert "InMemoryTableScan" in plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Join"):
+        assert node not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(url" in plan, plan
+    out.unpersist()
+
+
 def _outside_cached_plans(plan: str) -> str:
     """The plan text minus every InMemoryRelation's cached subplan (the
     lines indented deeper than the InMemoryRelation line that follow it)."""

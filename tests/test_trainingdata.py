@@ -581,6 +581,38 @@ class TestCatalogResume:
         assert calls == [1]
         assert cat.read("stage1").count() == out.count()
 
+    @staticmethod
+    def _ansi_inputs(spark):
+        # the caller's predicate raises under ANSI mode on a url with no
+        # trailing digits, such as the committed "u_corrupt"
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        return spark.createDataFrame([("u1",), ("u2",)], "url string").where(
+            F.regexp_extract("url", "([0-9]+)$", 1).cast("bigint") < 3)
+
+    def test_gate_never_runs_caller_predicate_on_key_rows(self, spark, tmp_path):
+        from paper_layout_parser_spark.sources.catalog import Catalog, commit_pending
+
+        cat = Catalog(spark, str(tmp_path / "wh"))
+
+        def stage(todo):
+            return [("t", todo.withColumn("page_no", F.lit(1)), "page_no")], None
+
+        first = spark.createDataFrame([("u_corrupt",), ("u1",)], "url string")
+        assert commit_pending(cat, first, ["t"], stage) == 2
+        assert commit_pending(cat, self._ansi_inputs(spark), ["t"], stage) == 1
+        assert sorted(r["url"] for r in cat.read("t").collect()) == [
+            "u1", "u2", "u_corrupt"]
+
+    def test_pending_inputs_never_runs_caller_predicate_on_table(self, spark,
+                                                                 tmp_path):
+        from paper_layout_parser_spark.sources.catalog import Catalog
+
+        cat = Catalog(spark, str(tmp_path / "wh"))
+        cat.append(spark.createDataFrame([("u_corrupt",), ("u1",)], "url string"),
+                   "t")
+        pending = cat.pending_inputs(self._ansi_inputs(spark), "t")
+        assert [r["url"] for r in pending.collect()] == ["u2"]
+
 
 class TestVisualization:
     def test_draw_spec_colors_and_labels(self, spark):
