@@ -21,6 +21,7 @@ from paper_layout_parser_spark.corpus import build_ground_truth, build_pages
 from paper_layout_parser_spark.functions import text as tfn
 from paper_layout_parser_spark.operators import dedup as dd
 from paper_layout_parser_spark.operators import similarity as sim
+from paper_layout_parser_spark.operators.crop import StubCropCodec
 from paper_layout_parser_spark.operators.evaluate import (
     compare_matches,
     evaluation_summary,
@@ -45,7 +46,7 @@ def _pipeline(spark: SparkSession, sf_dir: str) -> tuple:
     key = f"{id(spark)}:{sf_dir}"
     if key not in _CACHE:
         pages = build_pages(spark, sf_dir).persist()
-        out = run_pipeline(pages)
+        out = run_pipeline(pages, crop_codec_factory=StubCropCodec)
         out.matched = out.matched.persist()
         _CACHE[key] = (pages, out)
     return _CACHE[key]
@@ -406,20 +407,13 @@ def q_crop_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full K4 crop-sink surface in one oracle-checked query: the
     padded+clamped crop rects in PDF coords (P5), the pixel rect the
     re-render rasterizes, AND the rendered crop's pixel dimensions — the
-    renderer RUNS (the mapInPandas paint is not prunable because crop_w/
-    crop_h/rendered come from it) and every number that feeds and leaves
-    it is pure geometry DuckDB recomputes. The crop binary itself is
-    codec-specific — pytest asserts the stub codec's determinism and the
-    base64 round-trip instead."""
-    from paper_layout_parser_spark.operators.crop import (
-        crop_bounds,
-        render_crops,
-    )
-
+    fused stage renders each crop from the page it has open, clamped
+    against that page's own rect, and every number that feeds and leaves
+    the codec is pure geometry DuckDB recomputes. The crop binary itself
+    is codec-specific — pytest asserts the stub codec's determinism
+    instead."""
     _, out = _pipeline(spark, sf_dir)
-    b = crop_bounds(out.matched)  # clamps against each page's own rect
-    crops = render_crops(b, out.rasterized)
-    return crops.select(
+    return out.crops.select(
         "url", "item_type", "item_id",
         F.col("page_number").cast("long").alias("page_number"),
         "pdf_x0", "pdf_y0", "pdf_x1", "pdf_y1",
@@ -758,8 +752,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-lang profile (distinct + interpolated percentiles) — the
-    oracle twin of the HLL/GK sketch path."""
+    """Exact per-lang profile (distinct + interpolated percentiles)."""
     from paper_layout_parser_spark.operators.sketches import profile_exact
 
     return profile_exact(_docs(spark, sf_dir))
@@ -1079,26 +1072,33 @@ SELECT url, item_id, item_type, p AS page_number,
 FROM matched"""
 
 
-def _crop_sql(dpi: float = 200.0, padding: float = 10.0) -> str:
-    """Bounds CTE shared by the crop_render oracle — the expression shapes mirror
-    operators.crop.crop_bounds term-for-term so doubles are bit-identical;
-    the clamp rect comes from each page's OWN dims (page_w/page_h)."""
+def _crop_rect_sql(dpi: float = 200.0, padding: float = 10.0) -> str:
+    """The eight crop-rect columns over item_x1..item_y2 and page_w/page_h
+    — the expression shapes mirror algorithms.crop_rect term-for-term so
+    doubles are bit-identical; the clamp rect comes from each page's OWN
+    dims."""
     pad = f"{padding} * 72.0 / {dpi}"
     x0 = f"GREATEST(0.0, item_x1 * 72.0 / {dpi} - {pad})"
     y0 = f"GREATEST(0.0, item_y1 * 72.0 / {dpi} - {pad})"
     x1 = f"LEAST(page_w * 72.0 / {dpi}, item_x2 * 72.0 / {dpi} + {pad})"
     y1 = f"LEAST(page_h * 72.0 / {dpi}, item_y2 * 72.0 / {dpi} + {pad})"
     px = lambda e: sd.sql_round_half_up(f"({e}) * {dpi} / 72.0", 2)  # noqa: E731
-    return f"""WITH {sd.matched_items_cte('documents')}
-SELECT url, item_type, item_id, p AS page_number,
-       {sd.sql_round_half_up(x0, 4)} AS pdf_x0,
+    return f"""{sd.sql_round_half_up(x0, 4)} AS pdf_x0,
        {sd.sql_round_half_up(y0, 4)} AS pdf_y0,
        {sd.sql_round_half_up(x1, 4)} AS pdf_x1,
        {sd.sql_round_half_up(y1, 4)} AS pdf_y1,
        {px(x0)} AS px_x0,
        {px(y0)} AS px_y0,
        {px(x1)} AS px_x1,
-       {px(y1)} AS px_y1
+       {px(y1)} AS px_y1"""
+
+
+def _crop_sql() -> str:
+    """Bounds CTE shared by the crop_render oracle: each matched item's
+    crop rect on its own page."""
+    return f"""WITH {sd.matched_items_cte('documents')}
+SELECT url, item_type, item_id, p AS page_number,
+       {_crop_rect_sql()}
 FROM matched"""
 
 
@@ -1888,6 +1888,5 @@ FROM d""",
         "registrable_domain": _registrable_domain_sql(),
         # (r6) token_count merged into quality; sketch_stats_approx
         # retired from the registry — sketch internals (HLL++/GK) are
-        # implementation-specific; pytest error-bounds profile_sketch
-        # against its exact twin (tests/test_trainingdata.py).
+        # implementation-specific, so only the exact profile is checked.
     }

@@ -1,6 +1,7 @@
 """Pure-Python per-page algorithms run inside the fused detect stage and
 shared with the test oracle: recursive XY-cut reading order, clipped text
-extraction, and the reference's caption matching (greedy assignment).
+extraction, the reference's caption matching (greedy assignment) and the
+crop rect of each figure or table.
 
 These run on one page's detections inside the Arrow-batched mapInPandas
 stage; keeping them here (no Spark, no pandas) means the oracle and the
@@ -184,3 +185,47 @@ def spark_round(x: float, digits: int) -> float:
         return x
     return float(Decimal(repr(float(x))).quantize(Decimal(1).scaleb(-digits),
                                                    ROUND_HALF_UP))
+
+
+def _floor_round(x: float, digits: int) -> float:
+    """``floor(x * 10**digits + 0.5) / 10**digits``: the half-up rounding
+    of ``functions.geometry.round_half_up`` and the DuckDB oracle, done on
+    the double ``x`` itself (not on its decimal string, as ``spark_round``
+    does)."""
+    factor = float(10 ** digits)
+    return math.floor(x * factor + 0.5) / factor
+
+
+# ---------------------------------------------------------------------------
+# crop rect (K4 — figure_extractor.py:56-72,108-142)
+# ---------------------------------------------------------------------------
+
+PDF_BASE_DPI = 72.0
+CROP_DPI = 200.0       # the render dpi the item bboxes are measured at
+CROP_PADDING_PX = 10.0
+
+
+def crop_rect(box: tuple[float, float, float, float], width: int,
+              height: int) -> tuple[float, ...]:
+    """The padded crop rect of one item on its page, as
+    ``_crop_and_save_image`` computes it: the item bbox (pixels at
+    CROP_DPI) scaled to PDF points (``v * 72/dpi``), padded by
+    ``CROP_PADDING_PX * 72/dpi`` and clamped to the page rect
+    (``width``/``height`` in pixels, scaled the same way), then scaled
+    back by ``dpi/72`` for the clip the re-render rasterizes.
+
+    ``box`` is (x1, y1, x2, y2) as the extracted item stores it (rounded
+    to 2 dp the way Spark rounds). Returns the PDF rect rounded half-up to
+    4 dp and the pixel rect, computed from the unrounded PDF rect, rounded
+    half-up to 2 dp: (pdf_x0, pdf_y0, pdf_x1, pdf_y1, px_x0, px_y0, px_x1,
+    px_y1). Every term keeps the shape of the DuckDB oracle
+    (``__spark_entry__._crop_rect_sql``), so the doubles are identical."""
+    dpi = CROP_DPI
+    pad = CROP_PADDING_PX * PDF_BASE_DPI / dpi
+    x0 = max(0.0, box[0] * PDF_BASE_DPI / dpi - pad)
+    y0 = max(0.0, box[1] * PDF_BASE_DPI / dpi - pad)
+    x1 = min(width * PDF_BASE_DPI / dpi, box[2] * PDF_BASE_DPI / dpi + pad)
+    y1 = min(height * PDF_BASE_DPI / dpi, box[3] * PDF_BASE_DPI / dpi + pad)
+    pdf = (x0, y0, x1, y1)
+    return (*(_floor_round(v, 4) for v in pdf),
+            *(_floor_round(v * dpi / PDF_BASE_DPI, 2) for v in pdf))

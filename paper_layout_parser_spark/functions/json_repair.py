@@ -1,11 +1,11 @@
-"""LLM-output JSON repair + parse (SURVEY P11 —
-benchmarks/vlm_annotator/base.py:221-394).
+"""LLM-output JSON repair (SURVEY P11 —
+benchmarks/vlm_annotator/base.py:221-234).
 
 The reference receives VLM responses that may be wrapped in markdown code
 fences, carry leading/trailing prose, or contain trailing commas. Its repair
 chain is: strip code fences -> slice the outermost {...} -> drop trailing
-commas -> json.loads. Re-expressed as native column expressions +
-``from_json(PERMISSIVE)`` — no Python in the hot path; every step has an
+commas -> json.loads. Re-expressed as native column expressions (parse the
+result with ``from_json``) — no Python in the hot path; every step has an
 exact DuckDB twin used by the oracle.
 """
 
@@ -47,9 +47,3 @@ def repair_json_sql(expr: str) -> str:
     return (f"regexp_replace({sliced}, '{TRAILING_COMMA_RE}', "
             f"'\\1', 'g')")
 
-
-def parse_vlm_response(raw: Column, schema: str) -> Column:
-    """repair + from_json with PERMISSIVE mode (malformed -> null row, the
-    reference's try/except fallback at base.py:313-394)."""
-    return F.from_json(repair_json(raw), schema,
-                       {"mode": "PERMISSIVE"})

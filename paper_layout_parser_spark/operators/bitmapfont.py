@@ -1,9 +1,8 @@
-"""Deterministic 5x7 bitmap font for the stdlib overlay/legend painters.
+"""Deterministic 5x7 bitmap font for the stdlib overlay painter.
 
 Closes the one reference output the sandbox could not previously
-reproduce: label and legend TEXT
-(src/doclayout/visualization/renderer.py:104-143 cv2.putText,
-legend.py:58-88,112-150). cv2's Hershey vector glyphs need cv2; this is
+reproduce: label TEXT
+(src/doclayout/visualization/renderer.py:104-143 cv2.putText). cv2's Hershey vector glyphs need cv2; this is
 the classic public-domain 5x7 dot-matrix letterform (HD44780-style)
 expressed as auditable ASCII art and painted by pure numpy slicing —
 bytes are deterministic, no codec or font dependency. The

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .crop import CROP_COLUMNS, CROP_COLUMNS_DDL
+
 RAW_DETECTION_SCHEMA = (
     "url string, page_no int, width int, height int, det_idx int, "
     "class_id int, raw_name string, confidence double, "
@@ -95,7 +97,8 @@ class YoloDetectorBackend:
 
 
 def rasterize_detect_enrich(planned: DataFrame,
-                            backend_factory=StubDetectorBackend) -> DataFrame:
+                            backend_factory=StubDetectorBackend,
+                            crop_codec_factory=None) -> DataFrame:
     """Plan chunks -> ONE mapInPandas stage doing rasterize (real render
     work, checksum semantics identical to rasterize._render_page) +
     detection + clipped text + XY-cut + caption matching.
@@ -119,41 +122,57 @@ def rasterize_detect_enrich(planned: DataFrame,
     matcher decides on the values normalize_detections emits: normalized
     class names and bboxes rounded the way Spark's ``round`` rounds.
 
+    Given a ``crop_codec_factory``, each figure or table row also carries
+    its crop (crop.CROP_COLUMNS): the rect ``algorithms.crop_rect``
+    computes from the same rounded bbox and the page's own size, and the
+    codec's render of that rect from the page's serialized payload (the
+    bytes ``rasterize._rasterize_batches`` ships as ``page_payload``).
+    The codec is built once per task; without one the stage does no crop
+    work and emits no crop columns.
+
     Emits RAW names/values plus ``reading_order_rank``/``text``, the
-    caption columns and the quarantine columns ``stage``/``error``
-    ('rasterize' for chunk-decode
-    and render failures, 'detect' for inference/enrichment failures).
-    Every successfully
-    rendered page also yields one page-tally row (``stage='page'``,
-    ``det_idx=-1``, ``error`` null), emitted before the detect leg so a
-    page that fails in detect still counts as rendered: the per-document
-    page counts come from these rows, not from a second render pass.
-    Detection rows carry ``stage`` null; normalize_detections passes
-    ``stage`` and ``error`` through."""
+    caption (and crop) columns and the quarantine columns
+    ``stage``/``error`` ('rasterize' for chunk-decode and render failures,
+    'detect' for inference and enrichment failures). A crop codec failure
+    is not contained: it fails the task, so a crop never drops a page's
+    detections from the other tables. Every
+    successfully rendered page also yields one page-tally row
+    (``stage='page'``, ``det_idx=-1``, ``error`` null), emitted before the
+    detect leg so a page that fails in detect still counts as rendered:
+    the per-document page counts come from these rows, not from a second
+    render pass. Detection rows carry ``stage`` null; normalize_detections
+    passes ``stage`` and ``error`` through."""
     from ..algorithms import (
         clip_text,
+        crop_rect,
         match_page_captions,
         spark_round,
         xy_cut_order,
     )
-    from ..synthdata import normalize_class_name
+    from ..synthdata import FIGURE_CLASSES, TABLE_CLASSES, normalize_class_name
     from .rasterize import _render_page
 
+    item_classes = FIGURE_CLASSES | TABLE_CLASSES
+    crop_cols = CROP_COLUMNS if crop_codec_factory is not None else ()
+    extra_cols = (*CAPTION_COLUMNS, *crop_cols)
     schema = (RAW_DETECTION_SCHEMA
               + ", reading_order_rank int, text string, cap_idx int, "
               "cap_x1 double, cap_y1 double, cap_x2 double, cap_y2 double, "
-              "cap_text string, stage string, error string")
+              "cap_text string"
+              + (", " + CROP_COLUMNS_DDL if crop_cols else "")
+              + ", stage string, error string")
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         backend = backend_factory()  # once per task, never per row/batch
         stub_fast = type(backend) is StubDetectorBackend
+        codec = crop_codec_factory() if crop_cols else None
         for pdf in it:
             cols: dict[str, list] = {
                 "url": [], "page_no": [], "width": [], "height": [],
                 "det_idx": [], "class_id": [], "raw_name": [],
                 "confidence": [], "x1": [], "y1": [], "x2": [], "y2": [],
                 "reading_order_rank": [], "text": [],
-                **{c: [] for c in CAPTION_COLUMNS}, "stage": [], "error": [],
+                **{c: [] for c in extra_cols}, "stage": [], "error": [],
             }
 
             def emit_page_row(url, page_no, w, h, stage, error):
@@ -168,7 +187,7 @@ def rasterize_detect_enrich(planned: DataFrame,
                 cols["class_id"].append(-1)
                 cols["raw_name"].append(None)
                 cols["confidence"].append(None)
-                for c in ("x1", "y1", "x2", "y2", "text", *CAPTION_COLUMNS):
+                for c in ("x1", "y1", "x2", "y2", "text", *extra_cols):
                     cols[c].append(None)
                 cols["reading_order_rank"].append(-1)
                 cols["stage"].append(stage)
@@ -235,13 +254,29 @@ def rasterize_detect_enrich(planned: DataFrame,
                     for rank, pos in enumerate(order):
                         ranks[pos] = rank
                     texts = [clip_text(blocks, *d["bbox"]) for d in dets]
-                    caption_of = match_page_captions(
-                        [normalize_class_name(d["raw_name"]) for d in dets],
-                        [tuple(spark_round(v, 2) for v in d["bbox"])
-                         for d in dets])
+                    names = [normalize_class_name(d["raw_name"]) for d in dets]
+                    rounded = [tuple(spark_round(v, 2) for v in d["bbox"])
+                               for d in dets]
+                    caption_of = match_page_captions(names, rounded)
                 except Exception as exc:  # noqa: BLE001 — quarantine
                     emit_error(url, page_no, w, h, "detect", exc)
                     continue
+                # crops render outside the containment: a codec failure
+                # fails the job instead of quarantining the page
+                crops = [(None,) * len(crop_cols)] * len(dets)
+                if codec is not None:
+                    page_payload = None
+                    for i, name in enumerate(names):
+                        if name not in item_classes:
+                            continue
+                        if page_payload is None:
+                            page_payload = json.dumps(
+                                pg, separators=(",", ":")).encode()
+                        rect = crop_rect(rounded[i], w, h)
+                        px = rect[4:]
+                        crops[i] = (*rect, codec.render(page_payload, px),
+                                    max(0, int(px[2] - px[0])),
+                                    max(0, int(px[3] - px[1])))
                 for i, d in enumerate(dets):
                     cols["url"].append(url)
                     cols["page_no"].append(page_no)
@@ -263,6 +298,8 @@ def rasterize_detect_enrich(planned: DataFrame,
                            else (j, *dets[j]["bbox"], texts[j]))
                     for c, v in zip(CAPTION_COLUMNS, cap):
                         cols[c].append(v)
+                    for c, v in zip(crop_cols, crops[i]):
+                        cols[c].append(v)
                     cols["stage"].append(None)
                     cols["error"].append(None)
             yield pd.DataFrame(cols)
@@ -276,9 +313,10 @@ def normalize_detections(raw: DataFrame) -> DataFrame:
     == translate to spaces -> initcap -> translate back), confidence rounded
     to 4 dp and bbox to 2 dp (layout_detector.py:46-58), the caption bbox
     too. Pure column exprs — whole-stage codegen, no Python. Passes through
-    the enrichment and caption columns, and the quarantine columns
-    (stage, error) that the caller has not dropped."""
-    extra = [c for c in ("stage", "error") if c in raw.columns]
+    the enrichment and caption columns, and the crop and quarantine
+    columns (stage, error) that the stage emitted and the caller has not
+    dropped (crop rects leave the stage already rounded)."""
+    extra = [c for c in (*CROP_COLUMNS, "stage", "error") if c in raw.columns]
     return raw.select(
         "url",
         "page_no",

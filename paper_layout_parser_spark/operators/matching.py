@@ -9,8 +9,9 @@ Reference semantics (caption_matcher.py:21-199, figure_extractor.py:144-272):
 
 Spark shape: the assignment needs only one page's detections, so the fused
 detect stage makes it (``algorithms.match_page_captions``) and each figure
-or table row arrives with its caption's columns. What is left is native:
-a filter and one window for the item ids — no join, no Python.
+or table row arrives with its caption's columns (and, under a crop codec,
+its crop). What is left is native: a filter and one window for the item
+ids — no join, no Python.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..synthdata import FIGURE_CLASSES, TABLE_CLASSES
+from .crop import CROP_COLUMNS
 
 
 def match_captions(det: DataFrame) -> DataFrame:
@@ -27,7 +29,8 @@ def match_captions(det: DataFrame) -> DataFrame:
 
     url, item_type, item_id, item_seq, page_number, width/height (the
     item's page pixel dims), item_x1..y2, cap_x1..y2 (nullable),
-    caption_text (nullable).
+    caption_text (nullable), then the crop columns (crop.CROP_COLUMNS)
+    when the fused stage rendered crops.
     """
     item_type = (F.when(F.col("class_name").isin(*FIGURE_CLASSES), "figure")
                  .otherwise("table"))
@@ -53,4 +56,5 @@ def match_captions(det: DataFrame) -> DataFrame:
         *(F.col(c).alias(f"item_{c}") for c in ("x1", "y1", "x2", "y2")),
         "cap_x1", "cap_y1", "cap_x2", "cap_y2",
         F.col("cap_text").alias("caption_text"),
+        *(c for c in CROP_COLUMNS if c in det.columns),
     )

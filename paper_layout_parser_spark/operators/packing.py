@@ -119,16 +119,3 @@ def pack_sequences(
         .alias("start_offset"),
         F.floor((cum - 1) / max_tokens).cast("long").alias("end_seq"),
     )
-
-
-def packing_stats(packed: DataFrame, max_tokens: int = 2048) -> DataFrame:
-    """Per-bucket packing report: documents, total tokens, number of
-    ``max_tokens`` windows produced, and fill ratio of the last window —
-    the utilization numbers a packed-dataset build publishes."""
-    return packed.groupBy("bucket").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        (F.max("end_seq") + 1).alias("n_sequences"),
-        (F.sum("n_tokens") - F.max("end_seq") * max_tokens)
-        .alias("last_window_tokens"),
-    )

@@ -25,6 +25,10 @@ grain BEFORE the expensive stage:
                            renders at zoom = dpi/72).
 
 All three stages are Arrow-batched; no per-row Python outside the UDFs.
+The pipeline renders inside ``detect.rasterize_detect_enrich`` (same
+``_render_page``, same payload bytes) and never calls ``rasterize_pages``;
+the standalone stage is what perfbench's ``rasterize.standalone`` span
+times.
 """
 
 from __future__ import annotations
@@ -402,9 +406,3 @@ def _rasterize_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def rasterize_pages(planned: DataFrame) -> DataFrame:
     """(url, html, page_start, page_end) -> one row per page (P1)."""
     return planned.mapInPandas(_rasterize_batches, schema=PAGE_SCHEMA)
-
-
-def rasterize(pages: DataFrame, chunk_pages: int = DEFAULT_CHUNK_PAGES,
-              num_partitions: int | None = None) -> DataFrame:
-    """Convenience: plan + rasterize."""
-    return rasterize_pages(plan_splits(pages, chunk_pages, num_partitions))

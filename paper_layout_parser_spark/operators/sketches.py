@@ -1,15 +1,10 @@
-"""Sketch aggregations for corpus profiling at 100 TB.
+"""Corpus profiling: per-key distinct counts and percentiles.
 
-Exact distinct counts and exact percentiles require a full shuffle of the
-grouped values; the sketch twins (HyperLogLog++ via
-``approx_count_distinct``, the Greenwald-Khanna quantile sketch via
-``percentile_approx``) are single-pass, mergeable, bounded-memory — the
-only viable shape for corpus-wide profiles at web scale. Both run map-side
-and merge tiny sketch buffers through the exchange.
-
-As everywhere in this repo, the approximate path ships with its exact twin:
-``profile_exact`` is the DuckDB-checked oracle; pytest bounds the sketch
-error against it.
+``profile_exact`` computes them exactly (a full shuffle of the grouped
+values) and is DuckDB-checked (``__spark_entry__`` ``sketch_stats``). At
+web scale the single-pass, mergeable sketch forms (HyperLogLog++ via
+``approx_count_distinct``, Greenwald-Khanna via ``percentile_approx``)
+replace the exact aggregates in the same ``groupBy``.
 """
 
 from __future__ import annotations
@@ -27,18 +22,5 @@ def profile_exact(df: DataFrame, key: str = "lang",
         F.count_distinct(F.col(col)).alias("n_distinct"),
         F.expr(f"percentile({col}, 0.5)").alias("p50"),
         F.expr(f"percentile({col}, 0.9)").alias("p90"),
-        F.count("*").alias("n_rows"),
-    )
-
-
-def profile_sketch(df: DataFrame, key: str = "lang", col: str = "n_chars",
-                   rsd: float = 0.05, accuracy: int = 10000) -> DataFrame:
-    """The scale path: HLL++ distinct (relative error ``rsd``) and GK
-    quantiles (rank error 1/``accuracy``) — one pass, mergeable buffers,
-    no per-group value shuffle."""
-    return df.groupBy(key).agg(
-        F.approx_count_distinct(F.col(col), rsd=rsd).alias("n_distinct"),
-        F.percentile_approx(F.col(col), 0.5, accuracy).alias("p50"),
-        F.percentile_approx(F.col(col), 0.9, accuracy).alias("p90"),
         F.count("*").alias("n_rows"),
     )

@@ -53,13 +53,6 @@ DEFAULT_COLOR = (0, 255, 0)  # styles.py default
 # styles.py:42-47
 ANNOTATION_PREFIXES = {"figure": "F", "table": "T", "caption": "C"}
 
-# styles.py:36-40 (BGR)
-ANNOTATION_COLORS = {
-    "figure": (0, 255, 0),
-    "table": (255, 0, 0),
-    "caption": (0, 165, 255),
-}
-
 
 def _pack(bgr: tuple[int, int, int]) -> int:
     b, g, r = bgr
@@ -135,35 +128,6 @@ def encode_png(rgb) -> bytes:
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
     return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
             + chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b""))
-
-
-def decode_png_rgb(png: bytes):
-    """Inverse of encode_png for filter-0 RGB images (test/verification
-    helper; also reads any PNG this module writes)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    assert png[:8] == b"\x89PNG\r\n\x1a\n"
-    pos, idat, w = 8, b"", 0
-    while pos < len(png):
-        (ln,) = struct.unpack(">I", png[pos:pos + 4])
-        tag = png[pos + 4:pos + 8]
-        data = png[pos + 8:pos + 8 + ln]
-        if tag == b"IHDR":
-            w, h, bit, ctype = struct.unpack(">IIBB", data[:10])
-            assert (bit, ctype) == (8, 2), "decoder handles 8-bit RGB only"
-        elif tag == b"IDAT":
-            idat += data
-        pos += 12 + ln
-    raw = zlib.decompress(idat)
-    stride = 1 + 3 * w
-    rows = [raw[i * stride:(i + 1) * stride] for i in range(len(raw) // stride)]
-    assert all(r[0] == 0 for r in rows), "decoder handles filter 0 only"
-    return np.frombuffer(b"".join(r[1:] for r in rows), np.uint8).reshape(
-        len(rows), w, 3
-    )
 
 
 OVERLAY_SCHEMA = ("url string, page_no int, n_boxes int, "
@@ -243,81 +207,11 @@ def paint_overlays(spec: DataFrame, page_w: int | None = None,
     return spec.groupBy("url", "page_no").applyInPandas(paint, OVERLAY_SCHEMA)
 
 
-def _bgr_to_rgb(bgr: tuple[int, int, int]):
-    import numpy as np
-
-    b, g, r = bgr
-    return np.array([r, g, b], np.uint8)
-
-
-def class_legend_png(colors: dict | None = None, width: int = 400,
-                     height: int = 400, line_height: int = 35,
-                     box_size: int = 20, margin: int = 20) -> bytes:
-    """Class-color legend image (legend.py:40-90 ``create_class_legend``):
-    one filled swatch per palette entry at the reference's exact geometry
-    (boxes at (margin, margin+10 + i*line_height), stopping when the next
-    box would cross height-10), each class name painted in black 5x7
-    bitmap glyphs at the reference's putText position — x = margin +
-    box_size + 10, baseline = swatch bottom - 5 (our top-left origin is
-    baseline - (FONT_H - 1)). White background, PNG-encoded with the
-    stdlib encoder; render via cv2 for Hershey-identical letterforms."""
-    import numpy as np
-
-    from .bitmapfont import FONT_H, draw_text
-
-    colors = colors or DEFAULT_COLORS
-    legend = np.full((height, width, 3), 255, np.uint8)
-    black = np.zeros(3, np.uint8)
-    y = margin + 10
-    for name, bgr in colors.items():
-        if y + box_size > height - 10:
-            break
-        legend[y:y + box_size, margin:margin + box_size] = _bgr_to_rgb(bgr)
-        draw_text(legend, margin + box_size + 10,
-                  y + box_size - 5 - (FONT_H - 1), name, black)
-        y += line_height
-    return encode_png(legend)
-
-
-def annotation_legend_png(width: int = 400, height: int = 150,
-                          margin: int = 20) -> bytes:
-    """Annotation-mode legend (legend.py:95-150 ``create_annotation_legend``):
-    the "Annotation Legend" title (baseline y=30), then three 30x25
-    swatches (figure/table/caption) with a 1px black border at
-    y = 60 + i*35, each labeled "Figure (F#)" / "Table (T#)" /
-    "Caption (C#)" at the reference's putText position (x = margin + 40,
-    baseline = y + 18) in black 5x7 bitmap glyphs."""
-    import numpy as np
-
-    from .bitmapfont import FONT_H, draw_text
-
-    legend = np.full((height, width, 3), 255, np.uint8)
-    blk = np.zeros(3, np.uint8)
-    draw_text(legend, margin, 30 - (FONT_H - 1), "Annotation Legend", blk)
-    y = 60
-    for kind in ("figure", "table", "caption"):
-        # cv2 clips rectangles at the canvas edge (the reference's last
-        # swatch bottom lands at y=154 on a 150px canvas); slices clip the
-        # fill, the border rows draw only while on-canvas
-        legend[y:y + 25, margin:margin + 30] = _bgr_to_rgb(ANNOTATION_COLORS[kind])
-        black = np.zeros(3, np.uint8)
-        legend[y, margin:margin + 30] = black
-        if y + 24 < height:
-            legend[y + 24, margin:margin + 30] = black
-        legend[y:y + 25, margin] = black
-        legend[y:y + 25, margin + 29] = black
-        label = (f"{kind.capitalize()} "
-                 f"({ANNOTATION_PREFIXES[kind]}#)")  # legend.py:127-131
-        draw_text(legend, margin + 40, y + 18 - (FONT_H - 1), label, blk)
-        y += 35
-    return encode_png(legend)
-
-
 def render_overlays(spec_with_payload: DataFrame, strict: bool = True) -> DataFrame:
     """The cv2-parity paint seam — requires cv2/Pillow for Hershey-glyph-
     IDENTICAL output (cv2.putText letterforms + anti-aliasing).
     ``paint_overlays`` above is the dependency-free real renderer and now
-    paints label/legend text too (5x7 bitmap font, reference positions);
+    paints label text too (5x7 bitmap font, reference positions);
     this raise marks only cv2-pixel-exact parity."""
 
     def run(it):

@@ -126,29 +126,6 @@ class Catalog:
         finally:
             staged.unpersist()
 
-    # -- bucketing ------------------------------------------------------------
-
-    def write_bucketed(self, df: DataFrame, table: str, num_buckets: int,
-                       *bucket_cols: str) -> DataFrame:
-        """Persist a table bucketed (+ sorted) on the join key so subsequent
-        joins/aggregations on that key are exchange-free (SURVEY §4.2:
-        co-located joins via bucketing). Uses the session catalog's managed
-        warehouse (Iceberg: bucket(n, col) partition transform instead)."""
-        import shutil
-
-        self.spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir", "")
-        loc = os.path.join(warehouse.removeprefix("file:"), table)
-        shutil.rmtree(loc, ignore_errors=True)
-        (
-            df.write.mode("overwrite")
-            .bucketBy(num_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-            .format("parquet")
-            .saveAsTable(table)
-        )
-        return self.spark.read.table(table)
-
     # -- url key tables ------------------------------------------------------
 
     def append_keys(self, keys: DataFrame, table: str) -> None:

@@ -12,9 +12,9 @@ checkpoint; quarantine rows commit with each batch).
 for both tests and scheduled incremental runs.
 
 Also includes event-stream operators over the driver's ``events`` table
-shape: watermarked tumbling-window aggregation, bounded-state dedup and
-sessionization (a custom stateful operator and its batch twin) — the
-standard late-data-tolerant ops a training-data telemetry pipeline needs.
+shape: watermarked tumbling-window aggregation and batch sessionization —
+the standard late-data-tolerant ops a training-data telemetry pipeline
+needs.
 """
 
 from __future__ import annotations
@@ -73,18 +73,6 @@ def run_incremental_extraction(
     return q
 
 
-def stream_dedup(df: DataFrame, keys: list[str], ts_col: str = "ts",
-                 watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup with BOUNDED state:
-    ``dropDuplicatesWithinWatermark`` keeps per-key state only inside the
-    watermark horizon, so re-delivered rows (at-least-once sources,
-    re-crawled urls) are dropped without the unbounded-state trap of plain
-    dropDuplicates on a stream. Works on batch DataFrames too (falls back
-    to plain dropDuplicates semantics inside the horizon)."""
-    df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
 def windowed_event_counts(events: DataFrame, window: str = "5 minutes",
                           watermark: str = "10 minutes") -> DataFrame:
     """Watermarked tumbling-window counts per event_type — works on both a
@@ -101,79 +89,6 @@ def windowed_event_counts(events: DataFrame, window: str = "5 minutes",
             F.col("w.end").alias("window_end"),
             "event_type", "n_events", "sum_value",
         )
-    )
-
-
-def sessionize_stateful(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Custom stateful streaming sessionization via applyInPandasWithState —
-    the escape hatch for session logic that session_window can't express
-    (e.g. carrying per-session custom accumulators across micro-batches).
-
-    State per user: (open-session start/last-seen epoch seconds, event
-    count, value sum). A micro-batch extends or closes sessions as events
-    arrive; every batch emits the affected sessions with a ``closed`` flag
-    (update output mode), so downstream consumers upsert on
-    (user_id, session_start). NoTimeout is used deliberately: processing-
-    time timeouts keep a query permanently busy (even processAllAvailable
-    blocks), and event-time gap closure already happens on the next event.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_s = gap_minutes * 60
-    out_schema = (
-        "user_id long, session_start timestamp, session_end timestamp, "
-        "n_events long, sum_value double, closed boolean"
-    )
-    state_schema = "start long, last long, n long, total double"  # start/last: epoch ns
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        (user_id,) = key
-        rows = []
-        start = last = n = None
-        total = 0.0
-        if state.exists:
-            start, last, n, total = state.get
-        gap_ns = gap_s * 1_000_000_000
-        # a user's micro-batch rows can span several Arrow chunks (e.g. more
-        # than maxRecordsPerBatch rows); sorting chunks independently would
-        # corrupt session bounds, so concatenate the whole group FIRST and
-        # sort once. Per-group size is bounded by one user's events per
-        # micro-batch — cap the trigger interval if a single user can
-        # produce unbounded rows per batch.
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values("ts")
-            for ts, value in zip(pdf["ts"], pdf["value"]):
-                epoch = pd.Timestamp(ts).value  # ns — full precision
-                if start is None:
-                    start, last, n, total = epoch, epoch, 1, float(value)
-                elif epoch - last > gap_ns:
-                    rows.append((user_id, start, last, n, total, True))
-                    start, last, n, total = epoch, epoch, 1, float(value)
-                else:
-                    last = max(last, epoch)
-                    n += 1
-                    total += float(value)
-        if start is not None:
-            state.update((start, last, n, total))
-            rows.append((user_id, start, last, n, total, False))
-        if rows:
-            import pandas as pd
-            yield pd.DataFrame({
-                "user_id": [r[0] for r in rows],
-                "session_start": [pd.Timestamp(r[1]) for r in rows],
-                "session_end": [pd.Timestamp(r[2]) for r in rows],
-                "n_events": [r[3] for r in rows],
-                "sum_value": [r[4] for r in rows],
-                "closed": [r[5] for r in rows],
-            })
-
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout,
     )
 
 

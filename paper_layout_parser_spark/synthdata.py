@@ -547,49 +547,6 @@ SELECT figure_type, tp, fp, fn, correct, total,
 FROM m"""
 
 
-def clustered_embeddings(spark, n: int, dim: int, n_clusters: int,
-                         noise: float = 0.15, id_start: int = 0):
-    """Deterministic mixture-of-clusters embedding corpus (no RNG).
-
-    A uniform hash-derived corpus (BENCH/ANN_CAPACITY.md) is the
-    WORST case for a coarse quantizer — no cluster structure, so IVF
-    recall stays near nprobe/C regardless of index quality. Real
-    embedding corpora cluster; this generator plants that structure so
-    the recall/nprobe trade is measurable (BENCH/ANN_CAPACITY.md's
-    clustered-recall section) and regression-testable.
-
-    Vector for ``vec_id`` v: true cluster c = v mod ``n_clusters``; each
-    component i is ``center(c)[i] + noise * u(v, i)`` where both the
-    center component and the per-vector jitter are hash-derived uniforms
-    in [-0.5, 0.5) (xxhash64 -> pmod 10000, the same scheme as the
-    uniform corpus, so generation stays whole-stage codegen with zero
-    Python). At noise=0.15 / dim>=32 the within-cluster cosine is ~0.98
-    and cross-cluster ~0, so a query's true top-k lives in its own
-    cluster. ``id_start`` offsets vec_id so held-out query batches can
-    be drawn from the same mixture without overlapping corpus ids.
-
-    Returns (vec_id, cluster_true, embedding array<double>); cluster_true
-    is diagnostic only — training never sees it.
-    """
-    from pyspark.sql import functions as F
-
-    def u(h):
-        return F.pmod(h, F.lit(10000)).cast("double") / 10000.0 - 0.5
-
-    base = (spark.range(id_start, id_start + n).toDF("vec_id")
-            .withColumn("cluster_true",
-                        F.pmod(F.col("vec_id"), F.lit(n_clusters))))
-    return base.withColumn(
-        "embedding",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda i: u(F.xxhash64(F.lit("plp-ctr"),
-                                   F.col("cluster_true"), i))
-            + F.lit(float(noise)) * u(F.xxhash64(F.col("vec_id"), i)),
-        ),
-    )
-
-
 def _ws_split() -> str:
     """The explicit Java-\\s-equivalent split class shared with the
     engine (functions.text.WS_SPLIT): RE2's \\s excludes \\x0B, so the

@@ -22,6 +22,7 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
+from paper_layout_parser_spark.operators.crop import StubCropCodec
 from paper_layout_parser_spark.plans.pipeline import run_pipeline
 from paper_layout_parser_spark.sources.catalog import Catalog, commit_pending
 
@@ -35,14 +36,13 @@ STAGE_TABLES = [
 
 def _full_tables(out):
     """--full adds the remaining main.py --extract sinks: the nested
-    per-doc result.json (K1) and the rendered crop images (K4)."""
-    from paper_layout_parser_spark.operators.crop import crop_bounds, render_crops
+    per-doc result.json (K1) and the crop images (K4), which the fused
+    stage rendered from the pages it had open (``out.crops``)."""
     from paper_layout_parser_spark.operators.stats import result_json
 
-    bounds = crop_bounds(out.matched)  # clamps against each page's own rect
     return [
         ("doc_results", result_json(out.enriched), None),
-        ("crops", render_crops(bounds, out.rasterized), "page_number"),
+        ("crops", out.crops, "page_number"),
     ]
 
 
@@ -55,7 +55,8 @@ def run_job(spark: SparkSession, pages: DataFrame, cat: Catalog,
         ["doc_results", "crops"] if full else [])
 
     def run_stages(todo: DataFrame):
-        out = run_pipeline(todo)
+        out = run_pipeline(todo,
+                           crop_codec_factory=StubCropCodec if full else None)
         frames = [(t, getattr(out, attr), pc) for t, attr, pc in STAGE_TABLES]
         if full:
             frames += _full_tables(out)

@@ -1,107 +1,12 @@
-"""VLM annotation stage tests + hypothesis property tests for the matcher
-and XY-cut invariants."""
+"""Hypothesis property tests for the matcher, XY-cut and hex-threshold
+bucketing invariants."""
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from paper_layout_parser_spark import synthdata as sd
 from paper_layout_parser_spark.algorithms import greedy_assign, xy_cut_order
-from paper_layout_parser_spark.corpus import build_pages
-from paper_layout_parser_spark.operators.annotate import (
-    StubVLMClient,
-    annotate_and_parse,
-    annotate_pages,
-)
-from paper_layout_parser_spark.operators.rasterize import rasterize
 
 from . import oracle
-from .conftest import SF_SMALL
-
-
-class TestAnnotateStage:
-    @pytest.fixture(scope="class")
-    def pages(self, spark):
-        return rasterize(
-            build_pages(spark, SF_SMALL).where(
-                F.regexp_extract("url", r"([0-9]+)$", 1).cast("long").isin(1, 2, 3)
-            )
-        ).where("error is null").drop("error").persist()
-
-    def test_roundtrip_matches_spec(self, pages):
-        gt = annotate_and_parse(pages)
-        rows = gt.collect()
-        expected = 0
-        for d in (1, 2, 3):
-            for p in range(1, sd.n_pages(d) + 1):
-                expected += sum(
-                    1 for b in sd.page_blocks(d, p)
-                    if b["class_name"] in ("Figure", "Table")
-                )
-        assert len(rows) == expected
-        r = next(r for r in rows if r["figure_type"] == "figure")
-        assert (r["gt_x1"], r["gt_y1"], r["gt_x2"], r["gt_y2"]) == (100, 200, 300, 400)
-        assert r["confidence"] == 0.9
-        assert r["gcap_x1"] is None
-
-    def test_retry_survives_transient_failures(self, pages):
-        # every 3rd call fails once; retries recover all pages
-        gt_flaky = annotate_and_parse(
-            pages, client_factory=lambda: StubVLMClient(fail_every=3)
-        )
-        gt_clean = annotate_and_parse(pages)
-        assert gt_flaky.count() == gt_clean.count()
-
-    def test_rate_bound_limits_partitions(self, pages):
-        bounded = annotate_pages(pages, max_concurrency=2)
-        assert bounded.rdd.getNumPartitions() <= 2
-
-    def test_rate_bound_is_isolated_exchange(self, spark, pages):
-        """The concurrency bound must be a repartition (its own exchange),
-        not a coalesce — coalesce would collapse the upstream rasterize
-        stage to the API's concurrency too."""
-        from .test_plans import plan_of
-
-        plan = plan_of(spark, annotate_pages(pages, max_concurrency=2), "simple")
-        assert "RoundRobinPartitioning(2)" in plan
-        assert "Coalesce" not in plan
-
-    def test_empty_pages_never_call_the_client(self, spark, pages):
-        """F7 short-circuit: pages with no figure/table regions must produce
-        ZERO API calls. TattlingClient tags any empty-page call with a
-        sentinel id that would surface in the parsed output."""
-        import json as _json
-
-        class TattlingClient(StubVLMClient):
-            def annotate(self, page_payload):
-                page = _json.loads(bytes(page_payload))
-                if not any(b["name"] in ("Figure", "Table")
-                           for b in page["blocks"]):
-                    return ('```json\n{"matches": [{"figure_id": "EMPTY_CALL", '
-                            '"figure_type": "figure", "bbox": [0, 0, 1, 1], '
-                            '"caption_bbox": null, "caption_text": null, '
-                            '"confidence": 1.0}]}\n```')
-                return super().annotate(page_payload)
-
-        total = pages.count()
-        # payload-scan filter path
-        gt = annotate_and_parse(pages, client_factory=TattlingClient)
-        assert gt.where(F.col("figure_id") == "EMPTY_CALL").count() == 0
-        # detections semi-join path
-        from paper_layout_parser_spark.operators.annotate import annotatable_pages
-        from paper_layout_parser_spark.plans.pipeline import run_pipeline
-
-        out = run_pipeline(build_pages(spark, SF_SMALL).where(
-            F.regexp_extract("url", r"([0-9]+)$", 1).cast("long").isin(1, 2, 3)))
-        det = out.detections
-        kept = annotatable_pages(pages, det)
-        assert 0 < kept.count() < total
-        gt2 = annotate_and_parse(pages, detections=det,
-                                 client_factory=TattlingClient)
-        assert gt2.where(F.col("figure_id") == "EMPTY_CALL").count() == 0
-        assert gt2.count() == gt.count() == annotate_and_parse(pages).count()
-        out.unpersist()
 
 
 BOX = st.tuples(

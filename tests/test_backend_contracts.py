@@ -1,8 +1,8 @@
-"""Backend seam contracts: every pluggable leaf (detector, crop codec,
-media codec, VLM client) must satisfy the same call contract whether it's
-the sandbox stub or the real library, so a cluster deployment cannot drift
-from the schema the Spark plumbing was tested with. Real backends run when
-their libs are importable and are skipped otherwise."""
+"""Backend seam contracts: every pluggable leaf (detector, crop codec)
+must satisfy the same call contract whether it's the sandbox stub or the
+real library, so a cluster deployment cannot drift from the schema the
+Spark plumbing was tested with. Real backends run when their libs are
+importable and are skipped otherwise."""
 
 import importlib.util
 
@@ -63,32 +63,3 @@ class TestCropCodecs:
 
         blob = StubCropCodec().render(PAGE_PAYLOAD, (10.0, 10.0, 100.0, 80.0))
         assert isinstance(blob, bytes) and len(blob) > 0
-
-    @pytest.mark.skipif(not _has("fitz"), reason="pymupdf not installed")
-    def test_fitz_satisfies_contract(self):  # pragma: no cover — cluster-only
-        from paper_layout_parser_spark.operators.crop import FitzCropCodec
-
-        blob = FitzCropCodec().render(PAGE_PAYLOAD, (10.0, 10.0, 100.0, 80.0))
-        assert isinstance(blob, bytes) and len(blob) > 0
-
-
-class TestVLMClients:
-    def test_stub_satisfies_contract(self, spark):
-        from pyspark.sql import functions as F
-
-        from paper_layout_parser_spark.functions.json_repair import (
-            parse_vlm_response,
-        )
-        from paper_layout_parser_spark.operators.annotate import (
-            VLM_RESPONSE_SCHEMA,
-            StubVLMClient,
-        )
-
-        resp = StubVLMClient().annotate(PAGE_PAYLOAD)
-        assert isinstance(resp, str)
-        # response must survive the SAME repair chain the Spark stage uses
-        df = spark.createDataFrame([(resp,)], "response string")
-        row = df.select(
-            parse_vlm_response(F.col("response"), VLM_RESPONSE_SCHEMA).alias("r")
-        ).first()
-        assert row["r"] is not None and len(row["r"]["matches"]) > 0

@@ -551,33 +551,6 @@ class TestStreamingIngest:
         assert cat.read("corpus_extracted").count() == 1
         assert run_job(spark, pages, cat) == 0
 
-    def test_stream_dedup_bounded_state(self, spark, tmp_path):
-        """dropDuplicatesWithinWatermark: re-delivered rows inside the
-        watermark are dropped on a real stream."""
-        import os
-        import shutil
-
-        from paper_layout_parser_spark.streaming.ingest import stream_dedup
-
-        events = spark.read.parquet(f"{SF_SMALL}/events.parquet").limit(500)
-        d = str(tmp_path / "ev")
-        os.makedirs(d, exist_ok=True)
-        # the same rows delivered twice (two files)
-        events.write.mode("overwrite").parquet(d + "/a")
-        shutil.copytree(d + "/a", d + "/b")
-        stream = spark.readStream.schema(events.schema).parquet(d + "/*")
-        q = (
-            stream_dedup(stream, ["user_id", "ts", "event_type"])
-            .writeStream.outputMode("append")
-            .format("memory").queryName("dedup_out")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = spark.sql("SELECT count(*) AS n FROM dedup_out").first()["n"]
-        expect = events.select("user_id", "ts", "event_type").distinct().count()
-        assert got == expect
-
     def test_windowed_counts_streaming_equals_batch(self, spark, tmp_path):
         from paper_layout_parser_spark.streaming.ingest import windowed_event_counts
 
@@ -639,42 +612,3 @@ class TestBatchRollup:
         rolled = batch_rollup(evaluation_summary(cmp, per_url=True)).collect()[0]
         for k in ("tp", "fp", "fn", "correct_no_caption", "precision", "recall", "f1"):
             assert rolled[k] == global_row[k], k
-
-
-class TestStatefulSessionize:
-    def test_stateful_sessions_match_batch(self, spark, tmp_path):
-        """applyInPandasWithState sessionization over a streamed events file
-        must agree with the batch lag+cumsum twin on closed+open session
-        counts and bounds."""
-        import os
-        import shutil
-
-        from paper_layout_parser_spark.streaming.ingest import (
-            sessionize_batch,
-            sessionize_stateful,
-        )
-
-        events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-        batch = {
-            (r["user_id"], str(r["session_start"])): (r["n_events"],)
-            for r in sessionize_batch(events, gap_minutes=30).collect()
-        }
-
-        d = str(tmp_path / "ev")
-        os.makedirs(d, exist_ok=True)
-        shutil.copy(f"{SF_SMALL}/events.parquet", d)
-        stream = spark.readStream.schema(events.schema).parquet(d)
-        q = (
-            sessionize_stateful(stream, gap_minutes=30)
-            .writeStream.outputMode("update")
-            .format("memory").queryName("sessout")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = {
-            (r["user_id"], str(r["session_start"])): (r["n_events"],)
-            for r in spark.sql("SELECT * FROM sessout").collect()
-        }
-        # single micro-batch: every batch session appears (open or closed)
-        assert got == batch

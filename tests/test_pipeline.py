@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from paper_layout_parser_spark import synthdata as sd
 from paper_layout_parser_spark.algorithms import clip_text, xy_cut_order
 from paper_layout_parser_spark.corpus import build_pages
+from paper_layout_parser_spark.operators.crop import StubCropCodec
 from paper_layout_parser_spark.operators.detect import (
     DEFAULT_CONF,
     StubDetectorBackend,
@@ -195,10 +196,11 @@ def test_exact_dedup_shuffles_hash_not_text(spark):
 
 def test_rasterize_page_counts(corpus):
     pages, out = corpus
-    got = out.rasterized.groupBy("url").count().collect()
+    got = out.doc_stats.select("url", "total_pages").collect()
+    assert len(got) == N_DOCS
     for r in got:
         doc_id = int(r["url"].rsplit("/", 1)[1])
-        assert r["count"] == sd.n_pages(doc_id)
+        assert r["total_pages"] == sd.n_pages(doc_id)
 
 
 def _doc_pages_df(spark, docs: dict[str, list[dict]]):
@@ -412,10 +414,12 @@ def test_page_tally_semantics(spark):
 
 
 def test_each_page_renders_once(spark):
-    """One run_pipeline feeds doc_text, matched, doc_stats and quarantine
-    from one cached fused pass: every page reaches the detector exactly
-    once, and out.unpersist() releases the cache."""
+    """One run_pipeline feeds doc_text, matched, crops, doc_stats and
+    quarantine from one cached fused pass: every page reaches the
+    detector exactly once, the crop codec runs once per extracted item,
+    and out.unpersist() releases the cache."""
     acc = spark.sparkContext.accumulator(0)
+    crops_acc = spark.sparkContext.accumulator(0)
 
     class CountingBackend(StubDetectorBackend):
         # a subclass skips the stub's dict fast path, so every page goes
@@ -424,15 +428,24 @@ def test_each_page_renders_once(spark):
             acc.add(len(payloads))
             return StubDetectorBackend.detect_batch(self, payloads)
 
+    class CountingCodec(StubCropCodec):
+        def render(self, page_payload, px_rect):
+            crops_acc.add(1)
+            return StubCropCodec.render(self, page_payload, px_rect)
+
     n_docs = 12
     pages = build_pages(spark, SF_SMALL).where(
         F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < n_docs)
     jsc = spark.sparkContext._jsc.sc()
     cached_before = jsc.getPersistentRDDs().size()
-    out = run_pipeline(pages, backend_factory=CountingBackend)
-    for df in (out.doc_text, out.matched, out.doc_stats, out.quarantine):
+    out = run_pipeline(pages, backend_factory=CountingBackend,
+                       crop_codec_factory=CountingCodec)
+    for df in (out.doc_text, out.matched, out.crops, out.doc_stats,
+               out.quarantine):
         df.write.format("noop").mode("overwrite").save()
     assert acc.value == sum(sd.n_pages(d) for d in range(n_docs))
+    n_items = out.matched.count()
+    assert n_items > 0 and crops_acc.value == n_items
     assert sum(r["total_pages"] for r in out.doc_stats.collect()) == acc.value
     assert jsc.getPersistentRDDs().size() == cached_before + 1
     out.unpersist()

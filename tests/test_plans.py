@@ -71,14 +71,32 @@ def test_matched_is_one_window_over_the_cache(spark):
         F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < 5
     )
     out = run_pipeline(pages)
-    out.matched.count()        # materialize the cache
-    plan = _outside_cached_plans(plan_of(spark, out.matched, "simple"))
+    _assert_one_window_over_the_cache(spark, out.matched)
+    out.unpersist()
+
+
+def test_crops_is_one_window_over_the_cache(spark):
+    """Crops are rendered inside the fused stage: outside the cached
+    subplan, crops runs no Python and no join (no second render of the
+    pages), and its only exchange is the item-id window's."""
+    from paper_layout_parser_spark.operators.crop import StubCropCodec
+
+    pages = build_pages(spark, SF_SMALL).where(
+        F.regexp_extract("url", r"([0-9]+)$", 1).cast("long") < 5
+    )
+    out = run_pipeline(pages, crop_codec_factory=StubCropCodec)
+    _assert_one_window_over_the_cache(spark, out.crops)
+    out.unpersist()
+
+
+def _assert_one_window_over_the_cache(spark, df) -> None:
+    df.count()                 # materialize the cache
+    plan = _outside_cached_plans(plan_of(spark, df, "simple"))
     assert "InMemoryTableScan" in plan
     for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Join"):
         assert node not in plan, plan
     assert plan.count("Exchange") == 1, plan
     assert "Exchange hashpartitioning(url" in plan, plan
-    out.unpersist()
 
 
 def _outside_cached_plans(plan: str) -> str:
@@ -95,11 +113,10 @@ def _outside_cached_plans(plan: str) -> str:
 
 
 def test_per_page_crop_math_is_pure_projection(spark):
-    """Per-page clamping must not cost a plan shape: width/height ride as
-    columns on matched (carried from the rasterized page), so crop_bounds
-    and to_percent_coords compile to a single Project — no join-back
-    against the pages table, no exchange."""
-    from paper_layout_parser_spark.operators.crop import crop_bounds
+    """Per-page percent coords must not cost a plan shape: width/height
+    ride as columns on matched (carried from the rendered page), so
+    to_percent_coords compiles to a single Project — no join-back against
+    the pages table, no exchange."""
     from paper_layout_parser_spark.operators.export import to_percent_coords
 
     matched = spark.createDataFrame(
@@ -110,7 +127,6 @@ def test_per_page_crop_math_is_pure_projection(spark):
         "item_x1 double, item_y1 double, item_x2 double, item_y2 double, "
         "cap_x1 double, cap_y1 double, cap_x2 double, cap_y2 double",
     )
-    for df in (crop_bounds(matched), to_percent_coords(matched)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:1200]
-        assert "Join" not in plan, plan[:1200]
+    plan = to_percent_coords(matched)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan[:1200]
+    assert "Join" not in plan, plan[:1200]

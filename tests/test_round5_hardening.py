@@ -249,10 +249,11 @@ class TestGlyphText:
 
     def test_overlay_label_glyphs(self, spark):
         from paper_layout_parser_spark.operators.visualization import (
-            decode_png_rgb,
             draw_spec,
             paint_overlays,
         )
+
+        from .helpers import decode_png_rgb
 
         det = spark.createDataFrame(
             [("u", 1, 0, "Figure", 0.95, 100., 200., 300., 400.)],
@@ -267,34 +268,6 @@ class TestGlyphText:
         green, white = (0, 255, 0), (255, 255, 255)
         assert tuple(img[40, 26]) == green          # bar background
         self._expect_region(img, 27, 42, "Figure 0.95", white, green)
-
-    def test_class_legend_names_painted(self):
-        from paper_layout_parser_spark.operators.visualization import (
-            DEFAULT_COLORS,
-            class_legend_png,
-            decode_png_rgb,
-        )
-
-        img = decode_png_rgb(class_legend_png())
-        names = list(DEFAULT_COLORS)
-        black, white = (0, 0, 0), (255, 255, 255)
-        # entry 0 ("Title"): swatch at y=30..50, text baseline y=45 ->
-        # glyph top 39, x = margin + box_size + 10 = 50
-        self._expect_region(img, 50, 39, names[0], black, white)
-        self._expect_region(img, 50, 39 + 35, names[1], black, white)
-
-    def test_annotation_legend_title_and_labels(self):
-        from paper_layout_parser_spark.operators.visualization import (
-            annotation_legend_png,
-            decode_png_rgb,
-        )
-
-        img = decode_png_rgb(annotation_legend_png())
-        black, white = (0, 0, 0), (255, 255, 255)
-        self._expect_region(img, 20, 24, "Annotation Legend", black, white)
-        self._expect_region(img, 60, 60 + 12, "Figure (F#)", black, white)
-        self._expect_region(img, 60, 95 + 12, "Table (T#)", black, white)
-        self._expect_region(img, 60, 130 + 12, "Caption (C#)", black, white)
 
     def test_unknown_glyph_is_visible_box(self):
         import numpy as np
@@ -375,15 +348,6 @@ class TestReviewHardening:
                    asof_join(left, right, on=["user_id"], hot_key_ranges=8,
                              hot_key_bounds=(lo, hi)).collect()}
             assert got == base, (lo, hi)
-
-    def test_fmt0_null_propagates(self, spark):
-        from paper_layout_parser_spark.operators.vlm_payload import _fmt0
-
-        df = spark.createDataFrame(
-            [(1, 3.4), (2, -0.3), (3, None)], "i long, v double"
-        ).select("i", _fmt0(F.col("v")).alias("f"))
-        got = {r["i"]: r["f"] for r in df.collect()}
-        assert got == {1: 3, 2: 0, 3: None}
 
     def test_host_sql_twin_shared_and_userinfo_correct(self, spark):
         """ONE host regex twin: canonical_url_sql and cap_per_host_sql

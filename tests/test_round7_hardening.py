@@ -82,7 +82,7 @@ class TestIvfClusteredRecall:
     healthy one. A planted-cluster fixture separates those."""
 
     def _fixture(self, spark):
-        from paper_layout_parser_spark.synthdata import clustered_embeddings
+        from .helpers import clustered_embeddings
 
         corpus = clustered_embeddings(spark, 2000, dim=32, n_clusters=16)
         queries = clustered_embeddings(spark, 8, dim=32, n_clusters=16,
@@ -132,7 +132,7 @@ class TestIvfClusteredRecall:
     def test_clustered_generator_separation(self, spark):
         """The generator's contract: within-cluster cosine far above
         cross-cluster (this is what makes the recall floor meaningful)."""
-        from paper_layout_parser_spark.synthdata import clustered_embeddings
+        from .helpers import clustered_embeddings
 
         df = clustered_embeddings(spark, 64, dim=32, n_clusters=4)
         rows = df.collect()

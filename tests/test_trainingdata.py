@@ -259,12 +259,9 @@ class TestDedup:
 
     def test_pack_sequences_layout_invariants(self, spark, docs):
         """Concat-and-chunk packing: per bucket, documents tile the token
-        stream contiguously with no gaps/overlaps, window arithmetic is
-        consistent, and the stats report reconciles."""
-        from paper_layout_parser_spark.operators.packing import (
-            pack_sequences,
-            packing_stats,
-        )
+        stream contiguously with no gaps/overlaps, and window arithmetic is
+        consistent."""
+        from paper_layout_parser_spark.operators.packing import pack_sequences
 
         L = 128
         packed = pack_sequences(docs, max_tokens=L, num_buckets=4)
@@ -282,13 +279,6 @@ class TestDedup:
                 assert r["start_offset"] == r["start_token"] % L
                 assert r["end_seq"] == (r["start_token"] + r["n_tokens"] - 1) // L
                 expect_start += r["n_tokens"]
-        stats = {r["bucket"]: r for r in packing_stats(packed, L).collect()}
-        for b, rs in by_bucket.items():
-            total = sum(r["n_tokens"] for r in rs)
-            s = stats[b]
-            assert s["n_docs"] == len(rs) and s["total_tokens"] == total
-            assert s["n_sequences"] == (total - 1) // L + 1
-            assert 0 < s["last_window_tokens"] <= L
 
     def test_pack_sequences_drops_empty_docs(self, spark):
         """split('') yields [''] — empty/whitespace docs must contribute
@@ -328,26 +318,6 @@ class TestDedup:
             .explainString(spark._jvm.org.apache.spark.sql.execution
                            .ExplainMode.fromString("simple"))
         assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-
-    def test_sketch_profile_error_bounds(self, spark, docs):
-        """HLL distinct within the configured rsd of exact; GK percentiles
-        within rank-error of the exact interpolated values."""
-        from paper_layout_parser_spark.operators.sketches import (
-            profile_exact,
-            profile_sketch,
-        )
-
-        exact = {r["lang"]: r for r in profile_exact(docs).collect()}
-        approx = {r["lang"]: r for r in profile_sketch(docs, rsd=0.02).collect()}
-        assert set(exact) == set(approx)
-        for lang, e in exact.items():
-            a = approx[lang]
-            assert a["n_rows"] == e["n_rows"]
-            assert abs(a["n_distinct"] - e["n_distinct"]) <= max(3, 0.1 * e["n_distinct"])
-            # GK at accuracy 10000 on a few hundred rows is near-exact;
-            # allow one value-step of slack around the interpolated exact
-            assert abs(a["p50"] - e["p50"]) <= max(5.0, 0.05 * e["p50"])
-            assert abs(a["p90"] - e["p90"]) <= max(5.0, 0.05 * e["p90"])
 
     def test_clean_corpus_funnel(self, spark):
         """Every drop reason fires, in rule order (first failure wins), and
@@ -650,10 +620,11 @@ class TestVisualization:
         """P13/K3 pixel paint is real: the sink emits decodable PNGs with
         the palette-colored borders at the right pixels."""
         from paper_layout_parser_spark.operators.visualization import (
-            decode_png_rgb,
             draw_spec,
             paint_overlays,
         )
+
+        from .helpers import decode_png_rgb
 
         det = spark.createDataFrame(
             [("u", 1, 0, "Figure", 0.95, 100., 200., 300., 400.),
@@ -677,56 +648,15 @@ class TestVisualization:
         again = {r["page_no"]: bytes(r["overlay_png"]) for r in out.collect()}
         assert again[1] == bytes(rows[1]["overlay_png"])
 
-    def test_class_legend_swatches(self):
-        """Legend artifact (legend.py:40-90 minus glyphs): decodable PNG,
-        reference geometry, one palette-colored swatch per row in palette
-        order, truncated exactly where the reference stops."""
-        import numpy as np
-
-        from paper_layout_parser_spark.operators.visualization import (
-            DEFAULT_COLORS,
-            class_legend_png,
-            decode_png_rgb,
-        )
-
-        img = decode_png_rgb(class_legend_png())
-        assert img.shape == (400, 400, 3)
-        names = list(DEFAULT_COLORS)
-        # boxes at y = 30 + i*35, 20px, margin 20; fits while y+20 <= 390
-        n_fit = sum(1 for i in range(len(names)) if 30 + i * 35 + 20 <= 390)
-        for i in range(n_fit):
-            b, g, r = DEFAULT_COLORS[names[i]]
-            assert tuple(img[30 + i * 35 + 10, 30]) == (r, g, b), names[i]
-        # background stays white outside the swatch column
-        assert tuple(img[30, 300]) == (255, 255, 255)
-        # truncation: no swatch painted past the fit limit
-        if n_fit < len(names):
-            assert tuple(img[30 + n_fit * 35 + 10, 30]) == (255, 255, 255)
-
-    def test_annotation_legend_swatches(self):
-        import numpy as np  # noqa: F401
-
-        from paper_layout_parser_spark.operators.visualization import (
-            ANNOTATION_COLORS,
-            annotation_legend_png,
-            decode_png_rgb,
-        )
-
-        img = decode_png_rgb(annotation_legend_png())
-        assert img.shape == (150, 400, 3)
-        for i, kind in enumerate(("figure", "table", "caption")):
-            b, g, r = ANNOTATION_COLORS[kind]
-            assert tuple(img[60 + i * 35 + 12, 35]) == (r, g, b)
-            assert tuple(img[60 + i * 35, 35]) == (0, 0, 0)  # border
-
     def test_paint_overlays_per_page_canvas(self, spark):
         """Default (no scalar dims): each page's canvas is sized from its OWN
         width/height columns — mixed-size corpora must not share one rect."""
         from paper_layout_parser_spark.operators.visualization import (
-            decode_png_rgb,
             draw_spec,
             paint_overlays,
         )
+
+        from .helpers import decode_png_rgb
 
         det = spark.createDataFrame(
             [("u", 1, 1224, 1584, 0, "Figure", 0.95, 100., 200., 300., 400.),
@@ -739,21 +669,6 @@ class TestVisualization:
         rows = {r["page_no"]: r for r in out.collect()}
         assert decode_png_rgb(bytes(rows[1]["overlay_png"])).shape == (396, 306, 3)
         assert decode_png_rgb(bytes(rows[2]["overlay_png"])).shape == (584, 413, 3)
-
-
-class TestBucketing:
-    def test_bucketed_join_is_exchange_free(self, spark, docs):
-        from paper_layout_parser_spark.sources.catalog import Catalog
-
-        cat = Catalog(spark, "/tmp/plp_bucket_test")
-        left = cat.write_bucketed(
-            docs.select("doc_id", "lang"), "bkt_left", 4, "doc_id")
-        right = cat.write_bucketed(
-            docs.select("doc_id", "n_chars"), "bkt_right", 4, "doc_id")
-        joined = left.join(right.hint("merge"), "doc_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:1500]
-        assert joined.count() == docs.count()
 
 
 class TestNeardupLsh:
