@@ -175,8 +175,8 @@ def build_training_corpus(
 
     ``catalog`` (a sources.catalog.Catalog) makes the module docstring's
     "checkpoint ``extracted`` between the two phases" contract CODE: the
-    extraction phase commits ``extracted`` (with per-partition lineage)
-    to ``corpus_extracted``, plus its quarantine rows, and the curation
+    extraction phase commits ``extracted`` (with a lineage row) to
+    ``corpus_extracted``, plus its quarantine rows, and the curation
     phase reads the committed table back — the audit/kept/line-dedup
     branches, which each consume ``extracted`` several times, then scan
     parquet instead of re-running the rasterize+detect UDF chain. The
@@ -204,8 +204,8 @@ def build_training_corpus(
             # after the commit instead of pinning executor memory through
             # the curation phase
             out = run_pipeline(todo)
-            return ([(CORPUS_TABLE, out.doc_text, None),
-                     ("quarantine", out.quarantine, None)], out.unpersist)
+            return ([(CORPUS_TABLE, out.doc_text),
+                     ("quarantine", out.quarantine)], out.unpersist)
 
         commit_pending(catalog, pages, [CORPUS_TABLE], run_stages)
         extracted = catalog.read(CORPUS_TABLE)

@@ -1,34 +1,40 @@
 """Stage checkpointing, lineage and resume (SURVEY §4.2, north rule).
 
 The north rule requires: every stage checkpoints to Iceberg with
-per-partition lineage rows (partition_id, urls_in, pages_in, bytes_out,
-wall_ms) so a killed run resumes from the last committed snapshot.
+lineage rows so a killed run resumes from the last committed snapshot.
+``Catalog.checkpoint_stage`` commits a stage table in one data write plus
+one ``<table>__lineage`` row per write (rows and on-disk bytes added).
 
 This module is format-agnostic behind one ``Catalog`` helper:
   * Iceberg when the runtime jar + catalog are configured
     (``spark.sql.catalog.<name>`` present) — ``writeTo(...).append()``;
-  * parquet-directory fallback otherwise (this sandbox: no Iceberg jar,
-    see /opt guide) — same table semantics, append = new files.
+  * parquet-directory fallback otherwise (no Iceberg jar on the
+    classpath) — same table semantics, append = new files.
 
 Resume semantics mirror the reference's skip-existing incremental mode
 (benchmarks/cli.py:318-323, SURVEY F8/U6), which is per input document:
 ``commit_pending`` is the one exactly-once committer, shared by the batch
 job, the streaming ingest and the corpus build. It left-anti joins its
 input urls against per-table url key rows that every caller shares and
-processes only the remainder.
-Lineage rows come from a ``groupBy`` over the persisted stage frame, in
-the same pass as the data append, and go to a ``<table>__lineage`` table.
+processes only the remainder; those key rows, not the lineage, are the
+exact per-url record of each batch.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 import uuid
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+# one row per checkpoint_stage write
+LINEAGE_SCHEMA = ("run_id string, rows_out long, bytes_out long, "
+                  "wall_ms long, committed_ms long")
 
 
 def _iceberg_available(spark: SparkSession, catalog: str) -> bool:
@@ -52,13 +58,17 @@ class Catalog:
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
+    def _files(self, table: str) -> list[str]:
+        """A parquet-directory table's data files, one partition level
+        deep (the key tables are partitioned by ``table``)."""
+        root = self._path(table)
+        return (glob.glob(os.path.join(root, "*.parquet")) +
+                glob.glob(os.path.join(root, "*", "*.parquet")))
+
     def exists(self, table: str) -> bool:
         if self.iceberg:
             return self.spark.catalog.tableExists(f"{self.catalog_name}.{table}")
-        import glob
-
-        return bool(glob.glob(os.path.join(self._path(table), "*.parquet")) or
-                    glob.glob(os.path.join(self._path(table), "*", "*.parquet")))
+        return bool(self._files(table))
 
     def read(self, table: str) -> DataFrame:
         if self.iceberg:
@@ -76,55 +86,38 @@ class Catalog:
     # -- checkpointed stage write with lineage -------------------------------
 
     def checkpoint_stage(self, df: DataFrame, table: str,
-                         url_col: str = "url",
-                         page_col: str | None = "page_no") -> None:
-        """Append ``df`` to ``table`` while recording per-partition lineage
-        rows (partition_id, urls_in, pages_in, bytes_out, wall_ms) to
-        ``<table>__lineage``.
-
-        The staged DataFrame is persisted around the two appends: without
-        it, the lineage append would RECOMPUTE the whole upstream (incl.
-        mapInPandas stages) — doubling stage cost and potentially recording
-        partition counts from a different physical plan than the data
-        actually written. On a real cluster replace the persist with a
-        read-back of the just-committed snapshot. A crash between the data
-        append and the lineage append leaves data committed with lineage
-        missing for that run_id — resume correctness is unaffected (resume
-        keys off the DATA snapshot; lineage is observability)."""
-        run_id = uuid.uuid4().hex[:12]
-        cols = df.columns
-        page_expr = F.col(page_col) if page_col and page_col in cols else F.lit(1)
-        sizer = sum(
-            (F.when(F.col(c).isNotNull(), F.length(F.col(c).cast("string")))
-             .otherwise(0) for c in cols),
-            F.lit(0),
-        )
-        # lineage is aggregated relationally in the same job via
-        # spark_partition_id() — one pass, no side channels
-        staged = (
-            df.withColumn("__bytes", sizer)
-            .withColumn("__page", page_expr)
-            .withColumn("__pid", F.spark_partition_id())
-        ).persist()
-        lineage = staged.groupBy("__pid").agg(
-            F.countDistinct(url_col).alias("urls_in"),
-            F.countDistinct(url_col, "__page").alias("pages_in"),
-            F.sum("__bytes").alias("bytes_out"),
-            F.count("*").alias("rows_out"),
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.col("__pid").alias("partition_id"),
-            "urls_in", "pages_in", "bytes_out", "rows_out",
-            F.lit(int(time.time() * 1000)).alias("committed_ms"),
-        )
+                         page_col: str | None = None) -> None:
+        """Append ``df`` to ``table`` in one write, then one lineage row to
+        ``<table>__lineage``: the rows that write added (observed on it)
+        and the on-disk bytes of the files it added. A crash between the
+        two appends leaves the run's lineage missing; resume keys off the
+        data. ``page_col`` is unused; kept because perfbench passes it."""
+        obs = Observation()
+        before = set() if self.iceberg else set(self._files(table))
         t0 = time.monotonic()
-        try:
-            self.append(staged.drop("__bytes", "__page", "__pid"), table)
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            self.append(lineage.withColumn("wall_ms", F.lit(wall_ms)),
-                        f"{table}__lineage")
-        finally:
-            staged.unpersist()
+        self.append(df.observe(obs, F.count(F.lit(1)).alias("rows")), table)
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        # a pandas frame goes through Arrow: no Python worker job, and no
+        # literal compiled into generated code per commit
+        row = pd.DataFrame([(uuid.uuid4().hex[:12], obs.get["rows"],
+                             self._bytes_added(table, before), wall_ms,
+                             int(time.time() * 1000))])
+        self.append(self.spark.createDataFrame(row, LINEAGE_SCHEMA),
+                    f"{table}__lineage")
+
+    def _bytes_added(self, table: str, before: set[str]) -> int:
+        """Bytes of the files the last append to ``table`` added: the
+        files not in ``before`` (parquet), or the ``added-files-size`` of
+        the table's latest snapshot (Iceberg)."""
+        if self.iceberg:
+            return int(
+                self.spark.read.table(f"{self.catalog_name}.{table}.snapshots")
+                .orderBy(F.desc("committed_at"))
+                .select(F.coalesce(F.col("summary")["added-files-size"],
+                                   F.lit("0")))
+                .first()[0])
+        return sum(os.path.getsize(f) for f in self._files(table)
+                   if f not in before)
 
     # -- url key tables ------------------------------------------------------
 
@@ -208,7 +201,7 @@ def commit_pending(catalog: Catalog, inputs: DataFrame, tables: list[str],
     urls committed.
 
     ``run_stages(todo) -> (frames, cleanup)``: ``frames`` lists
-    ``(table, df, page_col)`` to commit, ``cleanup`` (or None) runs after
+    ``(table, df)`` pairs to commit, ``cleanup`` (or None) runs after
     the commit (cache release). A frame whose table is in ``tables`` is a
     stage table: checkpointed with lineage, and part of the gate. Any
     other frame (quarantine) is a side table: a plain append.
@@ -252,7 +245,7 @@ def commit_pending(catalog: Catalog, inputs: DataFrame, tables: list[str],
         if n_urls == 0:
             return 0
         frames, cleanup = run_stages(todo)
-        written = [t for t, _, _ in frames]
+        written = [t for t, _ in frames]
         _bootstrap_keys(catalog, written)   # side tables
         seen = set()
         if catalog.exists(INFLIGHT):
@@ -264,10 +257,10 @@ def commit_pending(catalog: Catalog, inputs: DataFrame, tables: list[str],
         # mark in-flight BEFORE the frame writes: a crash mid-commit makes
         # the re-delivered urls suspicious on the next run
         catalog.append_keys(_key_rows(todo_urls, written), INFLIGHT)
-        for t, df, page_col in frames:
+        for t, df in frames:
             fresh = catalog.pending_inputs(df, t) if t in seen else df
             if t in tables:
-                catalog.checkpoint_stage(fresh, t, page_col=page_col)
+                catalog.checkpoint_stage(fresh, t)
             else:
                 catalog.append(fresh, t)
         catalog.append_keys(_key_rows(todo_urls, written), KEYS)

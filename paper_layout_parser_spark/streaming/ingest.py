@@ -43,22 +43,22 @@ def run_incremental_extraction(
     tables: list[tuple[str, str, str | None]] | None = None,
 ):
     """Drain all available input files through the batch pipeline, one
-    micro-batch at a time, committing each batch's stage tables (with
-    lineage) and its quarantine rows through ``commit_pending``. Returns
-    after the backlog is consumed (availableNow).
+    micro-batch at a time, committing each batch's stage tables (a
+    lineage row each) and its quarantine rows through ``commit_pending``.
+    Returns after the backlog is consumed (availableNow).
 
     ``tables`` optionally lists (table, PipelineOutputs attr, page_col)
-    stages to commit per batch. Default: doc_text only. A re-delivered
-    file is a no-op: its urls are gated by the committed url keys."""
+    stages to commit per batch (page_col unused; perfbench passes it).
+    Default: doc_text only. A re-delivered file is a no-op: its urls are
+    gated by the committed url keys."""
     from ..plans.pipeline import run_pipeline
 
     stage_tables = tables or [("doc_text", "doc_text", None)]
 
     def run_stages(todo: DataFrame):
         out = run_pipeline(todo)
-        frames = [(t, getattr(out, attr), page_col)
-                  for t, attr, page_col in stage_tables]
-        return frames + [("quarantine", out.quarantine, None)], out.unpersist
+        frames = [(t, getattr(out, attr)) for t, attr, _ in stage_tables]
+        return frames + [("quarantine", out.quarantine)], out.unpersist
 
     q = (
         stream_pages(spark, pages_dir)

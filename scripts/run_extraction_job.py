@@ -5,8 +5,8 @@ Usage (via scripts/submit_example.sh):
     run_extraction_job.py <pages_table_or_path> <warehouse_root> [--full]
 
 Reads the pages table, processes only not-yet-committed urls, checkpoints
-doc_text / extracted_items / doc_stats with per-partition lineage rows and
-appends the quarantine rows.
+doc_text / extracted_items / doc_stats with one lineage row per table
+write and appends the quarantine rows.
 
 Resume contract (exactly-once per url): the commit goes through
 ``sources.catalog.commit_pending``, the committer the streaming ingest and
@@ -26,7 +26,7 @@ from paper_layout_parser_spark.operators.crop import StubCropCodec
 from paper_layout_parser_spark.plans.pipeline import run_pipeline
 from paper_layout_parser_spark.sources.catalog import Catalog, commit_pending
 
-# (table, PipelineOutputs attribute, page column for lineage accounting)
+# (table, PipelineOutputs attribute, page column: unused, perfbench unpacks it)
 STAGE_TABLES = [
     ("doc_text", "doc_text", None),
     ("extracted_items", "matched", "page_number"),
@@ -41,8 +41,8 @@ def _full_tables(out):
     from paper_layout_parser_spark.operators.stats import result_json
 
     return [
-        ("doc_results", result_json(out.enriched), None),
-        ("crops", out.crops, "page_number"),
+        ("doc_results", result_json(out.enriched)),
+        ("crops", out.crops),
     ]
 
 
@@ -57,10 +57,10 @@ def run_job(spark: SparkSession, pages: DataFrame, cat: Catalog,
     def run_stages(todo: DataFrame):
         out = run_pipeline(todo,
                            crop_codec_factory=StubCropCodec if full else None)
-        frames = [(t, getattr(out, attr), pc) for t, attr, pc in STAGE_TABLES]
+        frames = [(t, getattr(out, attr)) for t, attr, _ in STAGE_TABLES]
         if full:
             frames += _full_tables(out)
-        return frames + [("quarantine", out.quarantine, None)], out.unpersist
+        return frames + [("quarantine", out.quarantine)], out.unpersist
 
     n = commit_pending(cat, pages, tables, run_stages)
     if n == 0:

@@ -35,8 +35,7 @@ def test_exactly_once_under_processing_time_trigger(spark, tmp_path):
 
     def run_stages(todo):
         return [("rate_docs",
-                 todo.dropDuplicates(["url"]).select("url", "value"),
-                 None)], None
+                 todo.dropDuplicates(["url"]).select("url", "value"))], None
 
     q = (
         rate.writeStream
