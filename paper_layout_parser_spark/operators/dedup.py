@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geometry import round_half_up
 from ..functions.text import WS_SPLIT, shingles, words
+from .materialize import materialize
 
 DEFAULT_SHINGLE_K = 3
 
@@ -114,16 +115,16 @@ def _shingle_table(docs: DataFrame, id_col: str, text_col: str,
 
 def jaccard_pairs(docs: DataFrame, threshold: float = 0.3,
                   id_col: str = "doc_id", text_col: str = "text",
-                  k: int = DEFAULT_SHINGLE_K, reuse_shingles: bool = True,
+                  k: int = DEFAULT_SHINGLE_K,
                   checkpoint=None) -> DataFrame:
     """Exact pairwise n-gram Jaccard >= threshold (a < b).
 
     Jaccard is computed from integer intersection/union counts, so the
     double division is bit-identical across engines.
 
-    The shingle set is referenced three times (counts + both join sides);
-    ``reuse_shingles`` materializes it once — as the per-doc ARRAY
-    (r9), not the exploded table: the per-doc shingle count is then
+    The shingle set is referenced three times (counts + both join sides),
+    so it is materialized once — as the per-doc ARRAY (r9), not the
+    exploded table: the per-doc shingle count is then
     ``size(sh)`` (a projection — the former count(*) aggregation stage
     and its exchange disappear; identical values, since explode drops
     exactly the zero-shingle docs that contribute no count row and an
@@ -138,14 +139,10 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.3,
     comes out once per such row with the shingle matches of all of them
     summed — a Jaccard above 1 is possible. Dedup the ids upstream.
     """
-    sets = docs.select(
+    sets = materialize(docs.select(
         F.col(id_col).alias("doc_id"),
         shingles(words(F.col(text_col)), k).alias("sh"),
-    )
-    if reuse_shingles:
-        from .materialize import materialize
-
-        sets = materialize(sets, checkpoint, "jaccard_shingles")
+    ), checkpoint, "jaccard_shingles")
     sh = sets.select("doc_id", F.explode("sh").alias("s"))
     cnt = sets.select("doc_id", F.size("sh").alias("n"))
     a = sh.alias("a")
@@ -227,7 +224,6 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
                       k: int = DEFAULT_SHINGLE_K,
                       max_bucket: int | None = 256,
                       hash_family: str = "xxhash64",
-                      reuse_tables: bool = True,
                       checkpoint=None) -> DataFrame:
     """LSH candidate generation + exact-Jaccard verification.
 
@@ -246,15 +242,15 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
     capped candidates, and verified pairs bit-for-bit; see
     minhash_signatures). Identical plan either way.
 
-    ``reuse_tables`` (default True) materializes the signature table and
-    the verification shingle-set table once: the banded SELF-join
-    otherwise duplicates the whole signature subplan (both x and y
-    re-scan and re-hash the corpus) and the verification join scans it
-    twice more — 4 corpus scans instead of 2 tiny-table reads.
-    ``checkpoint`` picks the materialization medium (see
-    operators.materialize): None = localCheckpoint (sandbox fast path,
-    non-replicated); a sources.catalog.Catalog = committed catalog tables
-    that survive executor loss on a cluster. Identical results either way
+    The signature table and the verification shingle-set table are
+    materialized once: the banded SELF-join would otherwise duplicate the
+    whole signature subplan (both x and y re-scan and re-hash the corpus)
+    and the verification join scan it twice more — 4 corpus scans
+    instead of 2 tiny-table reads. ``checkpoint`` picks the
+    materialization medium (see operators.materialize): None =
+    localCheckpoint (sandbox fast path, non-replicated); a
+    sources.catalog.Catalog = committed catalog tables that survive
+    executor loss on a cluster. Identical results either way
     (twin-tested).
 
     Precondition: ``id_col`` values must be unique (one row per
@@ -262,25 +258,19 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
     signature, are never compared with each other (a < b), and each pair
     they are in comes out once per such row. Dedup the ids upstream.
     """
-    from .materialize import materialize
-
     rows = num_hashes // bands
     # r9: shingle the corpus ONCE — the per-doc shingle ARRAYS feed both
     # the signature aggregation (via explode) and the verification join,
     # so the former separate shingle_sets materialization (a second full
     # shingle computation and localCheckpoint/catalog write) is gone
-    shingle_sets = docs.select(
+    shingle_sets = materialize(docs.select(
         F.col(id_col).alias("doc_id"),
         shingles(words(F.col(text_col)), k).alias("sh"),
-    )
-    if reuse_tables:
-        shingle_sets = materialize(shingle_sets, checkpoint, "shingle_sets")
-    sigs = minhash_signatures(
+    ), checkpoint, "shingle_sets")
+    sigs = materialize(minhash_signatures(
         docs, num_hashes, id_col, text_col, k, hash_family=hash_family,
         shingle_table=shingle_sets.select("doc_id", F.explode("sh").alias("s")),
-    )
-    if reuse_tables:
-        sigs = materialize(sigs, checkpoint, "minhash_sigs")
+    ), checkpoint, "minhash_sigs")
 
     def band_bucket(b: int):
         cols = [F.col(f"sig_{b * rows + r}") for r in range(rows)]
@@ -594,8 +584,6 @@ def remove_duplicate_spans(docs: DataFrame, n: int = 8,
         # consumes the coverage set exactly once, so there is no shared
         # subtree left to cut (the three-consumer recompute trap the
         # cut existed for — docs/PLANS.md — no longer exists).
-        from .materialize import materialize
-
         cov = materialize(cov, checkpoint, "span_coverage")
     # r8 reassembly: fold the coverage set to ONE row per touched doc
     # (a sorted position array — rows proportional to duplicated
@@ -702,7 +690,6 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
                   id_col: str = "doc_id", text_col: str = "text",
                   max_bucket: int | None = 256,
                   hash_family: str = "xxhash64",
-                  reuse_tables: bool = True,
                   checkpoint=None) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
@@ -727,18 +714,14 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
              for j in range(16)],
         ).cast("int")
 
-    sigs = sums.select(
+    # materialized: the banded self-join would otherwise duplicate the
+    # whole signature subtree (scan + 64 conditional sums) on both sides;
+    # the table is 5 small columns per doc. checkpoint= swaps
+    # localCheckpoint for a durable catalog table on clusters (see
+    # operators.materialize / minhash_lsh_pairs)
+    sigs = materialize(sums.select(
         "doc_id", *[band_value(b).alias(f"v{b}") for b in range(4)]
-    )
-    if reuse_tables:
-        # the banded self-join otherwise duplicates the whole signature
-        # subtree (scan + 64 conditional sums) on both sides; the
-        # materialized table is 5 small columns per doc. checkpoint=
-        # swaps localCheckpoint for a durable catalog table on clusters
-        # (see operators.materialize / minhash_lsh_pairs)
-        from .materialize import materialize
-
-        sigs = materialize(sigs, checkpoint, "simhash_sigs")
+    ), checkpoint, "simhash_sigs")
     bands = sigs.select(
         "doc_id", "v0", "v1", "v2", "v3",
         F.explode(F.array(*[

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.geometry import round_half_up
+from .materialize import materialize
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -45,8 +46,8 @@ def cosine(a: Column, b: Column) -> Column:
     try_divide, not `/`: Spark 4 runs ANSI mode by default, where plain
     double division raises DIVIDE_BY_ZERO — one all-zero embedding in a
     100 TB corpus would kill the whole job (the try_parse_url argument).
-    NULL flows into each consumer's existing degenerate handling: the
-    brute-force twins sanitize it to -inf (_sanitize_cos, ranks last),
+    NULL flows into each consumer's existing degenerate handling:
+    brute_force_topk sanitizes it to -inf (_sanitize_cos, ranks last),
     ranking windows sort NULL cos last under DESC, and threshold
     filters (embed_neardup) drop it."""
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
@@ -65,17 +66,15 @@ def _cosine_hoisted(a: Column, b: Column, na: Column, nb: Column) -> Column:
 
 
 def _sanitize_cos(raw: Column) -> Column:
-    """Degenerate-cosine contract shared by BOTH brute-force twins: a
-    cosine that comes out NULL — NULL query or candidate embedding, OR
-    a ZERO-NORM vector on either side (``cosine`` divides with
-    try_divide, so 0/0 is NULL under Spark 4 ANSI, not IEEE NaN) — or
-    NaN (a NaN element riding through the fold / Arrow batch) becomes
-    -inf, so degenerate candidates rank LAST
-    deterministically (id tie-break) under the (cos DESC, id ASC)
-    window. Without this the engines disagree three ways: Spark's desc
-    window ranks NaN ABOVE every double, NULL cos sorts NULLS-LAST, and
-    a zero-substituted NULL embedding (or a norm-1.0-substituted zero
-    vector, the r7 ADVICE seam) would score 0 (mid-ranking)."""
+    """brute_force_topk's degenerate-cosine contract: a cosine that
+    comes out NULL — NULL query or candidate embedding, OR a ZERO-NORM
+    vector on either side (``cosine`` divides with try_divide, so 0/0 is
+    NULL under Spark 4 ANSI, not IEEE NaN) — or NaN (a NaN element
+    riding through the fold) becomes -inf, so degenerate candidates
+    rank LAST deterministically (id tie-break) under the (cos DESC,
+    id ASC) window. Without it Spark's desc window ranks NaN ABOVE
+    every double and NULL cos sorts NULLS-LAST, so the two degenerate
+    kinds would land at opposite ends of the ranking."""
     return F.when(raw.isNull() | F.isnan(raw),
                   F.lit(float("-inf"))).otherwise(raw)
 
@@ -93,8 +92,8 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     (excluding self), deterministic tie-break on candidate id.
     Degenerate pairs (NULL embedding on either side, NaN element,
     zero-norm vector on either side) report cos = -inf and rank last —
-    see _sanitize_cos; this is the same contract the Arrow twin
-    implements, so the twins agree on NaN/NULL/zero-norm inputs.
+    see _sanitize_cos. A NULL query embedding therefore returns k rows,
+    all at -inf, in candidate id order.
 
     ``queries`` is expected to be small relative to ``embeddings`` —
     broadcast it so the scan over the big side is shuffle-free."""
@@ -123,133 +122,6 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def brute_force_topk_arrow(embeddings: DataFrame, queries: DataFrame,
-                           k: int = 10, id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
-    """Arrow-vectorized production twin of brute_force_topk for WIDE
-    embeddings: the native path scores each (query, candidate) pair with
-    the interpreted HOF fold (Q x dim interpreter steps per candidate
-    row — the same bottleneck BENCH/ANN_CAPACITY.md measured at ~300x on
-    IVF assignment), this one does one (B x dim) @ (dim x Q) matmul per
-    Arrow batch and prunes to the batch-local top-(k+1) per query before
-    anything shuffles — the exchange carries ~partitions x (k+1) rows
-    per query instead of N. Same output contract (rank by cos DESC,
-    neighbor_id ASC, self excluded, cos rounded half-up to 6); batch-
-    local pruning is exact because it uses the same (cos DESC, id ASC)
-    order as the global window. Degenerate candidates — NULL embedding,
-    a cosine that comes out non-finite (NaN element riding through
-    Arrow), or a ZERO-NORM vector on either side (whose native
-    try_divide cosine is NULL) — score -inf and rank LAST with id
-    tie-break, the
-    SAME contract the native twin's _sanitize_cos enforces, so the
-    twins agree row-for-row on NaN/NULL/zero-norm inputs (twin-compared
-    in tests/test_round6_hardening.py and test_round8_hardening.py). NULL QUERY embeddings raise
-    ValueError up front — the native path returns all-(-inf)-cos rows
-    for them, a degenerate answer better surfaced than silently
-    returned (filter them, or use brute_force_topk). Queries are collected
-    driver-side — the same "small relative to embeddings" contract the
-    native path's broadcast already imposes, made explicit.
-    Seam vs native: ranking runs on the UNROUNDED cosine in both twins,
-    so a last-ulp difference between numpy and JVM fold summation can
-    permute rank order between candidates whose scores tie to the bit
-    under one engine — the 6-decimal rounding applies to the REPORTED
-    cos only, not the ordering (parity pytested on real data; exact
-    rank parity is not guaranteed on sub-ulp score ties)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    qrows = queries.select(id_col, vec_col).collect()
-    null_q = [r[0] for r in qrows if r[1] is None]
-    if null_q:
-        raise ValueError(
-            f"brute_force_topk_arrow: {len(null_q)} query row(s) have a "
-            f"NULL {vec_col!r} (e.g. {id_col}={null_q[0]!r}) — the native "
-            "path would return all-NULL-cos rows for them, which the "
-            "matmul path cannot reproduce; filter NULL-embedding queries "
-            "or use brute_force_topk"
-        )
-    out_schema = StructType([
-        StructField("query_id", queries.schema[id_col].dataType),
-        StructField("neighbor_id", embeddings.schema[id_col].dataType),
-        StructField("cos", DoubleType()),
-    ])
-    spark = embeddings.sparkSession
-    if not qrows:
-        scored = spark.createDataFrame([], out_schema)
-    else:
-        qids = [r[0] for r in qrows]
-        Q = np.array([[float(v) for v in r[1]] for r in qrows],
-                     dtype=np.float64)
-        qn = np.linalg.norm(Q, axis=1)
-        zero_q = qn == 0.0
-        qn[zero_q] = 1.0
-        bc = spark.sparkContext.broadcast((qids, (Q / qn[:, None]).T,
-                                           zero_q))
-        dim = Q.shape[1]
-        kk = k + 1   # +1 so self-exclusion cannot eat a real neighbor
-
-        def score(batches):
-            q_ids, Qt, zero_q = bc.value
-            zero = np.zeros(dim)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf[id_col].to_numpy()
-                raw = pdf[vec_col].to_numpy()
-                null_mask = np.fromiter((x is None for x in raw),
-                                        dtype=bool, count=len(raw))
-                if null_mask.any():
-                    raw = np.array([zero if x is None else x for x in raw],
-                                   dtype=object)
-                m = np.stack(raw).astype(np.float64, copy=False)
-                vn = np.linalg.norm(m, axis=1)
-                zero_cand = vn == 0.0
-                vn[zero_cand] = 1.0
-                scores = (m / vn[:, None]) @ Qt          # B x Q
-                # degenerate contract (_sanitize_cos): NaN scores,
-                # NULL-embedding candidates, AND zero-norm vectors on
-                # either side become -inf so they sort last everywhere
-                # — locally, and in the global window where Spark
-                # would rank NaN ABOVE all doubles under desc. Without
-                # the masks a zero-substituted NULL embedding or a
-                # norm-1.0-substituted zero vector would score 0
-                # (mid-ranking), while the native twin's try_divide
-                # 0/0 cosine is NULL -> -inf — the twins would diverge
-                # row-for-row on exactly those rows (r7 ADVICE)
-                scores[~np.isfinite(scores)] = -np.inf
-                if null_mask.any():
-                    scores[null_mask, :] = -np.inf
-                if zero_cand.any():
-                    scores[zero_cand, :] = -np.inf
-                if zero_q.any():
-                    scores[:, zero_q] = -np.inf
-                take = min(kk, len(ids))
-                out_q, out_n, out_c = [], [], []
-                for j, qid in enumerate(q_ids):
-                    # batch-local top-(k+1) in the GLOBAL order
-                    # (cos DESC, id ASC) — lexsort keys: last is primary
-                    top = np.lexsort((ids, -scores[:, j]))[:take]
-                    out_q.extend([qid] * len(top))
-                    out_n.extend(ids[top])
-                    out_c.extend(scores[top, j])
-                yield pd.DataFrame(
-                    {"query_id": out_q, "neighbor_id": out_n,
-                     "cos": out_c})
-
-        scored = embeddings.select(id_col, vec_col).mapInPandas(
-            score, out_schema)
-    scored = scored.where(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                               F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                _report_cos(F.col("cos")).alias("cos"))
-    )
-
-
 def srp_signatures(embeddings: DataFrame, num_planes: int = 16,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    dim: int = 64, seed: int = 7) -> DataFrame:
@@ -257,29 +129,38 @@ def srp_signatures(embeddings: DataFrame, num_planes: int = 16,
 
     Hyperplane coefficients are a deterministic +/-1 pattern derived from
     xxhash64-free integer mixing (computed driver-side once, shipped as
-    literals — no RNG at runtime, reproducible across runs/engines)."""
+    literals — no RNG at runtime, reproducible across runs/engines).
+
+    An embedding whose length is not ``dim`` fails the query: zip_with
+    pads the shorter array with NULLs, so every plane's dot would come
+    out NULL and every such vector would silently get signature 0."""
     import numpy as np
 
     rng = np.random.RandomState(seed)
     planes = rng.choice([-1.0, 1.0], size=(num_planes, dim))
+    vec = F.col(vec_col)
+    checked = embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        F.when(F.array_size(vec) != dim, F.raise_error(F.format_string(
+            f"srp_signatures: {vec_col} has %d elements, expected dim={dim}",
+            F.array_size(vec)))).otherwise(vec).alias("embedding"),
+    )
     sig = F.lit(0).cast("long")
     for p in range(num_planes):
         coeffs = F.array(*[F.lit(float(v)) for v in planes[p]])
-        dot = _dot(F.col(vec_col), coeffs)
+        dot = _dot(F.col("embedding"), coeffs)
         sig = sig.bitwiseOR(
             F.when(dot >= 0, F.shiftleft(F.lit(1).cast("long"), p))
             .otherwise(F.lit(0).cast("long"))
         )
-    return embeddings.select(F.col(id_col).alias("vec_id"),
-                             F.col(vec_col).alias("embedding"),
-                             sig.alias("srp_sig"))
+    return checked.select("vec_id", "embedding", sig.alias("srp_sig"))
 
 
 def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
              num_planes: int = 24, bands: int = 8,
              id_col: str = "vec_id", vec_col: str = "embedding",
              dim: int = 64, max_bucket: int | None = 4096,
-             reuse_tables: bool = True, checkpoint=None) -> DataFrame:
+             checkpoint=None) -> DataFrame:
     """Approximate top-k: SRP band-bucket candidate join + exact cosine
     re-rank. Recall < 1 by construction; the scale path when Q x N is too
     large to brute-force. Defaults (24 planes / 8 bands of 3 bits) measure
@@ -288,20 +169,20 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
 
     ``max_bucket`` caps the candidate side per (band, bucket) — a hot
     bucket (mirrored embeddings, zero vectors) otherwise multiplies every
-    query hitting it (see dedup.cap_buckets)."""
+    query hitting it (see dedup.cap_buckets).
+
+    Every embedding must have ``dim`` elements (see srp_signatures)."""
     from .dedup import cap_buckets
 
     rows = num_planes // bands
     mask = (1 << rows) - 1
-    sigs = srp_signatures(embeddings, num_planes, id_col, vec_col, dim)
-    if reuse_tables:
-        # both the query side and the candidate side derive from sigs —
-        # without materialization each re-computes every plane dot product
-        # over a fresh corpus scan (see dedup.minhash_lsh_pairs);
-        # checkpoint= swaps localCheckpoint for a durable catalog table
-        from .materialize import materialize
-
-        sigs = materialize(sigs, checkpoint, "srp_sigs")
+    # both the query side and the candidate side derive from sigs —
+    # materialized, so neither re-computes every plane dot product over a
+    # fresh corpus scan (see dedup.minhash_lsh_pairs); checkpoint= swaps
+    # localCheckpoint for a durable catalog table
+    sigs = materialize(
+        srp_signatures(embeddings, num_planes, id_col, vec_col, dim),
+        checkpoint, "srp_sigs")
     # per-vector norm computed once per signature row (pre-explode), not
     # once per candidate pair inside the re-rank — see _cosine_hoisted
     sigs = sigs.withColumn("vnorm", _norm(F.col("embedding")))
@@ -410,97 +291,12 @@ def assign_clusters(df: DataFrame, centroids: list[list[float]],
     return df2.withColumn(out_col, (-best["negc"]).cast("int")).drop("__ctab")
 
 
-def _resolve_assigner(assign_impl: str):
-    """One home for the assign_impl contract: validates the knob and
-    resolves the implementation, so call sites cannot drift (an unknown
-    string must raise here, never silently fall through to one path)."""
-    impls = {"native": assign_clusters, "arrow": assign_clusters_arrow}
-    if assign_impl not in impls:
-        raise ValueError(f"unknown assign_impl {assign_impl!r}; "
-                         f"expected one of {sorted(impls)}")
-    return impls[assign_impl]
-
-
-def _arrow_assign(df: DataFrame, centroids: list[list[float]],
-                  vec_col: str, out_col: str):
-    """Internal: the matmul assignment plus its broadcast handle, so
-    callers with a bounded consumption window (the training loop) can
-    destroy the broadcast after the result is consumed instead of
-    leaking one dim x C array per Lloyd iteration."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0.0] = 1.0
-    # pre-normalized dim x C, shipped once per executor via broadcast
-    bc = df.sparkSession.sparkContext.broadcast((C / cn[:, None]).T)
-    dim = C.shape[1]
-
-    # no pd.Series type hints: the module's `from __future__ import
-    # annotations` stringifies them and pyspark's hint parser rejects
-    # unresolvable strings — the returnType + default SCALAR kind carry
-    # the same information
-    @pandas_udf("int")
-    def _assign(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        raw = v.to_numpy()
-        # NULL embeddings: the native twin scores them NULL against
-        # every centroid and array_max tie-breaks to cid 0 — replace
-        # with a zero vector (all scores 0 -> argmax 0), instead of
-        # letting np.stack raise on the ragged object array
-        if any(x is None for x in raw):
-            zero = np.zeros(dim)
-            raw = np.array([zero if x is None else x for x in raw],
-                           dtype=object)
-        m = np.stack(raw).astype(np.float64, copy=False)
-        vn = np.linalg.norm(m, axis=1)
-        vn[vn == 0.0] = 1.0
-        scores = (m / vn[:, None]) @ bc.value
-        return pd.Series(np.argmax(scores, axis=1).astype(np.int32))
-
-    return df.withColumn(out_col, _assign(F.col(vec_col))), bc
-
-
-def assign_clusters_arrow(df: DataFrame, centroids: list[list[float]],
-                          vec_col: str = "embedding",
-                          out_col: str = "cluster") -> DataFrame:
-    """Arrow-vectorized production twin of assign_clusters for WIDE
-    shapes: one numpy matmul per Arrow batch ((B x dim) @ (dim x C))
-    replaces the interpreted per-element HOF fold, whose cost is C x dim
-    interpreter steps per row — at dim=768 / C=1024 that is ~0.8M steps
-    per row and the matmul path is orders of magnitude faster
-    (measured: BENCH/ANN_CAPACITY.md). Same argmax-cosine contract,
-    ties -> lowest centroid id (np.argmax returns the first maximum);
-    NULL and all-zero embeddings both resolve to cid 0, matching the
-    native twin.
-
-    Seam vs the native path: numpy's blocked summation can round the
-    last ulp of a cosine differently than the fold's strict
-    left-to-right order, so two centroids whose scores differ below
-    double rounding could argmax differently — a tie-class divergence,
-    same category as the engine seams on the md5 hash families. The
-    graded/oracle path stays assign_clusters (native); parity is
-    asserted exactly on separated data in pytest.
-
-    Resource note: each call creates one SparkContext broadcast (the
-    pre-normalized dim x C matrix, ~C*dim*8 bytes) that lives until the
-    session ends — fine for a handful of calls; the training loop uses
-    the internal handle-returning variant and destroys per-iteration
-    broadcasts after the means collect."""
-    return _arrow_assign(df, centroids, vec_col, out_col)[0]
-
-
 def train_ivf_centroids(embeddings: DataFrame, num_centroids: int = 16,
                         max_iter: int = 5, id_col: str = "vec_id",
                         vec_col: str = "embedding",
-                        dim: int = 64,
                         sample_fraction: float = 1.0,
                         sample_salt: str = "plp-ivf",
-                        init_hash: str = "xxhash64",
-                        assign_impl: str = "native") -> list[list[float]]:
+                        init_hash: str = "xxhash64") -> list[list[float]]:
     """Deterministic spherical k-means coarse quantizer (the IVF index's
     centroid table). Classic Spark k-means shape: centroids live on the
     DRIVER (C x dim doubles — tiny) and ship via a one-row broadcast table
@@ -524,13 +320,8 @@ def train_ivf_centroids(embeddings: DataFrame, num_centroids: int = 16,
     executors; centroid quality needs only a representative sample, and
     the ASSIGNMENT plan (the part that must see every row) is unchanged.
 
-    ``assign_impl='arrow'`` swaps the per-iteration assignment for the
-    numpy-matmul path (assign_clusters_arrow) — the production choice at
-    wide dim x C, where the interpreted HOF fold dominates training wall
-    (BENCH/ANN_CAPACITY.md). Bit-reproducibility of training then rests
-    on the arrow path's tie seam (see its docstring); the oracle-replayed
-    md5 family keeps ``'native'``."""
-    _resolve_assigner(assign_impl)   # validate the knob before any scan
+    The vector width comes from the first init vector; every embedding
+    must have that many elements."""
     train = embeddings
     if sample_fraction < 1.0:
         from .curation import hex_bound, salted_h8
@@ -558,17 +349,10 @@ def train_ivf_centroids(embeddings: DataFrame, num_centroids: int = 16,
             "an empty centroid table would silently return zero neighbors "
             "for every query"
         )
+    dim = len(centroids[0])
     S = IVF_MEAN_SCALE
     for _ in range(max_iter):
-        bc = None
-        if assign_impl == "arrow":
-            # handle-returning variant: the means collect below is the
-            # last consumer of this iteration's assignment, so the
-            # centroid broadcast is destroyed right after instead of
-            # accumulating one dim x C array per Lloyd iteration
-            assigned, bc = _arrow_assign(train, centroids, vec_col, "__c")
-        else:
-            assigned = assign_clusters(train, centroids, vec_col, "__c")
+        assigned = assign_clusters(train, centroids, vec_col, "__c")
         means = assigned.groupBy("__c").agg(
             F.count(F.lit(1)).alias("n"),
             *[F.sum(
@@ -576,8 +360,6 @@ def train_ivf_centroids(embeddings: DataFrame, num_centroids: int = 16,
                 .cast("long")
             ).alias(f"s{i}") for i in range(dim)]
         ).collect()
-        if bc is not None:
-            bc.destroy()
         new = list(centroids)
         for r in means:
             n = float(r["n"])
@@ -616,9 +398,8 @@ def assign_cluster(vec: Column, centroids: list[list[float]]) -> Column:
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
              num_centroids: int = 16, nprobe: int = 4, max_iter: int = 5,
              id_col: str = "vec_id", vec_col: str = "embedding",
-             dim: int = 64, sample_fraction: float = 1.0,
+             sample_fraction: float = 1.0,
              init_hash: str = "xxhash64",
-             assign_impl: str = "native",
              centroids: list | None = None,
              assigned: DataFrame | None = None) -> DataFrame:
     """IVF approximate top-k: coarse-quantize the corpus into
@@ -633,28 +414,21 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     (see train_ivf_centroids); assignment still covers every row.
     ``init_hash='md5'`` makes the whole surface (training included)
     reproducible by the DuckDB oracle — see train_ivf_centroids.
-    ``assign_impl='arrow'`` routes BOTH the training iterations and the
-    corpus assignment through the numpy-matmul path — the production
-    choice at wide dim x C (BENCH/ANN_CAPACITY.md measures the
-    interpreted fold at ~8 ms/vector at dim=768/C=1024 vs milliseconds
-    per thousand on the matmul); the query-side probe scoring stays
-    native (queries x C is small).
     ``centroids=`` (a pre-trained list of centroid vectors, e.g. from
     train_ivf_centroids) skips training — the production shape, where
     one trained index serves many query batches; ``assigned=`` (the
     embeddings frame with a ``cluster`` column, e.g. a persisted
-    assign_clusters[_arrow] output) additionally skips corpus
-    assignment, so nprobe varies per call against one materialized
-    inverted index (BENCH/ANN_CAPACITY.md's query-leg probe)."""
+    assign_clusters output) additionally skips corpus assignment, so
+    nprobe varies per call against one materialized inverted index
+    (BENCH/ANN_CAPACITY.md's query-leg probe)."""
     if assigned is not None and centroids is None:
         raise ValueError("assigned= requires centroids= (probe "
                          "selection scores queries against the same "
                          "centroid table the index was built with)")
     if centroids is None:
         centroids = train_ivf_centroids(
-            embeddings, num_centroids, max_iter, id_col, vec_col, dim,
+            embeddings, num_centroids, max_iter, id_col, vec_col,
             sample_fraction=sample_fraction, init_hash=init_hash,
-            assign_impl=assign_impl,
         )
     if assigned is not None:
         assigned = assigned.select(
@@ -662,7 +436,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
             F.col(vec_col).alias("cv"), F.col("cluster"),
         )
     else:
-        assigned = _resolve_assigner(assign_impl)(
+        assigned = assign_clusters(
             embeddings.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).alias("cv")
@@ -708,24 +482,23 @@ def cosine_neardup_lsh(embeddings: DataFrame, threshold: float = 0.4,
                        num_planes: int = 24, bands: int = 8,
                        id_col: str = "vec_id", vec_col: str = "embedding",
                        dim: int = 64, max_bucket: int | None = 256,
-                       reuse_tables: bool = True, checkpoint=None) -> DataFrame:
+                       checkpoint=None) -> DataFrame:
     """Embedding near-dup pairs at scale: SRP band-bucket candidates
     (O(N x bands) shuffle, never O(N^2)) verified with exact cosine.
     Precision 1.0 vs cosine_neardup_pairs; recall < 1 by construction.
     ``max_bucket`` bounds the in-bucket join against viral duplicates
-    (see dedup.cap_buckets)."""
+    (see dedup.cap_buckets). Every embedding must have ``dim`` elements
+    (see srp_signatures)."""
     from .dedup import cap_buckets
 
     rows = num_planes // bands
     mask = (1 << rows) - 1
-    sigs = srp_signatures(embeddings, num_planes, id_col, vec_col, dim)
-    if reuse_tables:
-        # the banded self-join otherwise re-computes every plane dot
-        # product on both sides (see dedup.minhash_lsh_pairs);
-        # checkpoint= swaps localCheckpoint for a durable catalog table
-        from .materialize import materialize
-
-        sigs = materialize(sigs, checkpoint, "srp_neardup_sigs")
+    # materialized: the banded self-join would otherwise re-compute every
+    # plane dot product on both sides (see dedup.minhash_lsh_pairs);
+    # checkpoint= swaps localCheckpoint for a durable catalog table
+    sigs = materialize(
+        srp_signatures(embeddings, num_planes, id_col, vec_col, dim),
+        checkpoint, "srp_neardup_sigs")
     # per-vector norm once per signature row (pre-explode), not per
     # verified candidate pair — see _cosine_hoisted
     banded = sigs.withColumn("vnorm", _norm(F.col("embedding"))).select(

@@ -36,29 +36,21 @@ def class_stats(det: DataFrame, per_url: bool = False) -> DataFrame:
     )
 
 
-def doc_stats(det: DataFrame, total_pages: DataFrame | None = None) -> DataFrame:
+def doc_stats(det: DataFrame, total_pages: DataFrame) -> DataFrame:
     """A4: per-document totals. ``average_detections_per_page`` divides by
-    the page count (result_processor.py:97-99); pages with zero detections
-    never appear in ``det``, so callers that need exact parity with the
-    reference (which counts all rasterized pages) pass ``total_pages``
-    (url, total_pages) from the probe. Falls back to countDistinct(page_no).
+    the page count (result_processor.py:97-99). Pages with zero detections
+    never appear in ``det``, so the count comes from ``total_pages``
+    (url, total_pages): the reference counts all rasterized pages.
     """
-    agg = det.groupBy("url").agg(
+    return det.groupBy("url").agg(
         F.count("*").alias("total_detections"),
-        F.countDistinct("page_no").alias("pages_seen"),
-    )
-    if total_pages is not None:
-        agg = agg.join(total_pages, "url")
-        pages_col = F.col("total_pages")
-    else:
-        agg = agg.withColumn("total_pages", F.col("pages_seen"))
-        pages_col = F.col("total_pages")
-    return agg.select(
+    ).join(total_pages, "url").select(
         "url",
         "total_pages",
         "total_detections",
-        F.when(pages_col > 0,
-               round_half_up(F.col("total_detections") / pages_col, 2))
+        F.when(F.col("total_pages") > 0,
+               round_half_up(F.col("total_detections")
+                             / F.col("total_pages"), 2))
         .otherwise(F.lit(0.0))
         .alias("average_detections_per_page"),
     )

@@ -247,7 +247,6 @@ def time_rollup(
     ts_col: str = "ts",
     keys: list[str] | None = None,
     sum_col: str | None = None,
-    persist_levels: bool = True,
     level_handles: list | None = None,
     salt: int | None = None,
 ) -> DataFrame:
@@ -266,16 +265,16 @@ def time_rollup(
     is not associative and is deliberately not offered here (pre-scale
     doubles to integers if needed).
 
-    ``persist_levels`` (default True) caches each rollup level before the
-    next re-aggregates it — WITHOUT it, Spark's union duplicates the base
-    subplan per granularity and the raw source is scanned once per level
-    (caught by the single-scan plan test). The cached levels are rollup-
-    sized (tiny vs the source). Release them after your action: pass a
-    list as ``level_handles`` and the persisted frames are appended to it
-    (robust), or read ``.rollup_levels`` off the returned DataFrame
-    BEFORE transforming it further (the attribute does not survive
-    ``.filter``/``.select`` — those return new objects). Cached frames
-    are held by the cache manager, not GC. On a cluster,
+    With more than one granularity, each rollup level but the coarsest is
+    cached before the next re-aggregates it — without the cache, Spark's
+    union duplicates the base subplan per granularity and the raw source
+    is scanned once per level (caught by the single-scan plan test). The
+    cached levels are rollup-sized (tiny vs the source). Release them
+    after your action: pass a list as ``level_handles`` and the persisted
+    frames are appended to it (robust), or read ``.rollup_levels`` off
+    the returned DataFrame BEFORE transforming it further (the attribute
+    does not survive ``.filter``/``.select`` — those return new objects).
+    Cached frames are held by the cache manager, not GC. On a cluster,
     checkpoint the levels to the catalog instead, which is exactly a
     TimescaleDB continuous aggregate.
 
@@ -315,7 +314,7 @@ def time_rollup(
     else:
         base = bucketed.groupBy("__b", *keys).agg(*aggs)
     persisted = []
-    if persist_levels and len(gs) > 1:
+    if len(gs) > 1:
         base = base.persist()
         persisted.append(base)
     levels = [base.withColumn("granularity", F.lit(gs[0]).cast("long"))]
@@ -328,7 +327,7 @@ def time_rollup(
             prev.withColumn("__b", F.floor(F.col("__b") / g) * g)
             .groupBy("__b", *keys).agg(*re_aggs)
         )
-        if persist_levels and i < len(gs) - 2:
+        if i < len(gs) - 2:
             prev = prev.persist()
             persisted.append(prev)
         levels.append(prev.withColumn("granularity", F.lit(g).cast("long")))

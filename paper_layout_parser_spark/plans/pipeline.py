@@ -43,7 +43,6 @@ from ..operators.stats import doc_stats
 
 @dataclass
 class PipelineOutputs:
-    detections: DataFrame     # normalized detections
     enriched: DataFrame       # + reading_order_rank, clipped text
     matched: DataFrame        # extracted items with captions
     doc_text: DataFrame       # url, doc_text (byte-identity surface)
@@ -91,7 +90,6 @@ def run_pipeline(
     total_pages = fused.where(F.col("stage") == "page").groupBy("url").agg(
         F.count("*").cast("int").alias("total_pages")
     )
-    det = enriched.drop("reading_order_rank", "text")
     # matched and crops are two projections of one item-id window
     items = match_captions(detected)
     crops = None
@@ -99,7 +97,6 @@ def run_pipeline(
         crops = items.select("url", "item_type", "item_id", "page_number",
                              *CROP_COLUMNS)
     return PipelineOutputs(
-        detections=det,
         enriched=enriched,
         matched=items.drop(*CROP_COLUMNS),
         doc_text=assemble_doc_text(enriched),

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from paper_layout_parser_spark.corpus import build_pages
+from paper_layout_parser_spark.operators import dedup, similarity
 from paper_layout_parser_spark.operators.similarity import brute_force_topk
 from paper_layout_parser_spark.plans.pipeline import run_pipeline
 
@@ -32,7 +33,7 @@ def test_single_repartition_before_rasterize(spark, tmp_path):
     path = str(tmp_path / "pages.parquet")
     build_pages(spark, SF_SMALL).limit(50).write.parquet(path)
     out = run_pipeline(spark.read.parquet(path))
-    plan = plan_of(spark, out.detections, "simple")
+    plan = plan_of(spark, out.enriched, "simple")
     # exactly one explicit repartition (the skew spread) upstream of detect
     assert plan.count("REPARTITION_BY_NUM") == 1
     assert "xxhash64(url" in plan
@@ -130,3 +131,30 @@ def test_per_page_crop_math_is_pure_projection(spark):
     plan = to_percent_coords(matched)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:1200]
     assert "Join" not in plan, plan[:1200]
+
+
+# Parquet scans left in each LSH operator's executed plan. Each one
+# materializes the tables that its self-join and its verification read
+# more than once; re-deriving them would scan the corpus once per
+# consumer (2 to 4 scans). lsh_topk's one scan is its query side.
+@pytest.mark.parametrize("op, scans", [
+    ("minhash_lsh_pairs", 0),
+    ("jaccard_pairs", 0),
+    ("simhash_pairs", 0),
+    ("cosine_neardup_lsh", 0),
+    ("lsh_topk", 1),
+])
+def test_lsh_operators_scan_materialized_tables(spark, op, scans):
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
+        "doc_id", "text")
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    df = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(docs),
+        "jaccard_pairs": lambda: dedup.jaccard_pairs(docs),
+        "simhash_pairs": lambda: dedup.simhash_pairs(docs),
+        "cosine_neardup_lsh": lambda: similarity.cosine_neardup_lsh(emb),
+        "lsh_topk": lambda: similarity.lsh_topk(
+            emb, emb.where(F.col("vec_id") % 50 == 0)),
+    }[op]()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == scans, plan

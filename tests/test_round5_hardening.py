@@ -95,7 +95,7 @@ class TestIvfCentroidScale:
 
 
 class TestCatalogMaterializationContract:
-    """Every reuse_tables/left-join materialization documented 'on a
+    """Every LSH-table/left-join materialization documented 'on a
     cluster, checkpoint to the catalog instead' — this is that contract
     as executed code: checkpoint=Catalog must produce identical results
     to the localCheckpoint fast path, with the intermediates committed as

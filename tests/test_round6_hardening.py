@@ -91,19 +91,16 @@ def test_exactly_once_under_processing_time_trigger(spark, tmp_path):
     assert committed <= inflight
 
 
-def test_assign_clusters_arrow_parity(spark):
-    """The numpy-matmul assignment twin must agree with the native HOF
-    fold exactly on separated data (the documented seam is sub-ulp
-    cosine ties only), including the zero-vector guard."""
+def test_assign_clusters_separated_and_zero_vector(spark):
+    """Separated clusters land on their own centroid, and an all-zero
+    vector (every cosine 0) tie-breaks to centroid 0."""
     from paper_layout_parser_spark.operators.similarity import (
         assign_clusters,
-        assign_clusters_arrow,
     )
 
     dim, n_clusters = 32, 8
     # cluster c's members sit at 10*e_c plus small deterministic noise;
-    # one all-zero vector pins the norm guard (all cosines 0 -> both
-    # paths tie-break to centroid 0)
+    # one all-zero vector pins the norm guard
     base = spark.range(400).selectExpr(
         "id AS vec_id",
         f"CAST(id % {n_clusters} AS INT) AS want",
@@ -115,133 +112,35 @@ def test_assign_clusters_arrow_parity(spark):
     )
     centroids = [[10.0 if j == c else 0.0 for j in range(dim)]
                  for c in range(n_clusters)]
-    native = assign_clusters(base, centroids)
-    arrow = assign_clusters_arrow(base, centroids)
-    rows_n = {r["vec_id"]: r["cluster"] for r in native.collect()}
-    rows_a = {r["vec_id"]: r["cluster"] for r in arrow.collect()}
-    assert rows_a == rows_n
-    # ground truth: noisy members land on their own centroid; the zero
-    # vector tie-breaks to 0 on both paths
+    got = {r["vec_id"]: r["cluster"]
+           for r in assign_clusters(base, centroids).collect()}
     want = {r["vec_id"]: r["want"] for r in base.collect()}
     want[0] = 0
-    assert rows_n == want
+    assert got == want
 
 
-def test_ivf_topk_arrow_matches_native(spark):
-    """End-to-end ivf_topk with assign_impl='arrow' (arrow training +
-    arrow corpus assignment) returns the same neighbor sets as the
-    native path on separated data."""
-    from paper_layout_parser_spark.operators.similarity import ivf_topk
-
-    dim = 16
-    emb = spark.range(120).selectExpr(
-        "id AS vec_id",
-        f"""transform(sequence(0, {dim - 1}), j ->
-              CAST(5.0 * CAST(j = CAST(id % 4 AS INT) AS INT)
-                   + pmod(xxhash64(id, j), 100) / 500.0 AS DOUBLE)
-            ) AS embedding""",
-    )
-    queries = emb.where("vec_id < 8")
-    kw = dict(k=5, num_centroids=4, nprobe=2, max_iter=3, dim=dim)
-    got_n = {(r["query_id"], r["rank"], r["neighbor_id"])
-             for r in ivf_topk(emb, queries, **kw).collect()}
-    got_a = {(r["query_id"], r["rank"], r["neighbor_id"])
-             for r in ivf_topk(emb, queries, assign_impl="arrow",
-                               **kw).collect()}
-    assert got_a == got_n and got_n
-
-
-def test_assign_clusters_arrow_null_embedding(spark):
-    """A NULL embedding row must not crash the Arrow path (np.stack on
-    a ragged object array): both paths resolve NULL — like the all-zero
-    vector — to centroid 0."""
+def test_assign_clusters_null_embedding(spark):
+    """A NULL embedding, like the all-zero vector, goes to centroid 0."""
     from paper_layout_parser_spark.operators.similarity import (
         assign_clusters,
-        assign_clusters_arrow,
     )
 
     df = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0])],
         "vec_id long, embedding array<double>")
     cents = [[1.0, 0.0], [0.0, 1.0]]
-    got_a = {r["vec_id"]: r["cluster"]
-             for r in assign_clusters_arrow(df, cents).collect()}
-    got_n = {r["vec_id"]: r["cluster"]
-             for r in assign_clusters(df, cents).collect()}
-    assert got_a == got_n == {0: 0, 1: 0, 2: 1}
+    got = {r["vec_id"]: r["cluster"]
+           for r in assign_clusters(df, cents).collect()}
+    assert got == {0: 0, 1: 0, 2: 1}
 
 
-def test_unknown_assign_impl_raises(spark):
-    from paper_layout_parser_spark.operators.similarity import (
-        train_ivf_centroids,
-    )
-
-    df = spark.createDataFrame([(0, [1.0, 0.0])],
-                               "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="assign_impl"):
-        train_ivf_centroids(df, num_centroids=1, dim=2,
-                            assign_impl="numpy")
-
-
-def test_brute_force_topk_arrow_parity(spark):
-    """The matmul exact-top-k twin must return the same (query, rank,
-    neighbor, cos) rows as the native fold on the driver's embeddings
-    table — including the batch-local pruning and self-exclusion."""
+def test_brute_force_nan_and_null_candidates_rank_last(spark):
+    """The _sanitize_cos degenerate-candidate contract: a NaN-element
+    candidate and a NULL-embedding candidate both get cos -inf and rank
+    last with id tie-break. Without it Spark's desc window ranks the
+    NaN candidate FIRST (NaN sorts above every double)."""
     from paper_layout_parser_spark.operators.similarity import (
         brute_force_topk,
-        brute_force_topk_arrow,
-    )
-
-    emb = (spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-           .repartition(7))   # several batches so local pruning engages
-    queries = emb.where("vec_id < 6")
-    want = {(r["query_id"], r["rank"], r["neighbor_id"], r["cos"])
-            for r in brute_force_topk(emb, queries, k=5).collect()}
-    got = {(r["query_id"], r["rank"], r["neighbor_id"], r["cos"])
-           for r in brute_force_topk_arrow(emb, queries, k=5).collect()}
-    assert got == want and got
-
-    # empty query side: empty result, stable schema
-    empty = brute_force_topk_arrow(emb, queries.where("vec_id < 0"), k=5)
-    assert empty.count() == 0
-    assert empty.columns == ["query_id", "neighbor_id", "rank", "cos"]
-
-
-def test_brute_force_arrow_null_query_and_nan_candidate(spark):
-    from paper_layout_parser_spark.operators.similarity import (
-        brute_force_topk_arrow,
-    )
-
-    emb = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.8, 0.2]),
-         (3, [float("nan"), 1.0]), (4, [0.0, 1.0])],
-        "vec_id long, embedding array<double>")
-    # NULL query embedding: fail fast with a clear contract error
-    with pytest.raises(ValueError, match="NULL"):
-        brute_force_topk_arrow(
-            emb.unionByName(spark.createDataFrame(
-                [(9, None)], "vec_id long, embedding array<double>")),
-            spark.createDataFrame([(9, None)],
-                                  "vec_id long, embedding array<double>"),
-            k=2)
-    # NaN-element candidate must rank LAST (the raw NaN score would rank
-    # FIRST in Spark's desc window), so the finite candidates win
-    got = brute_force_topk_arrow(emb, emb.where("vec_id = 0"), k=3).collect()
-    assert [r["neighbor_id"] for r in got] == [1, 2, 4]
-
-
-def test_brute_force_twins_agree_on_nan_and_null_candidates(spark):
-    """The _sanitize_cos degenerate-candidate contract, twin-compared:
-    a NaN-element candidate AND a NULL-embedding candidate must produce
-    IDENTICAL (rank, neighbor, cos) rows from the native fold and the
-    Arrow matmul — cos -inf, ranked last with id tie-break. Pre-fix the
-    twins diverged both ways: native ranked the NaN candidate FIRST
-    (Spark desc puts NaN above every double) while arrow ranked it
-    last, and arrow scored the NULL embedding 0 (mid-ranking, above
-    negative-cosine candidates) while native gave it NULL cos."""
-    from paper_layout_parser_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_arrow,
     )
 
     emb = spark.createDataFrame(
@@ -251,14 +150,43 @@ def test_brute_force_twins_agree_on_nan_and_null_candidates(spark):
          (4, None)],                    # NULL embedding
         "vec_id long, embedding array<double>")
     q = emb.where("vec_id = 0")
-    native = [(r["rank"], r["neighbor_id"], r["cos"])
+    got = [(r["rank"], r["neighbor_id"], r["cos"])
               for r in brute_force_topk(emb, q, k=4)
               .orderBy("rank").collect()]
-    arrow = [(r["rank"], r["neighbor_id"], r["cos"])
-             for r in brute_force_topk_arrow(emb, q, k=4)
-             .orderBy("rank").collect()]
-    assert native == arrow
     # finite candidates first (even the negative-cosine one), then the
     # degenerate pair at -inf in id order
-    assert [t[1] for t in native] == [1, 2, 3, 4]
-    assert native[2][2] == float("-inf") and native[3][2] == float("-inf")
+    assert [t[1] for t in got] == [1, 2, 3, 4]
+    assert got[2][2] == float("-inf") and got[3][2] == float("-inf")
+
+
+@pytest.fixture(scope="module")
+def wide_emb(spark):
+    """The sf0.001 embeddings concatenated with themselves: 128 elements
+    where the operators' default ``dim`` is 64."""
+    return spark.read.parquet(
+        "/root/testdata/sf0.001/embeddings.parquet"
+    ).select("vec_id", F.concat("embedding", "embedding").alias("embedding"))
+
+
+def test_lsh_topk_rejects_embeddings_of_another_width(wide_emb):
+    """zip_with pads the 64-long hyperplane with NULLs, so every dot is
+    NULL and every signature would silently come out 0."""
+    from paper_layout_parser_spark.operators.similarity import lsh_topk
+
+    with pytest.raises(Exception, match="expected dim=64"):
+        lsh_topk(wide_emb, wide_emb.where("vec_id < 4"), k=3).collect()
+
+
+def test_ivf_training_keeps_the_embedding_width(wide_emb):
+    """Training takes the width from the data: 64-long means would make
+    every cosine against a 128-long vector NULL (zip_with pads) and send
+    every vector to cluster 0."""
+    from paper_layout_parser_spark.operators.similarity import (
+        assign_clusters,
+        train_ivf_centroids,
+    )
+
+    cents = train_ivf_centroids(wide_emb, num_centroids=8, max_iter=2)
+    assert {len(c) for c in cents} == {128}
+    used = assign_clusters(wide_emb, cents).select("cluster").distinct()
+    assert used.count() > 1

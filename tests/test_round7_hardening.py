@@ -23,11 +23,10 @@ class TestIvfIndexReuse:
 
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
         q = emb.where("vec_id < 4")
-        kw = dict(k=5, num_centroids=8, nprobe=3, dim=64, max_iter=2)
+        kw = dict(k=5, num_centroids=8, nprobe=3, max_iter=2)
         want = {(r["query_id"], r["rank"], r["neighbor_id"], r["cos"])
                 for r in ivf_topk(emb, q, **kw).collect()}
-        cents = train_ivf_centroids(emb, num_centroids=8, max_iter=2,
-                                    dim=64)
+        cents = train_ivf_centroids(emb, num_centroids=8, max_iter=2)
         idx = assign_clusters(emb, cents, "embedding", "cluster")
         got = {(r["query_id"], r["rank"], r["neighbor_id"], r["cos"])
                for r in ivf_topk(emb, q, centroids=cents, assigned=idx,
@@ -48,7 +47,7 @@ class TestIvfIndexReuse:
             [(0, [1.0, 0.0], 0)],
             "vec_id long, embedding array<double>, cluster int")
         with pytest.raises(ValueError, match="centroids"):
-            ivf_topk(emb, emb, assigned=emb, dim=2)
+            ivf_topk(emb, emb, assigned=emb)
 
 
 class TestSpanDedupGatePlan:
@@ -103,13 +102,12 @@ class TestIvfClusteredRecall:
                  .select("query_id", "neighbor_id").persist())
         n_truth = truth.count()
         assert n_truth == 8 * k
-        cents = train_ivf_centroids(corpus, num_centroids=16, max_iter=3,
-                                    dim=32)
+        cents = train_ivf_centroids(corpus, num_centroids=16, max_iter=3)
         idx = assign_clusters(corpus, cents, "embedding", "cluster").persist()
         recalls = {}
         for nprobe in (1, 4, 16):
             r = ivf_topk(corpus, queries, k=k, num_centroids=16,
-                         nprobe=nprobe, dim=32, centroids=cents,
+                         nprobe=nprobe, centroids=cents,
                          assigned=idx)
             hits = (r.select("query_id", "neighbor_id")
                     .join(truth, ["query_id", "neighbor_id"], "left_semi")

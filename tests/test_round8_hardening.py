@@ -1,25 +1,21 @@
-"""Round-8 hardening: the zero-norm degenerate-cosine seam (r7 ADVICE),
-the NULL-query twin contract pinned explicitly (r7 verdict item 6), and
-the catalog-materialized span-coverage twin (r7 verdict item 3)."""
+"""Round-8 hardening: brute_force_topk's zero-norm and NULL-query
+degenerate-cosine contract, and the catalog-materialized span-coverage
+twin (r7 verdict item 3)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 SF_SMALL = "/root/testdata/sf0.001"
 
 
 class TestZeroNormContract:
-    def test_twins_agree_on_zero_norm_candidate(self, spark):
-        """A zero-norm candidate's native cosine is 0/0 -> NaN ->
-        _sanitize_cos -> -inf (ranks last); pre-fix the Arrow twin
-        substituted norm 1.0 and scored it 0, which OUTRANKED the
-        finite negative-cosine candidate — the twins diverged
-        row-for-row on zero vectors (r7 ADVICE)."""
+    def test_zero_norm_candidate_ranks_last(self, spark):
+        """A zero-norm candidate's cosine is 0/0 -> NULL ->
+        _sanitize_cos -> -inf: it ranks last, even below a finite
+        negative-cosine candidate (a score of 0 would outrank that one)."""
         from paper_layout_parser_spark.operators.similarity import (
             brute_force_topk,
-            brute_force_topk_arrow,
         )
 
         emb = spark.createDataFrame(
@@ -28,27 +24,17 @@ class TestZeroNormContract:
              (3, [0.0, 0.0])],          # zero-norm candidate
             "vec_id long, embedding array<double>")
         q = emb.where("vec_id = 0")
-        native = [(r["rank"], r["neighbor_id"], r["cos"])
+        got = [(r["rank"], r["neighbor_id"], r["cos"])
                   for r in brute_force_topk(emb, q, k=3)
                   .orderBy("rank").collect()]
-        arrow = [(r["rank"], r["neighbor_id"], r["cos"])
-                 for r in brute_force_topk_arrow(emb, q, k=3)
-                 .orderBy("rank").collect()]
-        assert native == arrow
-        # the zero vector ranks LAST at -inf — below the negative-cosine
-        # candidate, which a 0 score would have outranked
-        assert [t[1] for t in native] == [1, 2, 3]
-        assert native[-1][2] == float("-inf")
+        assert [t[1] for t in got] == [1, 2, 3]
+        assert got[-1][2] == float("-inf")
 
-    def test_twins_agree_on_zero_norm_query(self, spark):
-        """A zero-norm QUERY degenerates every cosine: native gets NaN
-        -> -inf for all candidates; the Arrow twin must mask its
-        norm-substituted all-zero scores to -inf the same way, leaving
-        both twins returning the full candidate set at -inf in id
-        order."""
+    def test_zero_norm_query_scores_every_candidate_neg_inf(self, spark):
+        """A zero-norm QUERY degenerates every cosine to -inf: the full
+        candidate set comes back at -inf in id order."""
         from paper_layout_parser_spark.operators.similarity import (
             brute_force_topk,
-            brute_force_topk_arrow,
         )
 
         emb = spark.createDataFrame(
@@ -56,26 +42,17 @@ class TestZeroNormContract:
              (3, [0.3, 0.7])],
             "vec_id long, embedding array<double>")
         q = emb.where("vec_id = 0")
-        native = [(r["rank"], r["neighbor_id"], r["cos"])
+        got = [(r["rank"], r["neighbor_id"], r["cos"])
                   for r in brute_force_topk(emb, q, k=3)
                   .orderBy("rank").collect()]
-        arrow = [(r["rank"], r["neighbor_id"], r["cos"])
-                 for r in brute_force_topk_arrow(emb, q, k=3)
-                 .orderBy("rank").collect()]
-        assert native == arrow
-        assert [t[1] for t in native] == [1, 2, 3]     # id tie-break
-        assert all(t[2] == float("-inf") for t in native)
+        assert [t[1] for t in got] == [1, 2, 3]     # id tie-break
+        assert all(t[2] == float("-inf") for t in got)
 
     def test_null_query_contracts_pinned(self, spark):
-        """The one DELIBERATE twin divergence, pinned so it cannot
-        silently widen (r7 verdict item 6): a NULL-embedding QUERY gets
-        all-(-inf)-cos rows from the native path (degenerate but
-        well-formed output) while the Arrow path raises ValueError up
-        front (it cannot represent the row; better surfaced than
-        silently returned)."""
+        """A NULL-embedding QUERY gets all-(-inf)-cos rows in candidate
+        id order: degenerate but well-formed output."""
         from paper_layout_parser_spark.operators.similarity import (
             brute_force_topk,
-            brute_force_topk_arrow,
         )
 
         emb = spark.createDataFrame(
@@ -87,8 +64,6 @@ class TestZeroNormContract:
                 .orderBy("rank").collect())
         assert [r["neighbor_id"] for r in rows] == [1, 2, 3]
         assert all(r["cos"] == float("-inf") for r in rows)
-        with pytest.raises(ValueError, match="NULL"):
-            brute_force_topk_arrow(emb, null_q, k=3)
 
 
 class TestSpanDedupCatalogTwin:

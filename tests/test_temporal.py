@@ -120,9 +120,9 @@ class TestTimeRollup:
         # raw source is computed once (InMemoryRelation's printed subtree
         # repeats the original child plan — count cache READS instead)
         assert plan.count("InMemoryTableScan") >= 2, plan
-        # (the persist_levels=False duplication can't be asserted here:
-        # Spark's cache manager substitutes the already-cached base into
-        # ANY matching plan, including a later uncached build)
+        # (the duplication without the level cache can't be asserted
+        # here: Spark's cache manager substitutes the already-cached base
+        # into ANY matching plan, including a later uncached build)
 
 
 class TestIntervalJoin:
@@ -267,18 +267,21 @@ class TestTimeRollupSalt:
              for i in range(200)],
             "event_id long, event_type string, ts timestamp, k long",
         ).repartition(8)
+        levels = []
         plain = time_rollup(ev, [60, 3600], sum_col="k",
-                            persist_levels=False)
+                            level_handles=levels)
         salted = time_rollup(ev, [60, 3600], sum_col="k",
-                             persist_levels=False, salt=4)
-        # plan shape on a single level (no union duplication): exactly one
-        # extra exchange, keyed on (__b, keys, __s) before the merge
-        p1 = time_rollup(ev, [60], sum_col="k", persist_levels=False)
-        p1s = time_rollup(ev, [60], sum_col="k", persist_levels=False,
-                          salt=4)
-        key = ["granularity", "window_start", "event_type"]
+                             level_handles=levels, salt=4)
         assert sorted(map(tuple, plain.collect())) == \
             sorted(map(tuple, salted.collect()))
+        # release the cached finest levels: the cache manager would
+        # otherwise answer the single-level plans below from them
+        for lv in levels:
+            lv.unpersist()
+        # plan shape on a single level (no union duplication): exactly one
+        # extra exchange, keyed on (__b, keys, __s) before the merge
+        p1 = time_rollup(ev, [60], sum_col="k")
+        p1s = time_rollup(ev, [60], sum_col="k", salt=4)
         # the salted finest grain is two-phase: one extra shuffle keyed on
         # (__b, keys, __s) before the merge
         p_plain = p1._jdf.queryExecution().executedPlan().toString()
