@@ -31,37 +31,37 @@ def words(text: Column) -> Column:
     return F.split(F.trim(text), WS_SPLIT)
 
 
-def shingles(words_col: Column, k: int = 3) -> Column:
-    """k-word shingles (space-joined), distinct; empty array when < k words.
-    element_at is 1-based — mirrored by 1-based slices in the DuckDB twin."""
-    expr = F.transform(
-        F.sequence(F.lit(0), F.size(words_col) - k),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(words_col, i + j + 1) for j in range(k)]
-        ),
-    )
-    return F.when(F.size(words_col) >= k, F.array_distinct(expr)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def ngrams(words_col: Column, k: int = 2) -> Column:
-    """k-word n-grams WITH multiplicity (space-joined) — unlike
-    ``shingles`` (a distinct SET, for Jaccard), frequency-based signals
-    (top-n-gram repetition) need every occurrence."""
+    """k-word n-grams WITH multiplicity (space-joined); empty array when
+    < k words. Frequency signals (top-n-gram repetition) need every
+    occurrence; ``shingles`` is the distinct set.
+
+    Built from top-level array ops: the k arrays ``slice(w, j + 1,
+    size(w) - k + 1)`` zip into one struct per window, and the only lambda
+    reads its own struct. A lambda that read ``words_col`` (k
+    ``element_at`` calls per window) would re-split the text at every
+    reference, because interpreted lambdas get no common-subexpression
+    elimination: about 3n splits for an n-word document."""
+    n = F.size(words_col) - (k - 1)
+    windows = F.arrays_zip(*[
+        F.slice(words_col, j + 1, n).alias(str(j)) for j in range(k)
+    ])
     expr = F.transform(
-        F.sequence(F.lit(0), F.size(words_col) - k),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(words_col, i + j + 1) for j in range(k)]
-        ),
+        windows, lambda g: F.concat_ws(" ", *[g[str(j)] for j in range(k)])
     )
     return F.when(F.size(words_col) >= k, expr).otherwise(
         F.array().cast("array<string>")
     )
 
 
+def shingles(words_col: Column, k: int = 3) -> Column:
+    """k-word shingles: the distinct ``ngrams``, in first-occurrence
+    order (a set, for Jaccard and MinHash)."""
+    return F.array_distinct(ngrams(words_col, k))
+
+
 def ngrams_sql(words_expr: str, k: int = 2) -> str:
-    """DuckDB twin of ``ngrams`` (multiplicity preserved)."""
+    """DuckDB twin of ``ngrams`` (1-based, end-inclusive slices)."""
     return (
         f"(CASE WHEN len({words_expr}) >= {k} THEN "
         f"[array_to_string({words_expr}[i:i+{k - 1}], ' ') "
@@ -71,13 +71,8 @@ def ngrams_sql(words_expr: str, k: int = 2) -> str:
 
 
 def shingles_sql(words_expr: str, k: int = 3) -> str:
-    """DuckDB twin of ``shingles`` (1-based, end-inclusive slices)."""
-    return (
-        f"(CASE WHEN len({words_expr}) >= {k} THEN "
-        f"list_distinct([array_to_string({words_expr}[i:i+{k - 1}], ' ') "
-        f"for i in generate_series(1, len({words_expr}) - {k - 1})]) "
-        f"ELSE [] END)"
-    )
+    """DuckDB twin of ``shingles``."""
+    return f"list_distinct({ngrams_sql(words_expr, k)})"
 
 
 def token_counts(text: Column) -> dict[str, Column]:

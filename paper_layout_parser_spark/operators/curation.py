@@ -22,9 +22,9 @@ from ..functions.text import (
     predicted_lang,
     quality_features,
     score_from_features,
-    shingles,
     words,
 )
+from .dedup import decontaminate
 
 DEFAULT_MIN_QUALITY = 0.5
 
@@ -34,7 +34,6 @@ def clean_corpus(
     benchmark: DataFrame | None = None,
     lang: str = "en",
     min_quality: float = DEFAULT_MIN_QUALITY,
-    decontam_n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     dup_hash=None,
@@ -43,7 +42,9 @@ def clean_corpus(
 
     drop_reason ∈ {'lang', 'quality', 'duplicate', 'contaminated'} — the
     FIRST failing rule; NULL means the document survives the funnel.
-    ``benchmark`` enables the decontamination rule (skipped when None).
+    ``benchmark`` enables the decontamination rule (skipped when None):
+    dedup.decontaminate with 3-word shingles, the benchmark's text read
+    from the same ``text_col``.
     Apply with ``.where("keep")`` or keep the audit columns for funnel
     reporting.
 
@@ -74,28 +75,17 @@ def clean_corpus(
         (F.row_number().over(dup_w) == 1).alias("__is_rep"),
     )
     if benchmark is not None:
-        bench_sh = benchmark.select(
-            F.explode(shingles(words(F.col(text_col)), decontam_n)).alias("s")
-        ).distinct()
-        hits = (
-            flagged.select(F.col(id_col),
-                           F.explode(shingles(words(F.col("__text")),
-                                              decontam_n)).alias("s"))
-            .join(F.broadcast(bench_sh), "s", "left_semi")
-            .select(id_col).distinct()
-            .withColumn("__contaminated", F.lit(True))
-        )
-        flagged = flagged.join(hits, id_col, "left").withColumn(
-            "__contaminated", F.coalesce("__contaminated", F.lit(False))
-        )
+        flagged = decontaminate(flagged, benchmark, n=3, id_col=id_col,
+                                text_col="__text", bench_text_col=text_col,
+                                mode="flag")
     else:
-        flagged = flagged.withColumn("__contaminated", F.lit(False))
+        flagged = flagged.withColumn("contaminated", F.lit(False))
 
     reason = (
         F.when(~F.col("__lang_ok"), "lang")
         .when(~F.col("__quality_ok"), "quality")
         .when(~F.col("__is_rep"), "duplicate")
-        .when(F.col("__contaminated"), "contaminated")
+        .when(F.col("contaminated"), "contaminated")
     )
     return flagged.select(
         id_col,

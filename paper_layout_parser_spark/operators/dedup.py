@@ -105,11 +105,13 @@ def cap_buckets(banded: DataFrame, max_bucket: int | None, order_col: str,
     )
 
 
-def _shingle_table(docs: DataFrame, id_col: str, text_col: str,
-                   k: int) -> DataFrame:
+def _shingle_sets(docs: DataFrame, id_col: str, text_col: str,
+                  k: int) -> DataFrame:
+    """(doc_id, sh): each document's distinct k-word shingle array — the
+    one shingling every operator here runs (see functions.text.ngrams)."""
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(shingles(words(F.col(text_col)), k)).alias("s"),
+        shingles(words(F.col(text_col)), k).alias("sh"),
     )
 
 
@@ -139,10 +141,8 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.3,
     comes out once per such row with the shingle matches of all of them
     summed — a Jaccard above 1 is possible. Dedup the ids upstream.
     """
-    sets = materialize(docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles(words(F.col(text_col)), k).alias("sh"),
-    ), checkpoint, "jaccard_shingles")
+    sets = materialize(_shingle_sets(docs, id_col, text_col, k),
+                       checkpoint, "jaccard_shingles")
     sh = sets.select("doc_id", F.explode("sh").alias("s"))
     cnt = sets.select("doc_id", F.size("sh").alias("n"))
     a = sh.alias("a")
@@ -164,12 +164,11 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.3,
     )
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 32,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       k: int = DEFAULT_SHINGLE_K,
-                       hash_family: str = "xxhash64",
-                       shingle_table: DataFrame | None = None) -> DataFrame:
-    """doc_id + sig_0..sig_{n-1} MinHash signature columns.
+def minhash_signatures(shingle_sets: DataFrame, num_hashes: int = 32,
+                       hash_family: str = "xxhash64") -> DataFrame:
+    """doc_id + sig_0..sig_{n-1} MinHash signature columns over a
+    (doc_id, sh) frame of per-document shingle arrays — the one that
+    minhash_lsh_pairs materializes and also verifies candidates against.
 
     Hash families (``hash_family``):
       * 'xxhash64' (default) — xxhash64(seed_i, shingle), JVM-side, the
@@ -183,12 +182,6 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 32,
     The min-aggregation is map-side combinable, so the exchange carries
     one 32-column row per (task, doc), not the shingle blow-up.
 
-    ``shingle_table`` (optional) supplies a precomputed (doc_id, s)
-    exploded shingle table — minhash_lsh_pairs passes the explode of
-    its materialized per-doc shingle arrays so the corpus is shingled
-    once, not once per consumer (r9). Rows are identical to the
-    internally derived table by construction.
-
     Why explode + groupBy and NOT a per-row
     ``array_min(transform(shingles, ...))``: the HOF variant computes
     bit-identical values with no shuffle, but measured 1.4-2x SLOWER end to
@@ -198,9 +191,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 32,
     band-bucket SELF-join loses the exchange reuse that lets both sides
     read one computed copy. The aggregation's shuffle is the cheap,
     reusable cut point."""
-    sh = shingle_table
-    if sh is None:
-        sh = _shingle_table(docs, id_col, text_col, k)
+    sh = shingle_sets.select("doc_id", F.explode("sh").alias("s"))
     if hash_family == "xxhash64":
         aggs = [
             F.min(F.xxhash64(F.lit(i), F.col("s"))).alias(f"sig_{i}")
@@ -259,18 +250,12 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
     they are in comes out once per such row. Dedup the ids upstream.
     """
     rows = num_hashes // bands
-    # r9: shingle the corpus ONCE — the per-doc shingle ARRAYS feed both
-    # the signature aggregation (via explode) and the verification join,
-    # so the former separate shingle_sets materialization (a second full
-    # shingle computation and localCheckpoint/catalog write) is gone
-    shingle_sets = materialize(docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles(words(F.col(text_col)), k).alias("sh"),
-    ), checkpoint, "shingle_sets")
-    sigs = materialize(minhash_signatures(
-        docs, num_hashes, id_col, text_col, k, hash_family=hash_family,
-        shingle_table=shingle_sets.select("doc_id", F.explode("sh").alias("s")),
-    ), checkpoint, "minhash_sigs")
+    # shingle the corpus ONCE: the per-doc shingle arrays feed both the
+    # signature aggregation (via explode) and the verification join
+    shingle_sets = materialize(_shingle_sets(docs, id_col, text_col, k),
+                               checkpoint, "shingle_sets")
+    sigs = materialize(minhash_signatures(shingle_sets, num_hashes, hash_family),
+                       checkpoint, "minhash_sigs")
 
     def band_bucket(b: int):
         cols = [F.col(f"sig_{b * rows + r}") for r in range(rows)]
@@ -390,17 +375,17 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
 
     Scale shape: the benchmark side is small (eval sets), so its DISTINCT
     shingle set is broadcast; the corpus side streams through a broadcast
-    semi-join — the 100 TB training table is never shuffled. ``mode``:
+    semi-join — the 100 TB training table is never shuffled. Both sides
+    are shingled by ``_shingle_sets`` (n-word shingles, as the other
+    operators here). ``mode``:
       * 'flag' — docs + boolean ``contaminated`` column (audit surface);
       * 'drop' — contaminated docs removed (the production filter).
     """
-    bench_sh = benchmark.select(
-        F.explode(shingles(words(F.col(bench_text_col)), n)).alias("s")
-    ).distinct()
-    doc_sh = docs.select(
-        F.col(id_col),
-        F.explode(shingles(words(F.col(text_col)), n)).alias("s"),
-    )
+    # the benchmark has no id column: its text stands in, and is pruned
+    bench_sh = _shingle_sets(benchmark, bench_text_col, bench_text_col, n) \
+        .select(F.explode("sh").alias("s")).distinct()
+    doc_sh = _shingle_sets(docs, id_col, text_col, n).select(
+        F.col("doc_id").alias(id_col), F.explode("sh").alias("s"))
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "s", "left_semi")
         .select(id_col).distinct()

@@ -23,11 +23,18 @@ from .materialize import materialize
 
 
 def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
+    """Dot product; fails the query when both vectors are non-NULL and
+    their lengths differ (zip_with would pad the shorter with NULLs and
+    the NULL dot would read as a degenerate vector). A NULL vector still
+    gives a NULL dot."""
+    dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
+    return F.when(F.array_size(a) != F.array_size(b), F.raise_error(
+        F.format_string("vector lengths differ: %d vs %d",
+                        F.array_size(a), F.array_size(b)))).otherwise(dot)
 
 
 def _norm(a: Column) -> Column:

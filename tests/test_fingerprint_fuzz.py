@@ -38,26 +38,34 @@ def _random_text(rng: random.Random) -> str | None:
     return "".join(out)
 
 
-@pytest.mark.parametrize("seed", [0, 1])
-def test_fingerprints_match_duckdb_and_python(spark, seed):
+@pytest.mark.parametrize("seed, grams", [
+    pytest.param(seed, grams, id=str(seed) + suffix)
+    for grams, suffix in (("shingles", ""), ("ngrams", "-ngrams"))
+    for seed in (0, 1)
+])
+def test_fingerprints_match_duckdb_and_python(spark, seed, grams):
     rng = random.Random(seed)
     rows = [(i, _random_text(rng)) for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = tfn.shingles(tfn.words(F.col("text")), 3)
-    got = {r["doc_id"]: (r["full_md5"], r["min_sh"]) for r in df.select(
+    sh = getattr(tfn, grams)(tfn.words(F.col("text")), 3)
+    # the sorted arrays pin ngrams' multiplicity (sorted: DuckDB's
+    # list_distinct does not keep first-occurrence order)
+    got = {r["doc_id"]: (r["full_md5"], r["min_sh"], sorted(r["g"]))
+           for r in df.select(
         "doc_id",
         F.md5(F.col("text")).alias("full_md5"),
         F.array_min(F.transform(sh, lambda s: F.md5(s))).alias("min_sh"),
+        sh.alias("g"),
     ).collect()}
     con = duckdb.connect()
     con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
     # trim set pinned to ' ': DuckDB's default trim strips NBSP too
     w = f"string_split_regex(trim(text, ' '), '{tfn.WS_SPLIT}')"
-    shingle = tfn.shingles_sql(w, 3)
-    want = {r[0]: (r[1], r[2]) for r in con.sql(f"""
+    shingle = getattr(tfn, f"{grams}_sql")(w, 3)
+    want = {r[0]: (r[1], r[2], sorted(r[3])) for r in con.sql(f"""
 SELECT doc_id, md5(text),
-       list_min([md5(s) for s in {shingle}])
+       list_min([md5(s) for s in {shingle}]), {shingle}
 FROM documents""").fetchall()}
     assert got == want
     # and the UTF-8-bytes contract against Python's hashlib directly

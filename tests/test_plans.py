@@ -158,3 +158,52 @@ def test_lsh_operators_scan_materialized_tables(spark, op, scans):
     }[op]()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == scans, plan
+
+
+def _lambdas_reading_split(plan: str) -> int:
+    """How many lambdafunction(...) subtrees in the plan text call split."""
+    n, start = 0, plan.find("lambdafunction(")
+    while start != -1:
+        depth, end = 0, start
+        for end in range(start, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0 and plan[end] == ")":
+                break
+        n += "split(" in plan[start:end]
+        start = plan.find("lambdafunction(", start + 1)
+    return n
+
+
+@pytest.mark.parametrize("case", [
+    "shingles", "decontaminate", "clean_corpus", "top_ngram_char_fraction",
+    "curate_documents",
+])
+def test_kgram_lambdas_never_re_split_the_text(spark, case):
+    """Interpreted lambdas get no common-subexpression elimination: a
+    lambda that reads words(text) re-splits the document at every
+    reference. The k-gram builders zip top-level slices instead, so no
+    lambda in any of their callers' plans reads the split. The bare
+    shingle projection is what jaccard_pairs and minhash_lsh_pairs
+    materialize (their own plans show only the checkpointed rows)."""
+    from paper_layout_parser_spark.functions.text import shingles, words
+    from paper_layout_parser_spark.operators.curation import (
+        clean_corpus,
+        top_ngram_char_fraction,
+    )
+    from paper_layout_parser_spark.plans.corpus_build import curate_documents
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
+        "doc_id", "text")
+    bench = docs.where(F.col("doc_id") % 50 == 0)
+    df = {
+        "shingles": lambda: docs.select(
+            "doc_id", shingles(words(F.col("text")), 3).alias("sh")),
+        "decontaminate": lambda: dedup.decontaminate(docs, bench, n=3),
+        "clean_corpus": lambda: clean_corpus(docs, benchmark=bench),
+        "top_ngram_char_fraction": lambda: top_ngram_char_fraction(docs),
+        "curate_documents": lambda: curate_documents(
+            docs, benchmark=bench, id_col="doc_id", text_col="text")[1],
+    }[case]()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction(" in plan    # the k-gram transform is there
+    assert _lambdas_reading_split(plan) == 0, plan

@@ -151,7 +151,7 @@ class TestPortableHashFamilies:
     def test_unknown_family_raises(self, spark):
         df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
         with pytest.raises(ValueError):
-            dd.minhash_signatures(df, hash_family="fnv")
+            dd.minhash_lsh_pairs(df, hash_family="fnv")
         with pytest.raises(ValueError):
             dd.simhash64(df, hash_family="fnv")
 

@@ -190,3 +190,21 @@ def test_ivf_training_keeps_the_embedding_width(wide_emb):
     assert {len(c) for c in cents} == {128}
     used = assign_clusters(wide_emb, cents).select("cluster").distinct()
     assert used.count() > 1
+
+
+def test_dot_rejects_vectors_of_different_lengths(spark):
+    """zip_with pads the shorter vector with NULLs: a 3-long vector
+    against 2-long centroids would go to cluster 0, and as a candidate it
+    would rank last at -inf. The shared dot fails the query instead."""
+    from paper_layout_parser_spark.operators.similarity import (
+        assign_clusters,
+        brute_force_topk,
+    )
+
+    df = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [0.0, 1.0, 0.0])],
+        "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="vector lengths differ: 3 vs 2"):
+        assign_clusters(df, [[1.0, 0.0], [0.0, 1.0]]).collect()
+    with pytest.raises(Exception, match="vector lengths differ"):
+        brute_force_topk(df, df.where("vec_id = 0"), k=2).collect()
