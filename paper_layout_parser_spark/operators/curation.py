@@ -123,12 +123,17 @@ def top_ngram_char_fraction(
     from ..functions.geometry import round_half_up
     from ..functions.text import ngrams, words
 
+    # the word array gets its own projection so the text is split once,
+    # not once per reference inside ngrams (see dedup._shingle_sets)
     grams = docs.select(
         F.col(id_col),
         F.length(F.col(text_col)).alias("__chars"),
+        words(F.col(text_col)).alias("__w"),
+    ).select(
+        id_col, "__chars",
         # ngrams, NOT shingles: the signal is frequency, so multiplicity
         # must survive (shingles are a distinct set for Jaccard)
-        F.explode(ngrams(words(F.col(text_col)), n)).alias("gram"),
+        F.explode(ngrams(F.col("__w"), n)).alias("gram"),
     )
     counts = grams.groupBy(id_col, "__chars", "gram").agg(
         F.count("*").alias("cnt")

@@ -108,11 +108,15 @@ def cap_buckets(banded: DataFrame, max_bucket: int | None, order_col: str,
 def _shingle_sets(docs: DataFrame, id_col: str, text_col: str,
                   k: int) -> DataFrame:
     """(doc_id, sh): each document's distinct k-word shingle array — the
-    one shingling every operator here runs (see functions.text.ngrams)."""
+    one shingling every operator here runs (see functions.text.ngrams).
+
+    The word array is bound in its own projection first: ``shingles``
+    references it 2k + 1 times, and the optimizer keeps a non-cheap
+    alias that is referenced more than once in its own Project instead
+    of inlining it, so each document is split once, not 2k + 1 times."""
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles(words(F.col(text_col)), k).alias("sh"),
-    )
+        F.col(id_col).alias("doc_id"), words(F.col(text_col)).alias("__w"),
+    ).select("doc_id", shingles(F.col("__w"), k).alias("sh"))
 
 
 def jaccard_pairs(docs: DataFrame, threshold: float = 0.3,
@@ -381,11 +385,15 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
       * 'flag' — docs + boolean ``contaminated`` column (audit surface);
       * 'drop' — contaminated docs removed (the production filter).
     """
-    # the benchmark has no id column: its text stands in, and is pruned
+    # the benchmark has no id column: its text stands in, and is pruned.
+    # explode_outer, not explode: the optimizer infers size(sh) > 0 from
+    # an inner explode and pushes it below the shingle projection, which
+    # rebuilds every shingle array (2k + 1 splits) inside that filter.
+    # The NULL row an empty array yields never matches the semi-join.
     bench_sh = _shingle_sets(benchmark, bench_text_col, bench_text_col, n) \
-        .select(F.explode("sh").alias("s")).distinct()
+        .select(F.explode_outer("sh").alias("s")).distinct()
     doc_sh = _shingle_sets(docs, id_col, text_col, n).select(
-        F.col("doc_id").alias(id_col), F.explode("sh").alias("s"))
+        F.col("doc_id").alias(id_col), F.explode_outer("sh").alias("s"))
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "s", "left_semi")
         .select(id_col).distinct()

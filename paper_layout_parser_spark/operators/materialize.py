@@ -13,8 +13,9 @@ unrecoverable mid-job. Every such operator therefore takes a
   * a ``sources.catalog.Catalog`` — write the intermediate through the
     catalog (Iceberg table / parquet dir: committed files, replayable
     after any loss) and read it back. Results are identical by contract
-    (pytest runs minhash_lsh_pairs and interval_join(how='left') both
-    ways and compares); only durability and storage change.
+    (pytest runs minhash_lsh_pairs, interval_join(how='left') and
+    curate_documents both ways and compares); only durability and
+    storage change.
 
 Catalog-materialized stage tables are named ``__mat_<name>_<uuid>`` —
 unique per call so concurrent jobs never collide. They are scratch space:

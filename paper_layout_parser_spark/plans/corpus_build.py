@@ -8,11 +8,15 @@
     -> corpus-level boilerplate-line removal (operators.dedup.dedup_lines)
     -> deterministic train/val/test assignment (curation.assign_split)
 
-Each stage is the already-oracle-checked operator; this module is pure
-wiring (one relational plan per output, no new UDFs). The keyed id is the
-page URL throughout — every operator takes id_col/text_col, so the same
-composition runs over any (id, text) table (skip the extraction stage and
-start from documents directly via ``curate_documents``).
+Each stage is the already-oracle-checked operator (no new UDFs). The
+curation phase cuts its plan at two points (operators.materialize), so
+each shared intermediate is computed once: the funnel audit, which the
+surviving-docs semi-join, the funnel report and the caller all read, and,
+when span dedup runs, the line-deduped docs, which span dedup reads four
+times. The keyed id is the page URL throughout — every operator takes
+id_col/text_col, so the same composition runs over any (id, text) table
+(skip the extraction stage and start from documents directly via
+``curate_documents``).
 
 At scale, pass ``catalog=`` to ``build_training_corpus``: it commits
 ``extracted`` to ``corpus_extracted`` (and the quarantine rows to
@@ -38,6 +42,7 @@ from ..operators.curation import (
     deterministic_shuffle,
 )
 from ..operators.dedup import dedup_lines
+from ..operators.materialize import materialize
 
 CORPUS_TABLE = "corpus_extracted"   # the committed extraction phase
 
@@ -78,17 +83,26 @@ def curate_documents(
     miss). Applied AFTER line dedup — lines are the cheaper coarse pass
     — and before splits; ``curated`` then also carries
     ``n_tokens_removed``. Note the operator's whitespace normalization
-    (tokens rejoin single-spaced). ``checkpoint=`` (a Catalog) routes to
-    the span-dedup coverage materialization (operators.materialize);
-    the default (None) runs the coverage set fully inline — no cut at
-    all since the r8 array reassembly left it a single consumer — and
-    NOT auto-wiring build_training_corpus's catalog through remains
-    deliberate: a catalog write is EAGER, so it would run the whole
-    window-count lineage at plan-construction time (billed to whichever
-    phase constructs the plan — it would corrupt the bench's
-    extract/curate attribution) and charge callers who never consume
-    ``curated``. Deployments that need the coverage set durable against
-    executor loss call this function directly with ``checkpoint=``.
+    (tokens rejoin single-spaced).
+
+    Cuts: the funnel audit is materialized (operators.materialize), and
+    so are the line-deduped docs when ``span_ngrams`` is set (span dedup
+    reads them four times; without it they have one consumer and no
+    cut). The cuts RUN AT CALL TIME, as the host_cap probe below does:
+    adaptive execution runs each cut's shuffle stages when the cut is
+    made, even with the lazy ``localCheckpoint``, so the call itself
+    scans ``docs`` and runs the funnel's (and line dedup's) shuffles.
+    ``checkpoint=`` (a Catalog) routes three cuts through committed
+    catalog tables (``__mat_*`` scratch, operators.materialize): these
+    two and span dedup's coverage set, which the default runs inline.
+    A catalog cut writes its whole table at call time. The default
+    (None) cuts with ``localCheckpoint``: identical rows (twin-tested),
+    but its blocks are lost with an executor. build_training_corpus
+    does NOT pass its catalog through: that catalog holds the committed
+    stage tables, and every build would add three uncollected
+    ``__mat_*`` tables to it. Deployments that need the cuts durable
+    against executor loss call this function directly with
+    ``checkpoint=``.
 
     ``host_cap=N`` keeps at most N surviving documents per host
     (curation.cap_per_host — the RefinedWeb per-domain guard), applied
@@ -122,10 +136,10 @@ def curate_documents(
                 "corpus would truncate to host_cap rows total. Pass "
                 "host_col= naming a real host/domain column instead."
             )
-    audit = clean_corpus(
+    audit = materialize(clean_corpus(
         docs, benchmark=benchmark, lang=lang, min_quality=min_quality,
         id_col=id_col, text_col=text_col,
-    )
+    ), checkpoint, "curation_audit")
     kept = docs.join(audit.where(F.col("keep")), id_col, "left_semi")
     if host_cap:
         kept = cap_per_host(kept, host_cap, url_col=id_col, id_col=id_col,
@@ -137,6 +151,7 @@ def curate_documents(
     if span_ngrams:
         from ..operators.dedup import remove_duplicate_spans
 
+        deduped = materialize(deduped, checkpoint, "line_deduped")
         deduped = (
             remove_duplicate_spans(deduped, n=span_ngrams, id_col=id_col,
                                    text_col="clean_text",
@@ -187,12 +202,13 @@ def build_training_corpus(
     row, and duplicated rows would then double the corpus-wide line
     counts and make line dedup empty every document's text.
 
-    With ``catalog=`` set, curation (including the eager ≤200-row
-    host_cap probe in curate_documents) runs against the COMMITTED
-    extracted table — a parquet scan. Without it, ``extracted`` is the
-    live rasterize+detect UDF lineage and the probe re-executes a
-    bounded slice of that chain; pass ``host_col=`` (skips the probe)
-    or ``catalog=`` when that matters."""
+    With ``catalog=`` set, curation (including curate_documents' cuts
+    and its ≤200-row host_cap probe, which run at call time) runs
+    against the COMMITTED extracted table — a parquet scan. Without it,
+    ``extracted`` is the live rasterize+detect UDF lineage: the call
+    runs that chain for the funnel cut, and the probe re-executes a
+    bounded slice of it; pass ``host_col=`` (skips the probe) or
+    ``catalog=`` when that matters."""
     from .pipeline import run_pipeline
 
     if catalog is not None:

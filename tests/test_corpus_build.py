@@ -122,6 +122,78 @@ def test_host_cap_fails_fast_on_non_url_ids(spark):
     assert curated.count() == 6
 
 
+def _curation_rows():
+    """URL-keyed documents over three hosts: a boilerplate line on every
+    other page, a 13-word span pasted into every third, and one exact
+    duplicate."""
+    span = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = []
+    for host, n in (("a.example", 9), ("b.example", 5), ("c.example", 3)):
+        for i in range(n):
+            lines = [f"{host} page {i} opens with words of its own",
+                     f"the second line of page {i} on {host} stays"]
+            if i % 3 == 0:
+                lines.insert(1, f"intro {i} then {span} and more")
+            if i % 2 == 0:
+                lines.append("Share this page with your friends today")
+            rows.append((f"https://{host}/p{i}", "\n".join(lines)))
+    rows.append(("https://a.example/p0-copy", rows[0][1]))
+    return rows
+
+
+CURATE_KW = dict(lang="en", min_quality=0.0, host_cap=3, span_ngrams=6,
+                 shuffle_salt="epoch-0")
+
+
+@pytest.fixture(scope="module")
+def curation_docs(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("curation") / "docs")
+    spark.createDataFrame(_curation_rows(), "url string, doc_text string") \
+        .write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_curated_and_funnel_read_the_cuts(curation_docs):
+    """curate_documents materializes the funnel audit and the line-deduped
+    docs, so neither output re-scans the input or re-runs clean_corpus's
+    duplicate window (nor cap_per_host's window): without the cuts the
+    curated plan repeats both of them, each with its own input scan."""
+    from paper_layout_parser_spark.plans.corpus_build import curate_documents
+
+    _, curated, funnel = curate_documents(curation_docs, **CURATE_KW)
+    for df in (curated, funnel):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan, plan
+        assert "Window" not in plan, plan
+
+
+def test_curate_documents_via_catalog_matches_default(spark, curation_docs,
+                                                      tmp_path):
+    """checkpoint= a Catalog routes all three cuts (the audit, the
+    line-deduped docs and the span coverage) through committed catalog
+    tables; audit, curated and funnel rows equal the default's."""
+    from paper_layout_parser_spark.plans.corpus_build import curate_documents
+    from paper_layout_parser_spark.sources.catalog import Catalog
+
+    def rows(out):
+        audit, curated, funnel = out
+        return (sorted(audit.collect()), curated.collect(),
+                sorted(funnel.collect()))
+
+    base = rows(curate_documents(curation_docs, **CURATE_KW))
+    via = rows(curate_documents(curation_docs, **CURATE_KW,
+                                checkpoint=Catalog(spark, str(tmp_path))))
+    assert via == base
+    audit, curated, funnel = base
+    assert {r["stage"]: r["n_docs"] for r in funnel} == {
+        "kept": 17, "duplicate": 1}
+    assert len(curated) == 9                        # 3 per host
+    assert any(r["n_tokens_removed"] > 0 for r in curated)
+    mats = [p.name for p in tmp_path.iterdir() if p.name.startswith("__mat_")]
+    for name in ("curation_audit", "line_deduped", "span_coverage"):
+        assert any(name in m for m in mats), mats
+
+
 def test_checkpointed_build_matches_and_never_reextracts(spark, tmp_path):
     """catalog= makes the docstring's 'checkpoint extracted between
     phases' contract code: curated results are identical to the
@@ -145,10 +217,13 @@ def test_checkpointed_build_matches_and_never_reextracts(spark, tmp_path):
            for r in ckpt.curated.collect()]
     assert got == want and got
 
-    plan = ckpt.curated._jdf.queryExecution().executedPlan().toString()
-    for udf_node in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython",
-                     "FlatMapGroupsInPandas"):
-        assert udf_node not in plan, f"{udf_node} in curation-phase plan"
+    # curate_documents materializes its cuts, so ckpt.curated reads them
+    # either way: the frame the cuts consume is what must scan the table
+    for df in (ckpt.extracted, ckpt.curated):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for udf_node in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython",
+                         "FlatMapGroupsInPandas"):
+            assert udf_node not in plan, f"{udf_node} in curation-phase plan"
     lineage = cat.read("corpus_extracted__lineage")
     n_docs = plain.extracted.count()
     agg = lineage.agg(F.sum("rows_out").alias("rows")).collect()[0]

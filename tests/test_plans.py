@@ -184,7 +184,9 @@ def test_kgram_lambdas_never_re_split_the_text(spark, case):
     reference. The k-gram builders zip top-level slices instead, so no
     lambda in any of their callers' plans reads the split. The bare
     shingle projection is what jaccard_pairs and minhash_lsh_pairs
-    materialize (their own plans show only the checkpointed rows)."""
+    materialize (their own plans show only the checkpointed rows).
+    curate_documents' plan likewise starts at its funnel-audit cut, so
+    the clean_corpus case covers the funnel's lambdas."""
     from paper_layout_parser_spark.functions.text import shingles, words
     from paper_layout_parser_spark.operators.curation import (
         clean_corpus,
@@ -207,3 +209,28 @@ def test_kgram_lambdas_never_re_split_the_text(spark, case):
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "lambdafunction(" in plan    # the k-gram transform is there
     assert _lambdas_reading_split(plan) == 0, plan
+
+
+@pytest.mark.parametrize("case, splits", [
+    ("shingle_sets", 1), ("decontaminate", 2), ("top_ngram_char_fraction", 1),
+])
+def test_kgram_builders_split_each_text_once(spark, case, splits):
+    """The word array is bound in its own projection, so each text column
+    is split once, not once per reference inside the k-gram builder
+    (2k + 1) or again inside a filter the optimizer infers from an
+    explode. decontaminate shingles two texts: the corpus's and the
+    benchmark's."""
+    from paper_layout_parser_spark.operators.curation import (
+        top_ngram_char_fraction,
+    )
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
+        "doc_id", "text")
+    bench = docs.where(F.col("doc_id") % 50 == 0)
+    df = {
+        "shingle_sets": lambda: dedup._shingle_sets(docs, "doc_id", "text", 3),
+        "decontaminate": lambda: dedup.decontaminate(docs, bench, n=3),
+        "top_ngram_char_fraction": lambda: top_ngram_char_fraction(docs),
+    }[case]()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == splits, plan
